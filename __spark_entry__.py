@@ -1,21 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
-
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+"""Flagship smoke entry point: ``entry(spark)`` builds a full-config index
+over the sf0.001 ``documents`` table and returns a ranked BM25 top-20.
 
 Implementation lives in ``information_retrieval_system_spark/``; the
-query/oracle registry is ``entry_queries.py``.
+Spark-vs-DuckDB operator checks live in ``tests/test_duckdb_oracle.py``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-from information_retrieval_system_spark import entry_queries as EQ
 from information_retrieval_system_spark.config import EngineConfig
 from information_retrieval_system_spark.index.builder import build_index
 from information_retrieval_system_spark.query import scoring
@@ -30,11 +23,3 @@ def entry(spark: SparkSession) -> DataFrame:
     index = build_index(docs, cfg, doc_col="doc_id", text_col="text")
     qt = analyze_query_terms(spark, "spark join merge", cfg)
     return scoring.bm25_search(index, qt, k=20, cfg=cfg)
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(EQ.QUERIES)
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(EQ.ORACLES)

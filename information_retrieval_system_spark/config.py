@@ -19,11 +19,14 @@ them; every deviation is documented:
 - final ranking tie-break is deterministic ``(score DESC, doc_id ASC)``;
   the reference's ties follow HashMap iteration order
   (OkapiBM25_FR.java:407-416) and are nondeterministic.
+
+Session sizing (parallelism, shuffle partitions, heap) is not engine
+configuration; it lives in ``session.get_spark``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -44,24 +47,10 @@ class EngineConfig:
     pagerank_max_iters: int = 200
     pagerank_checkpoint_every: int = 5
 
-    # --- index layout / scale knobs ----------------------------------
-    #: posting-block size for delta+VByte compressed blocks (docs/block)
-    block_size: int = 128
-    #: number of term buckets the postings table is partitioned by; at
-    #: 10^12-file scale this is the unit of partition pruning (a query
-    #: touches only the buckets of its terms) and of resume granularity.
+    # --- index layout -------------------------------------------------
+    #: number of term buckets the written postings/blocks tables are
+    #: partitioned by: a query reads only the buckets of its terms.
     term_buckets: int = 32
-    #: salt fan-out for hot-term pre-aggregation (skew mitigation)
-    salt_buckets: int = 8
-    #: docs whose df exceeds this fraction of N are considered "hot" and
-    #: routed through the salted pre-aggregation path
-    hot_term_df_ratio: float = 0.05
-
-    # --- bench / session ----------------------------------------------
-    shuffle_partitions: int = 32
-
-    def scoring_constants(self) -> dict[str, float]:
-        return {"k1": self.k1, "b": self.b}
 
 
 DEFAULT_CONFIG = EngineConfig()

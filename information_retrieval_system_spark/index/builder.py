@@ -13,13 +13,7 @@ Scale notes (10^12 files / 1000 executors):
   (range partition -> per-partition rank -> prefix-sum offsets, see
   ``assign_doc_ints``) that never funnels the corpus through one task.
 - postings are bucketed by ``hash(term) % term_buckets``: the query path
-  prunes to the buckets of its query terms, and resume re-runs only
-  missing buckets.
-- hot terms (df > hot_term_df_ratio * N) are pre-aggregated with a salt
-  key then re-aggregated, bounding the largest reducer
-  (SURVEY.md §4 item 3).  The groupBy itself is already partial-agg'd
-  map-side by Catalyst; salting additionally caps the final-agg key width
-  for pathological terms (``the``/``license`` in code corpora).
+  prunes to the buckets of its query terms.
 """
 
 from __future__ import annotations
@@ -31,7 +25,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..analysis.analyzer import analyze_tokens, doc_length_expr, porter_stem_udf
+from ..analysis.analyzer import porter_stem_udf
 from ..config import DEFAULT_CONFIG, EngineConfig
 
 
@@ -319,34 +313,8 @@ def build_index(
                        term_dict=term_dict)
 
 
-def field_term_stats(
-    corpus: DataFrame,
-    text_col: str,
-    field_col: str,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """A2: tf/df per (field, term) — the reference's per-field statistics
-    exercise (`A1occur`, Indexer.java:200-255) generalized: ``field_col``
-    is any categorical column (language, repo, source...)."""
-    from ..analysis.analyzer import analyze_tokens
-
-    toks = analyze_tokens(
-        corpus.select(F.col(field_col).alias("field"), F.col(text_col).alias("content"))
-        .withColumn("_rid", F.monotonically_increasing_id()),
-        "content",
-        ["field", "_rid"],
-        use_stopwords=cfg.use_stopwords,
-        use_stemmer=cfg.use_stemmer,
-        stem_via_join=False,
-    )
-    return toks.groupBy("field", "term").agg(
-        F.count("*").cast("long").alias("tf"),
-        F.countDistinct("_rid").cast("long").alias("df"),
-    )
-
-
 def term_bucket_expr(term, n_buckets: int):
-    """Stable bucket id for partition pruning + resume granularity."""
+    """Stable bucket id for partition pruning."""
     return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
 
 

@@ -91,67 +91,6 @@ def derive_term_neighbors(
     )
 
 
-def rocchio_expand(
-    index,
-    query_terms: DataFrame,
-    fb_k: int = 10,
-    fb_terms: int = 5,
-    alpha: float = 1.0,
-    beta: float = 0.75,
-    cfg=None,
-) -> DataFrame:
-    """Rocchio pseudo-relevance feedback (positive-only, γ=0):
-    ``q' = α·q + β·centroid(top fb_k docs)``, keeping the top
-    ``fb_terms`` centroid terms not already in the query.
-
-    -> (term, qtf) — feed to ``vsm_search`` (qtf makes the feedback
-    weights observable in scores).  Everything stays IN-PLAN:
-
-    - initial retrieval: exact BM25 top-``fb_k`` (TakeOrderedAndProject);
-    - centroid: postings semi-joined to the feedback set, tf·idf
-      (query-side idf, log2(N/df)) averaged over the RETRIEVED count;
-    - expansion-term selection: ``orderBy(weight desc, term asc)
-      .limit(fb_terms)`` — a TakeOrdered per-partition top-k + k-row
-      driver merge, NOT a single-partition window (the candidate frame
-      is already bounded by the distinct terms of ``fb_k`` docs).
-
-    The reference has no feedback loop (its expansion is dictionary
-    lookup, Search_FR.java:281-623); this is the standard Rocchio (1971)
-    formulation over the same expansion mechanism
-    (batch.expand_query_terms-compatible weighted rows)."""
-    from ..config import DEFAULT_CONFIG
-    from .scoring import bm25_search, log2c
-
-    cfg = cfg or DEFAULT_CONFIG
-    n = index.stats["n_docs"]
-    # both LIMIT cuts order by round(·, 9): double sums accumulate in
-    # engine-specific order, and an unrounded near-tie at the boundary
-    # could select different feedback docs / expansion terms than the
-    # oracle, diverging the whole downstream result
-    top = bm25_search(index, query_terms, k=fb_k, cfg=cfg,
-                      order_round=9).select("doc_id")
-    nfb = top.agg(F.count("*").alias("_nfb"))
-    idf = log2c(F.lit(float(n)) / F.col("df").cast("double"))
-    cen = (
-        index.postings.join(top, "doc_id", "leftsemi")
-        .join(F.broadcast(index.terms.select("term", "df")), "term")
-        .groupBy("term")
-        .agg(F.sum(F.col("tf").cast("double") * idf).alias("_sw"))
-        .crossJoin(F.broadcast(nfb))
-        .select("term", (F.col("_sw") / F.col("_nfb")).alias("cw"))
-        .join(query_terms.select("term"), "term", "left_anti")
-    )
-    expd = (
-        cen.orderBy(F.desc(F.round("cw", 9)), F.asc("term"))
-        .limit(fb_terms)
-        .select("term", (F.lit(float(beta)) * F.col("cw")).alias("qtf"))
-    )
-    orig = query_terms.select(
-        "term", (F.lit(float(alpha)) * F.col("qtf")).alias("qtf")
-    )
-    return orig.unionByName(expd).groupBy("term").agg(F.sum("qtf").alias("qtf"))
-
-
 def derive_term_antonyms(
     postings: DataFrame,
     k: int = 1,

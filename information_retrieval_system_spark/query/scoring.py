@@ -80,19 +80,11 @@ def bm25_search(
     k: int = 10,
     cfg: EngineConfig = DEFAULT_CONFIG,
     candidates: DataFrame | None = None,
-    order_round: int | None = None,
 ) -> DataFrame:
-    """-> (doc_id, score double), top-k, deterministic order.
-
-    ``order_round``: order the cut by ``round(score, order_round)``
-    (score output stays unrounded).  Use when the k-boundary must be
-    engine-independent (e.g. Rocchio's feedback cut): double SUMS
-    accumulate in engine-specific order, so a near-tie at the boundary
-    can otherwise select different docs in Spark vs the oracle."""
-    key = F.col("score") if order_round is None else F.round("score", order_round)
+    """-> (doc_id, score double), top-k, deterministic order."""
     return (
         bm25_scores(index, query_terms, cfg=cfg, candidates=candidates)
-        .orderBy(F.desc(key), F.asc("doc_id"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
 
@@ -281,8 +273,7 @@ def conjunctive_search(
     REQUIRED distinct-term count (absent terms included) rides the plan
     as a 1-row broadcast, and docs keep only when matched == required —
     a doc cannot match an absent term, so any absent term empties the
-    result by arithmetic.  No per-query driver round-trip, so looping
-    callers amortize exactly like batch_conjunctive_search."""
+    result by arithmetic.  No per-query driver round-trip."""
     need = query_terms.select("term").distinct().agg(
         F.count("*").alias("_need"))
     m = _matched(index, query_terms, candidates)
@@ -295,60 +286,6 @@ def conjunctive_search(
         .orderBy(F.asc("doc_id"))
         .limit(k)
     )
-
-
-def batch_conjunctive_search(
-    index: IndexTables,
-    query_terms: DataFrame,
-    k: int = 10,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Strict-AND retrieval for a WHOLE query set (qid, term) IN-PLAN —
-    the batch form the round-3 verdict asked for: no per-query driver
-    job deciding emptiness.  A query whose term is absent from the
-    vocabulary yields nothing (strict-AND convention), expressed as a
-    comparison against the per-qid REQUIRED distinct-term count carried
-    through the plan:
-
-    - ``need``: distinct terms per qid (counts absent terms too);
-    - matches: postings ⋈ distinct query terms, then per (qid, doc)
-      count of distinct matched terms;
-    - keep docs where matched == need — a doc cannot match an absent
-      term, so queries with any absent term drop out by arithmetic.
-
-    -> (qid, doc_id, rank, score=1.0), rank by doc_id ASC, <= k per qid.
-    """
-    from pyspark.sql import Window
-
-    qt = query_terms.select("qid", "term").distinct()
-    need = qt.groupBy("qid").agg(F.count("*").alias("_need"))
-    m = index.postings.join(F.broadcast(qt), "term")
-    per_doc = (
-        m.groupBy("qid", "doc_id")
-        .agg(F.countDistinct("term").alias("_nt"))
-        .join(F.broadcast(need), "qid")
-        .filter(F.col("_nt") == F.col("_need"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("doc_id"))
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", F.col("rank").cast("long").alias("rank"),
-                F.lit(1.0).alias("score"))
-    )
-
-
-def fuse_with_pagerank(
-    ranked: DataFrame,
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """B6 fusion (fixed semantics — see module docstring).  Single-query
-    form of batch_fuse_with_pagerank — same in-plan Z, no collects."""
-    fused = batch_fuse_with_pagerank(
-        ranked.select(F.lit(0).alias("qid"), "doc_id", "score"), docs, cfg
-    )
-    return fused.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id"))
 
 
 MODELS = {

@@ -42,34 +42,47 @@ from ..index.compression import DEFAULT_BLOCK_SPAN, vbyte_decode
 # per-worker shared pruning state: {query_key: heap of best scores (size<=k)}
 _THRESH: dict[str, list[float]] = {}
 
-# per-worker decode memos keyed by the ENCODED bytes themselves: in a
-# batch, every query touching a (term, block) cell receives the same
-# VByte payload, so a head term shared by hundreds of Zipf queries
-# would otherwise decode once PER QUERY.  Values are read-only arrays
-# (kernels always derive new arrays before mutating).  Bounded.
-_DECODE_VALS: dict[bytes, "np.ndarray"] = {}
-_DECODE_DOCS: dict[bytes, "np.ndarray"] = {}
+class _DecodeMemo(dict):
+    """Per-worker decode memo keyed by the ENCODED bytes themselves: in a
+    batch, every query touching a (term, block) cell receives the same
+    VByte payload, so a head term shared by hundreds of Zipf queries
+    would otherwise decode once PER QUERY.
+
+    Bounded by the bytes of the arrays it holds (``nbytes <=
+    max_bytes``), evicting oldest-first; cached arrays are read-only, so
+    a kernel that mutated one would fail loudly instead of corrupting
+    later queries."""
+
+    def __init__(self, decode, max_bytes: int):
+        super().__init__()
+        self.decode = decode
+        self.max_bytes = max_bytes
+        self.nbytes = 0
+
+    def lookup(self, vb: bytes) -> "np.ndarray":
+        arr = self.get(vb)
+        if arr is None:
+            arr = self.decode(vb)
+            arr.setflags(write=False)
+            self[vb] = arr
+            self.nbytes += arr.nbytes
+            while self.nbytes > self.max_bytes:
+                self.nbytes -= self.pop(next(iter(self))).nbytes
+        return arr
+
+    def clear(self) -> None:
+        super().clear()
+        self.nbytes = 0
 
 
-def _cached_vals(vb: bytes) -> "np.ndarray":
-    arr = _DECODE_VALS.get(vb)
-    if arr is None:
-        if len(_DECODE_VALS) > 8192:
-            _DECODE_VALS.clear()
-        arr = vbyte_decode(vb)
-        _DECODE_VALS[vb] = arr
-    return arr
-
-
-def _cached_docs(vb: bytes) -> "np.ndarray":
-    # absolute doc ids (cumsum of the stored gaps), cached post-cumsum
-    arr = _DECODE_DOCS.get(vb)
-    if arr is None:
-        if len(_DECODE_DOCS) > 8192:
-            _DECODE_DOCS.clear()
-        arr = np.cumsum(vbyte_decode(vb), dtype=np.uint64)
-        _DECODE_DOCS[vb] = arr
-    return arr
+#: per memo, per Python worker
+_DECODE_MAX_BYTES = 32 * 2**20
+_DECODE_VALS = _DecodeMemo(vbyte_decode, _DECODE_MAX_BYTES)
+# absolute doc ids (cumsum of the stored gaps), cached post-cumsum
+_DECODE_DOCS = _DecodeMemo(
+    lambda vb: np.cumsum(vbyte_decode(vb), dtype=np.uint64), _DECODE_MAX_BYTES)
+_cached_vals = _DECODE_VALS.lookup
+_cached_docs = _DECODE_DOCS.lookup
 
 
 def _pruned_blocks(blocks: DataFrame, qterms: list[str], trows, term_buckets) -> DataFrame:

@@ -1,43 +1,11 @@
-"""Corpus loading / shaping utilities.
-
-The engine's canonical input (BASELINE.json ``input_hint``) is an Iceberg
-table ``corpus(repo, path, commit, lang, content)``; the sandbox testdata
-ships a ``documents(doc_id, text, lang, source, n_chars)`` table.  Both
-shapes are accepted by ``build_index`` via column parameters; the helpers
-here map between them and deterministically scale the corpus up for
-compute-bound benchmarks (no external data, no RNG — pure column
-expressions, so the expansion is reproducible by construction).
+"""Corpus shaping: deterministically scale a ``documents(doc_id, text)``
+table up for compute-bound benchmarks (no external data, no RNG — pure
+column expressions, so the expansion is reproducible by construction).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-CORPUS_COLUMNS = ("repo", "path", "commit", "lang", "content")
-
-
-def corpus_from_documents(docs: DataFrame) -> DataFrame:
-    """documents(doc_id, text, lang, source, ...) -> input_hint shape.
-
-    ``commit`` = md5 hex of the row identity (the analog of the
-    reference's hex doc hash, Index.java:270; md5 rather than sha1 so
-    the cross-engine oracle can recompute it); doc identity =
-    (repo, path, commit).
-    """
-    return docs.select(
-        F.concat(F.lit("org/"), F.col("source")).alias("repo"),
-        F.concat(F.lit("src/f"), F.col("doc_id").cast("string"), F.lit(".txt")).alias("path"),
-        F.md5(F.concat_ws(":", F.col("source"), F.col("doc_id").cast("string"))).alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"),
-    )
-
-
-def doc_key_expr() -> F.Column:
-    """Canonical STRING doc key for the corpus shape:
-    sha256(repo|path|commit).  String keys exercise the builder's
-    two-phase doc_int densification (integer keys skip it)."""
-    return F.sha2(F.concat_ws("|", F.col("repo"), F.col("path"), F.col("commit")), 256)
 
 
 def expand_documents(docs: DataFrame, factor: int,
@@ -65,46 +33,3 @@ def expand_documents(docs: DataFrame, factor: int,
             F.concat(F.col("text"), F.lit(" replica"), F.col("k").cast("string"))
         ).alias("text"),
     )
-
-
-def identifier_split_expr(col: F.Column) -> F.Column:
-    """Code-identifier subtoken split (the Zoekt / GitHub-code-search
-    analyzer convention): insert spaces at camelCase boundaries —
-    ``getFooBar -> get Foo Bar``, acronym runs ``HTTPServer -> HTTP
-    Server`` — BEFORE the standard normalization pass, whose
-    non-alphanumeric split already handles snake_case / kebab-case.
-    Two JVM ``regexp_replace`` passes, no UDF; feed the result to
-    ``analysis.analyzer.tokens_array_expr`` (which lowercases).
-
-    The reference tokenizes code files as plain text (its per-field
-    stringPreparation, Indexer.java — T8 in SURVEY §2); subtoken
-    indexing is the code-payload extension that makes ``bm25("server")``
-    match ``HTTPServer`` without wildcard scans."""
-    acr = F.regexp_replace(col, "([A-Z]+)([A-Z][a-z])", "$1 $2")
-    return F.regexp_replace(acr, "([a-z0-9])([A-Z])", "$1 $2")
-
-
-def latest_file_version(df: DataFrame, version_col: str = "version",
-                        keys: tuple[str, ...] = ("repo", "path")) -> DataFrame:
-    """HEAD resolution over a multi-commit corpus: keep, per ``keys``
-    (default ``(repo, path)``), the row with the greatest
-    ``version_col``.  The ingest step a real source-code crawl needs
-    before indexing — the same file arrives once per commit touching
-    it, and only the newest version belongs in the index.
-
-    ONE ``max_by`` aggregation, not a row_number window: partial
-    aggregation combines map-side, so a hot path (a file touched by
-    millions of commits) reduces to one row per map task before the
-    shuffle — the window formulation would drag every version of the
-    hot key to a single task.
-
-    ``version_col`` must be totally ordered per key (commit timestamp,
-    crawl sequence number); ties would be nondeterministic, so prefer a
-    unique sequence.  Output column order: keys, then ``version_col``,
-    then the remaining payload columns.
-    """
-    payload = [c for c in df.columns if c not in keys and c != version_col]
-    aggs = [F.max(version_col).alias(version_col)] + [
-        F.max_by(c, F.col(version_col)).alias(c) for c in payload
-    ]
-    return df.groupBy(*keys).agg(*aggs)

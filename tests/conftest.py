@@ -12,7 +12,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def spark():
     from information_retrieval_system_spark.session import get_spark
 
-    s = get_spark("tests", parallelism=8, shuffle_partitions=8)
+    s = get_spark("tests")
     yield s
 
 

@@ -50,52 +50,3 @@ def test_doc_length_is_prefilter(spark):
     dl = df.select(doc_length_expr(F.col("text")).alias("dl")).collect()[0].dl
     _, oracle_dl = analyze("the of and unique", True, True)
     assert dl == oracle_dl == 4  # stopwords count toward dl (T4)
-
-
-def test_identifier_split_subtokens(spark):
-    """Code-identifier analyzer: camelCase, acronym runs, snake_case,
-    kebab-case, and digit boundaries all become subtokens."""
-    from pyspark.sql import functions as F
-
-    from information_retrieval_system_spark.analysis.analyzer import tokens_array_expr
-    from information_retrieval_system_spark.sources.corpus import identifier_split_expr
-
-    df = spark.createDataFrame(
-        [("getFooBar HTTPServer2Fast parse_sql_plan kebab-case XMLHttpRequest",)],
-        "c string")
-    got = df.select(
-        tokens_array_expr(identifier_split_expr(F.col("c"))).alias("t")).first()["t"]
-    assert got == ["get", "foo", "bar", "http", "server", "fast",
-                   "parse", "sql", "plan", "kebab", "case",
-                   "xml", "http", "request"]
-
-
-def test_extract_symbols_kinds_and_counts(spark):
-    from information_retrieval_system_spark.analysis.symbols import (
-        extract_symbols,
-        symbol_search,
-    )
-
-    content = (
-        "prose intro\n"
-        "def top_level(a):\n    pass\n"
-        "class Outer:\n"
-        "    def method(self):\n        pass\n"
-        "function jsThing(x) {\n}\n"
-        "func goThing(y) {\n}\n"
-        "def top_level(b):\n    pass\n"     # re-definition -> n_defs 2
-        "undef not_a_def(z)\n"              # must NOT match
-    )
-    docs = spark.createDataFrame([(1, content), (2, "no code here")],
-                                 "doc_id long, text string")
-    got = {(r.doc_id, r.kind, r.symbol): r.n_defs
-           for r in extract_symbols(docs, "text", "doc_id").collect()}
-    assert got == {
-        (1, "function", "top_level"): 2,
-        (1, "function", "method"): 1,
-        (1, "function", "jsThing"): 1,
-        (1, "function", "goThing"): 1,
-        (1, "class", "Outer"): 1,
-    }
-    hits = symbol_search(docs, "text", "doc_id", "top_level").collect()
-    assert [(r.doc_id, r.kind, r.n_defs) for r in hits] == [(1, "function", 2)]

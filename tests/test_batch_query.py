@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
 from information_retrieval_system_spark.config import EngineConfig
@@ -77,57 +76,3 @@ def test_expansion_mechanism(spark):
     exp2 = spark.createDataFrame([("spark", "join", 1.0)], "term string, expansion string, weight double")
     out2 = {r.term: r.qtf for r in expand_query_terms(qt, exp2, expansion_weight=1.0).collect()}
     assert out2["join"] == 3.0
-
-
-def test_spell_correct_semantics(spark):
-    """Deletion-neighborhood blocking + levenshtein verify: exact hits
-    self-suggest at distance 0, distance-1 typos resolve to the highest
-    -df candidate, out-of-range strings get NULLs."""
-    from information_retrieval_system_spark.query.spelling import correct_terms
-
-    vocab = spark.createDataFrame(
-        [("spark", 100), ("stark", 40), ("join", 80), ("joins", 70)],
-        "term string, df long",
-    )
-    q = spark.createDataFrame(
-        [("spark",), ("spork",), ("joinz",), ("qqqqq",)], "qterm string")
-    got = {r.qterm: (r.suggestion, r.distance) for r in
-           correct_terms(vocab, q, max_distance=1).collect()}
-    assert got["spark"] == ("spark", 0)      # exact hit
-    assert got["spork"] == ("spark", 1)      # beats 'stark' on df
-    assert got["joinz"] == ("join", 1)       # del beats... df rank: join 80 > joins 70
-    assert got["qqqqq"] == (None, None)      # no candidate within 1
-
-
-def test_bm25f_title_weight_observable(spark):
-    """With title weight 2.3 vs abstract 1.0, a title match must
-    outrank an otherwise-identical abstract match; with equal weights
-    they tie (shared normalization sanity)."""
-    from pyspark.sql import functions as F
-
-    from information_retrieval_system_spark.query.bm25f import bm25f_search
-
-    # 2 matching docs of 5 keeps idf positive (df <= N/2 — with df=2
-    # of N=3 the BM25 idf goes NEGATIVE and inverts the ranking)
-    corpus = spark.createDataFrame(
-        [("a", "needle alpha", "filler words here"),
-         ("b", "other alpha", "needle words here"),
-         ("c", "other alpha", "filler words here"),
-         ("d", "other beta", "filler words here"),
-         ("e", "other gamma", "filler words here")],
-        "id string, title string, abstract string",
-    )
-    qt = spark.createDataFrame([("needle",)], "term string")
-    res = bm25f_search(corpus, qt, id_col="id",
-                       field_weights_tenths={"title": 23, "abstract": 10}, k=3)
-    rows = res.collect()
-    assert [r.id for r in rows] == ["a", "b"]
-    assert rows[0].score > rows[1].score
-    eq = bm25f_search(corpus, qt, id_col="id",
-                      field_weights_tenths={"title": 10, "abstract": 10}, k=3)
-    # doc a: needle in a 2-token title ⇒ same weighted tf, but dl̃
-    # differs (a: 2+3 tokens vs b: 2+3) — identical lengths ⇒ exact tie,
-    # broken by id
-    er = eq.collect()
-    assert [r.id for r in er] == ["a", "b"]
-    assert abs(er[0].score - er[1].score) < 1e-12

@@ -1,4 +1,5 @@
-"""Driver-contract invariants for __spark_entry__."""
+"""Contract checks for ``__spark_entry__`` and the Spark/DuckDB oracle
+pairs in ``tests/test_duckdb_oracle.py``."""
 
 from __future__ import annotations
 
@@ -6,29 +7,34 @@ import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import __spark_entry__ as E
+from test_duckdb_oracle import CASES
+
+#: the operators the oracle test must cover (the kept pipeline)
+ORACLE_OPERATORS = {
+    "term_df", "doc_norms", "bm25_topk", "vsm_topk", "existential",
+    "pagerank", "batch_fusion", "eval_metrics", "s2_ingest", "s2_bm25",
+    "external_expansion_topk",
+}
 
 
 def test_every_query_has_an_oracle():
-    qs, os_ = E.queries(), E.oracle_sql()
-    missing = [k for k in qs if k not in os_]
-    # every operator we claim is oracle-checked (none rely on the weaker
-    # rows-only path today)
-    assert not missing, f"queries without oracle SQL: {missing}"
-    dangling = [k for k in os_ if k not in qs]
-    assert not dangling, f"oracle entries without a query: {dangling}"
+    missing = sorted(ORACLE_OPERATORS - set(CASES))
+    assert not missing, f"operators without an oracle case: {missing}"
+    for name, (query, sql) in CASES.items():
+        assert callable(query), f"{name}: Spark side is not callable"
+        assert isinstance(sql, str) and sql.strip(), f"{name}: no oracle SQL"
 
 
-def test_oracle_sql_is_duckdb_parseable():
+def test_oracle_sql_is_duckdb_parseable(sf_small):
     import duckdb
 
     con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '/root/testdata/sf0.001/{t}.parquet'")
-    for name, sql in E.oracle_sql().items():
-        con.sql(f"EXPLAIN {sql}")  # parses + binds against the real views
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'")
+    for name, (_, sql) in CASES.items():
+        con.sql(f"EXPLAIN {sql}")  # parses + binds against the real view
 
 
 def test_entry_returns_ranked_frame(spark):

@@ -1,74 +1,9 @@
-"""Kill/resume test (SURVEY.md §5.4): inject a failure mid-build, resume,
-assert the final index equals a clean build exactly."""
+"""Snapshot commits (time travel, lineage, concurrent writers, expiry)
+and streaming merges into a snapshot (watermarks, batch equality)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from information_retrieval_system_spark.config import EngineConfig
-from information_retrieval_system_spark.index.checkpoint import (
-    ResumableIndexBuild,
-    read_checkpointed,
-)
-
-
-def _collect_postings(ix):
-    return sorted(
-        (r.term, r.doc_int, r.tf) for r in ix.postings.select("term", "doc_int", "tf").collect()
-    )
-
-
-def test_kill_resume_identical(spark, sf_small, tmp_path):
-    cfg = EngineConfig(term_buckets=8)
-    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-
-    clean_dir = str(tmp_path / "clean")
-    ResumableIndexBuild(docs, clean_dir, cfg, doc_col="doc_id", text_col="text").run()
-
-    crash_dir = str(tmp_path / "crash")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        ResumableIndexBuild(docs, crash_dir, cfg, doc_col="doc_id", text_col="text",
-                            fail_after_buckets=3).run()
-    # resume
-    m = ResumableIndexBuild(docs, crash_dir, cfg, doc_col="doc_id", text_col="text").run()
-    assert sorted(m["buckets_done"]) == list(range(8))
-    assert all(m["stages"].values())
-
-    a = read_checkpointed(spark, clean_dir)
-    b = read_checkpointed(spark, crash_dir)
-    assert a.stats == b.stats
-    assert _collect_postings(a) == _collect_postings(b)
-    da = sorted((r.doc_id, r.doc_int, r.length, round(r.norm, 9)) for r in a.docs.collect())
-    db = sorted((r.doc_id, r.doc_int, r.length, round(r.norm, 9)) for r in b.docs.collect())
-    assert da == db
-
-
-def test_fingerprint_invalidation(spark, sf_small, tmp_path):
-    cfg = EngineConfig(term_buckets=4)
-    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    d = str(tmp_path / "fp")
-    ResumableIndexBuild(docs, d, cfg, doc_col="doc_id", text_col="text").run()
-    # different corpus -> manifest invalidated, rebuild from scratch succeeds
-    docs2 = docs.filter(F.col("doc_id") < 100)
-    m = ResumableIndexBuild(docs2, d, cfg, doc_col="doc_id", text_col="text").run()
-    ix = read_checkpointed(spark, d)
-    assert ix.stats["n_docs"] == docs2.count()
-    assert sorted(m["buckets_done"]) == list(range(4))
-
-
-def test_fingerprint_detects_content_change(spark):
-    """Same ids, edited text -> different fingerprint (re-crawl safety)."""
-    from information_retrieval_system_spark.index.checkpoint import corpus_fingerprint
-
-    a = spark.createDataFrame([(1, "alpha"), (2, "beta")], "doc_id long, text string")
-    b = spark.createDataFrame([(1, "alpha"), (2, "BETA-EDITED")], "doc_id long, text string")
-    fa = corpus_fingerprint(a, "doc_id", "text")
-    fb = corpus_fingerprint(b, "doc_id", "text")
-    assert fa["n"] == fb["n"] and fa["h"] != fb["h"]
-    # order-insensitive: same rows, different order -> same fingerprint
-    c = spark.createDataFrame([(2, "beta"), (1, "alpha")], "doc_id long, text string")
-    assert corpus_fingerprint(c, "doc_id", "text") == fa
 
 
 def test_snapshot_time_travel_and_lineage(spark, tmp_path):

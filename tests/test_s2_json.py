@@ -83,34 +83,3 @@ def test_graph_read_prunes_schema(spark, jsonl):
     assert "ReadSchema" in plan
     # the JSON scan must not materialize the textual fields
     assert "paperAbstract" not in plan and "journalName" not in plan
-
-
-def test_bm25f_served_partition_pruning_and_parity(spark, tmp_path):
-    """Persisted fielded layout: the served scan is partition-pruned on
-    bucket (PartitionFilters), and the served result is value-identical
-    to the in-memory bm25f_search on the same corpus."""
-    from information_retrieval_system_spark.config import EngineConfig
-    from information_retrieval_system_spark.query.bm25f import (
-        bm25f_search, bm25f_search_served, read_fielded_index,
-        write_fielded_index)
-
-    cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = docs.selectExpr("doc_id AS id", "text AS title",
-                             "source AS abstract")
-    weights = {"title": 23, "abstract": 10}
-    out = str(tmp_path / "fielded")
-    stats = write_fielded_index(corpus, out, id_col="id",
-                                field_weights_tenths=weights, term_buckets=8)
-    assert stats["n_docs"] == corpus.count()
-    postings, dl, terms, rstats = read_fielded_index(spark, out)
-    qterms = ["spark", "join", "merge"]
-    served = bm25f_search_served(spark, postings, dl, terms, rstats,
-                                 qterms, k=10, cfg=cfg)
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    qt = spark.createDataFrame([(t,) for t in qterms], "term string")
-    mem = bm25f_search(corpus, qt, id_col="id",
-                       field_weights_tenths=weights, k=10, cfg=cfg)
-    assert [(r.id, round(r.score, 9)) for r in served.collect()] == \
-           [(r.id, round(r.score, 9)) for r in mem.collect()]

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
 from information_retrieval_system_spark.config import EngineConfig
@@ -217,64 +216,3 @@ def test_route_batch_mixed_routes_equal_unrouted(blocked, spark):
     a = sorted((r.qid, r.doc_id, r.rank, round(r.score, 9)) for r in res.collect())
     b = sorted((r.qid, r.doc_id, r.rank, round(r.score, 9)) for r in ref.collect())
     assert a == b and len(a) > 0
-
-
-def test_corrected_bm25_raw_query_scores_nothing(spark, sf_small):
-    """The typo'd query hits NO vocabulary term (the reference's silent
-    probe miss); after correction it equals BM25 on the intended terms."""
-    from information_retrieval_system_spark import entry_queries as EQ
-    from information_retrieval_system_spark.entry_batch import TYPO_QUERY
-    from information_retrieval_system_spark.query import scoring
-    from information_retrieval_system_spark.query.spelling import correct_terms
-
-    ix = EQ.get_index(spark, sf_small)
-    raw_qt = spark.createDataFrame([(t, 1.0) for t in TYPO_QUERY],
-                                   "term string, qtf double")
-    assert scoring.bm25_search(ix, raw_qt, k=10, cfg=EQ.NOSTEM_CFG).count() == 0
-
-    q = spark.createDataFrame([(t,) for t in TYPO_QUERY], "qterm string")
-    sug = correct_terms(ix.terms.select("term", "df"), q, max_distance=1)
-    got = {(r.qterm, r.suggestion) for r in sug.collect()}
-    assert got == {("spork", "spark"), ("jion", "join"), ("mergee", "merge")}
-
-
-def test_corrected_routed_fusion_mix_and_corrections(spark):
-    """The composed degraded-query lifecycle at sf0.001: at least one
-    term is actually CORRECTED (typo != suggestion), the uncorrectable
-    qid drops out, and the routing splits into both plans at the
-    sf-scaled threshold."""
-    from pyspark.sql import functions as F
-
-    from information_retrieval_system_spark import entry_queries as EQ
-    from information_retrieval_system_spark.entry_batch import (
-        TYPO_BATCH, get_blocks)
-    from information_retrieval_system_spark.query.spelling import correct_terms
-    from information_retrieval_system_spark.query.wand import route_batch_bm25
-
-    sf = "/root/testdata/sf0.001"
-    ix = EQ.get_index(spark, sf)
-    q = spark.createDataFrame(
-        [(qid, t) for qid, terms in TYPO_BATCH for t in terms],
-        "qid long, qterm string")
-    corr = correct_terms(ix.terms.select("term", "df"), q, max_distance=1)
-    rows = corr.collect()
-    fixed = {(r.qid, r.qterm): r.suggestion for r in rows}
-    assert fixed[(1, "spork")] == "spark"        # substitution
-    assert fixed[(1, "jion")] == "join"          # adjacent transposition
-    assert fixed[(5, "filtre")] == "filter"      # adjacent transposition
-    assert fixed[(2, "windoww")] == "window"     # insertion
-    assert fixed[(4, "zzzzqq")] is None          # uncorrectable
-    qt = (corr.filter(F.col("suggestion").isNotNull())
-          .select("qid", F.col("suggestion").alias("term")).distinct()
-          .withColumn("qtf", F.lit(1.0)))
-    blocks, dlb = get_blocks(spark, sf)
-    # sf0.001 documents is the same 500 rows as sf0.01 — the production
-    # threshold splits qid3 (Σdf 765) from qids 1/2/5 (Σdf > 1000)
-    from information_retrieval_system_spark.entry_graph import CRF_MIN_POSTINGS
-
-    res, routes = route_batch_bm25(ix, blocks, dlb, qt, k=10,
-                                   cfg=EQ.NOSTEM_CFG, block_span=256,
-                                   wand_min_postings=CRF_MIN_POSTINGS)
-    assert 4 not in routes                       # dropped qid never routed
-    assert set(routes.values()) == {"wand", "exhaustive"}
-    assert res.select("qid").distinct().count() == 4

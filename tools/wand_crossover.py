@@ -187,7 +187,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
                        work_dir: str | None = None, batch_n: int = 635) -> dict:
     """Build the Zipf corpus + both persisted layouts, then time
     exhaustive-served vs WAND-served per query (min over reps).
-    Returns the result dict (also used by bench.py)."""
+    Returns the result dict."""
     import os
 
     from pyspark.sql import functions as F
