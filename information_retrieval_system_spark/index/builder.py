@@ -23,7 +23,9 @@ import math
 import os
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..analysis.analyzer import porter_stem_udf
 from ..config import DEFAULT_CONFIG, EngineConfig
@@ -362,13 +364,56 @@ def write_index(
         json.dump(tables.stats, f, indent=2)
 
 
+#: footer key under which Spark stores a parquet file's Spark schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """A parquet data file under ``path`` (hidden and ``_``-prefixed
+    names skipped, as Spark's file listing skips them)."""
+    for dp, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for name in sorted(files):
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                return os.path.join(dp, name)
+    return None
+
+
+def read_table(spark: SparkSession, path: str,
+               partitions: list[str] | None = None) -> DataFrame:
+    """Read a Spark-written parquet table with the schema taken from one
+    file's footer instead of inferred.
+
+    Schema inference (``spark.read.parquet``) runs a Spark job that reads
+    every footer; every file Spark writes already stores its Spark schema
+    under ``SPARK_SCHEMA_KEY``, so one footer read by pyarrow in the driver
+    gives the same schema with no job.  Partition columns (``bucket``,
+    ``tbucket``, ``batch_id``: the ``name=value`` directories above the
+    file) are appended as int, as inference types them.  ``partitions``
+    (directory names under ``path``, e.g. ``["batch_id=3"]``) restricts the
+    read to those partitions; the partition column is kept.  A table with
+    no data file falls back to inference."""
+    dirs = [os.path.join(path, p) for p in partitions] if partitions else [path]
+    sample = next(filter(None, map(_first_data_file, dirs)), None)
+    reader = spark.read.option("basePath", path) if partitions else spark.read
+    if sample is None:
+        return reader.parquet(*dirs)
+    schema = StructType.fromJson(json.loads(
+        pq.read_metadata(sample).metadata[SPARK_SCHEMA_KEY]))
+    for part in os.path.relpath(os.path.dirname(sample), path).split(os.sep):
+        if "=" in part:
+            schema = schema.add(StructField(part.split("=", 1)[0], IntegerType()))
+    return reader.schema(schema).parquet(*dirs)
+
+
 def read_index(spark: SparkSession, out_dir: str) -> IndexTables:
-    postings = spark.read.parquet(os.path.join(out_dir, "postings"))
-    docs = spark.read.parquet(os.path.join(out_dir, "docs"))
-    terms = spark.read.parquet(os.path.join(out_dir, "terms"))
+    """The written layout of ``write_index``, read without a Spark job."""
+    postings = read_table(spark, os.path.join(out_dir, "postings"))
+    docs = read_table(spark, os.path.join(out_dir, "docs"))
+    terms = read_table(spark, os.path.join(out_dir, "terms"))
     with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
     td_dir = os.path.join(out_dir, "term_dict")
-    term_dict = spark.read.parquet(td_dir) if os.path.isdir(td_dir) else None
+    term_dict = read_table(spark, td_dir) if os.path.isdir(td_dir) else None
     return IndexTables(postings=postings, docs=docs, terms=terms, stats=stats,
                        term_dict=term_dict)

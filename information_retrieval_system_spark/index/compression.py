@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
+from .builder import read_table
 
 #: docs per aligned block range (power of two keeps div/mod cheap)
 DEFAULT_BLOCK_SPAN = 1024
@@ -274,11 +275,11 @@ def read_block_index(
     plan time)."""
     import os
 
-    blocks = spark.read.parquet(os.path.join(out_dir, "blocks"))
+    blocks = read_table(spark, os.path.join(out_dir, "blocks"))
     if prune_terms is not None and term_buckets:
         bs = term_buckets_for(spark, prune_terms, term_buckets)
         blocks = blocks.filter(F.col("tbucket").isin(bs))
     if not keep_bucket:
         blocks = blocks.drop("tbucket")
-    dl_blocks = spark.read.parquet(os.path.join(out_dir, "dl_blocks"))
+    dl_blocks = read_table(spark, os.path.join(out_dir, "dl_blocks"))
     return blocks, dl_blocks

@@ -1,11 +1,16 @@
 """Exact ranked retrieval: BM25 / VSM / Existential / B6 fusion.
 
-Query plan shape (SURVEY.md §3 E2): ``query_terms --broadcast-join-->
-terms(df) --join--> postings (bucket-pruned) --semi-join--> candidates
---join--> docs(length, norm, pagerank) --column exprs--> groupBy(doc).sum
---> TakeOrderedAndProject(k)``.  Two shuffles total: the postings join and
-the final top-k merge (which Spark executes as per-partition top-k + a
-driver-side merge of k-row partials — already the bounded-heap pattern).
+Query plan shape (SURVEY.md §3 E2), as ``bm25_search`` plans over a
+written index without candidates: ``broadcast(query_terms) ⋈ terms``
+(a scan of the terms table) yields the query-sized (term, df) frame,
+which is broadcast into a scan of ALL postings buckets (no partition
+filter: nothing maps the query terms to ``bucket`` values here) -->
+``⋈ docs`` (length; a broadcast join while docs fit under
+``spark.sql.autoBroadcastJoinThreshold``) --> partial sum per doc -->
+ONE shuffle, ``Exchange hashpartitioning(doc_id)`` --> final sum -->
+``TakeOrderedAndProject(k)`` (per-partition top-k plus a driver-side
+merge of the k-row partials: the bounded-heap pattern, no second
+shuffle).  Candidates add a semi-join on doc_id before the docs join.
 
 Scoring semantics, with reference citations:
 - BM25 (OkapiBM25_FR.java:160,329): ``idf = log2((N - df + 0.5)/(df+0.5))``;

@@ -3,13 +3,18 @@
 The reference is strictly batch (SURVEY.md §2.9); this module is the
 Spark-native growth path a production corpus needs: new corpus files land
 in a directory, a file-source stream picks them up, and ``foreachBatch``
-runs the SAME batch analyzer/aggregation pipeline per micro-batch,
-appending a postings DELTA partition per batch.  Because a document
-arrives exactly once, per-batch (term, doc) aggregates are disjoint
-across batches — the merged view is a pure union, and global stats
-(df, N, avgdl) are re-derived by one aggregation over the union
-(the streaming analog of the reference's merge cascade, which Spark's
-shuffle already replaced in batch mode).
+runs the SAME batch analyzer/aggregation pipeline per micro-batch.  Each
+micro-batch ``n`` writes its own delta directories,
+``postings_delta/batch_id=<n>/`` and then ``docs_delta/batch_id=<n>/``;
+the ``_SUCCESS`` marker of the docs directory is the batch's commit
+marker.  Both writes overwrite their directory, so a batch that Spark
+replays after a crash (``foreachBatch`` is at-least-once) replaces its
+own output instead of adding a second copy.  Because a document arrives
+exactly once, per-batch (term, doc) aggregates are disjoint across
+batches — the merged view is a pure union, and global stats (df, N,
+avgdl) are re-derived by one aggregation over the union (the streaming
+analog of the reference's merge cascade, which Spark's shuffle already
+replaced in batch mode).
 
 ``trigger(availableNow=True)`` drains everything pending then stops —
 the cron-style incremental build; remove it for continuous mode.
@@ -17,13 +22,14 @@ the cron-style incremental build; remove it for continuous mode.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
 
 from ..analysis.analyzer import analyze_tokens, doc_length_expr
 from ..config import DEFAULT_CONFIG, EngineConfig
+from ..index.builder import IndexTables, read_table
 
 CORPUS_STREAM_SCHEMA = "doc_id long, text string"
 
@@ -31,8 +37,9 @@ CORPUS_STREAM_SCHEMA = "doc_id long, text string"
 def _process_batch_factory(out_dir: str, cfg: EngineConfig,
                            doc_col: str, text_col: str):
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness probe (one job per batch): an empty batch writes
+        # empty delta files, and merge_into_snapshot's stats aggregation,
+        # which it runs anyway, finds no new docs in them
         docs = batch_df.select(
             F.col(doc_col).alias("doc_id"), F.col(text_col).alias("content")
         ).withColumn("length", doc_length_expr(F.col("content")))
@@ -45,12 +52,12 @@ def _process_batch_factory(out_dir: str, cfg: EngineConfig,
             stem_via_join=False,
         )
         postings = toks.groupBy("term", "doc_id").agg(F.count("*").cast("int").alias("tf"))
-        postings.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            os.path.join(out_dir, "postings_delta")
-        )
-        docs.select("doc_id", "length").withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(os.path.join(out_dir, "docs_delta"))
+        part = f"batch_id={batch_id}"
+        postings.write.mode("overwrite").parquet(
+            os.path.join(out_dir, "postings_delta", part))
+        # docs last: their _SUCCESS marks the whole batch as written
+        docs.select("doc_id", "length").write.mode("overwrite").parquet(
+            os.path.join(out_dir, "docs_delta", part))
 
     return process
 
@@ -83,34 +90,6 @@ def incremental_index_stream(
     return writer.start()
 
 
-def compact_delta_index(spark: SparkSession, delta_dir: str, out_dir: str,
-                        cfg: EngineConfig = DEFAULT_CONFIG):
-    """The periodic COMPACTION job merged_index_view promises: rewrite
-    the accumulated per-batch delta partitions into the bucketed serving
-    layout of index.builder.write_index (term-bucketed postings sorted
-    within partitions, docs with VSM norms, terms, stats.json), and read
-    it back.
-
-    Semantics are identical to a from-scratch batch build over the same
-    documents: per-batch (term, doc) aggregates are disjoint, so the
-    union IS the posting set, df/cf/norms re-derive by one aggregation
-    pass.  Delta doc keys are integers, so ``doc_int == doc_id`` (the
-    builder's int fast path); norms use the builder's floor-idf quirk.
-    At scale this runs on a cadence (or when delta file count crosses a
-    threshold) and serving flips to the compacted snapshot — exactly an
-    Iceberg rewrite-data-files action, expressed on plain parquet.
-    ``compact_to_snapshot`` is the same job committing into the
-    snapshot log instead of a bare directory."""
-    from ..index.builder import read_index, write_index
-
-    tables, cached = _compacted_tables(spark, delta_dir)
-    try:
-        write_index(tables, out_dir, cfg)
-    finally:
-        cached.unpersist()
-    return read_index(spark, out_dir)
-
-
 def compact_to_snapshot(spark: SparkSession, delta_dir: str, snapshot_root: str,
                         cfg: EngineConfig = DEFAULT_CONFIG,
                         note: str = "") -> int:
@@ -120,46 +99,63 @@ def compact_to_snapshot(spark: SparkSession, delta_dir: str, snapshot_root: str,
     a reader may hold.  Returns the snapshot id."""
     from ..index.snapshots import commit_snapshot
 
-    tables, cached = _compacted_tables(spark, delta_dir)
+    postings = read_table(spark, os.path.join(delta_dir, "postings_delta")).drop("batch_id")
+    docs = read_table(spark, os.path.join(delta_dir, "docs_delta")).drop("batch_id")
+    tables, cached = _tables_from_view(postings, docs, _delta_stats(postings, docs))
     try:
         return commit_snapshot(tables, snapshot_root, cfg,
                                operation="compaction", note=note)
     finally:
-        cached.unpersist()
+        for df in cached:
+            df.unpersist()
 
 
-def _tables_from_view(postings: DataFrame, docs: DataFrame):
-    """(term, doc_id, tf) + (doc_id, length) -> full IndexTables:
-    terms/stats re-derived by one aggregation each, VSM norms with the
-    builder's floor-idf quirk, integer doc ids (doc_int == doc_id).
-    Shared by delta compaction and snapshot merge — both are 'derive
-    the global tables from a posting-row union' jobs.
+#: the additive index stats: a merge adds the new batches' to the parent's
+ADDITIVE_STATS = ("n_docs", "total_len", "n_postings")
 
-    The posting union is persisted (disk, not exec memory) before the
-    fan-out: four downstream passes consume it (terms agg, stats count,
-    norm derivation, the layout write) and would otherwise each re-read
-    the snapshot parquet plus every delta file.  Same precedent as
-    assign_doc_ints; in production this stage is a written table.
 
-    Returns ``(tables, persisted_postings)`` — the CALLER must
-    ``persisted_postings.unpersist()`` after consuming the tables
-    (write/commit), or repeated maintenance cycles in a long-lived
-    session leak one disk-cached dataset per call."""
-    import math
+def _delta_stats(postings: DataFrame, docs: DataFrame) -> dict:
+    """``ADDITIVE_STATS`` of (term, doc_id, tf) + (doc_id, length) delta
+    tables, by one aggregation over both."""
+    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
+    rows = docs.select(
+        one.alias("n_docs"), F.col("length").cast("long").alias("total_len"),
+        zero.alias("n_postings"),
+    ).unionByName(postings.select(
+        zero.alias("n_docs"), zero.alias("total_len"), one.alias("n_postings")))
+    r = rows.agg(*[F.sum(k).alias(k) for k in ADDITIVE_STATS]).collect()[0]
+    return {k: int(r[k] or 0) for k in ADDITIVE_STATS}
 
-    from pyspark import StorageLevel
 
-    from ..index.builder import IndexTables
+def _avgdl(stats: dict) -> int:
+    """The floored average doc length (Indexer.java:688-691)."""
+    return stats["total_len"] // stats["n_docs"] if stats["n_docs"] else 0
 
-    postings = postings.persist(StorageLevel.DISK_ONLY)
+
+def _tables_from_view(postings: DataFrame, docs: DataFrame, stats: dict):
+    """(term, doc_id, tf) + (doc_id, length) -> full IndexTables: terms
+    re-derived by one aggregation, VSM norms with the builder's floor-idf
+    quirk, integer doc ids (doc_int == doc_id).  ``stats`` holds the
+    ``ADDITIVE_STATS`` of the union (a merge carries them forward from
+    the parent snapshot, so the snapshot is never scanned for them).
+    Shared by delta compaction and snapshot merge — both are 'derive the
+    global tables from a posting-row union' jobs.
+
+    The terms table is cached and aggregated once: the norms' df and the
+    terms write both read it.  It is written as one file: the norms
+    broadcast it, so it is small by assumption, and a cached plan keeps
+    its shuffle's partition count (one small file per shuffle partition
+    otherwise, where adaptive execution coalesced the uncached
+    aggregation to one).
+
+    Returns ``(tables, cached)`` — the CALLER must unpersist every frame
+    in ``cached`` after consuming the tables (write/commit), or repeated
+    maintenance cycles in a long-lived session leak them."""
+    n_docs = stats["n_docs"]
+    stats = {**stats, "avgdl": _avgdl(stats), "int_doc_ids": True}
     terms = postings.groupBy("term").agg(
         F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf")
-    )
-    row = docs.agg(F.count("*").alias("n"), F.sum("length").alias("s")).collect()[0]
-    n_docs = int(row["n"]); total = int(row["s"] or 0)
-    stats = {"n_docs": n_docs, "total_len": total,
-             "avgdl": total // n_docs if n_docs else 0,
-             "n_postings": postings.count(), "int_doc_ids": True}
+    ).cache()
     p = postings.withColumn("doc_int", F.col("doc_id").cast("long"))
     log2 = math.log(2.0)
     norm_df = (
@@ -177,15 +173,20 @@ def _tables_from_view(postings: DataFrame, docs: DataFrame):
         .withColumn("norm", F.coalesce(F.col("norm"), F.lit(0.0)))
         .withColumn("pagerank", F.lit(0.0))
     )
-    return IndexTables(postings=p, docs=docs_full, terms=terms, stats=stats), postings
+    tables = IndexTables(postings=p, docs=docs_full, terms=terms.coalesce(1),
+                         stats=stats)
+    return tables, [terms]
 
 
-def _compacted_tables(spark: SparkSession, delta_dir: str):
-    postings = spark.read.parquet(
-        os.path.join(delta_dir, "postings_delta")).drop("batch_id")
-    docs = spark.read.parquet(
-        os.path.join(delta_dir, "docs_delta")).drop("batch_id")
-    return _tables_from_view(postings, docs)
+def _written_batches(docs_dir: str) -> list[int]:
+    """Ids of the delta batches whose docs write finished (their
+    ``batch_id=<n>`` directory holds a ``_SUCCESS`` marker), ascending."""
+    if not os.path.isdir(docs_dir):
+        return []
+    return sorted(
+        int(name.split("=", 1)[1]) for name in os.listdir(docs_dir)
+        if name.startswith("batch_id=")
+        and os.path.exists(os.path.join(docs_dir, name, "_SUCCESS")))
 
 
 def merge_into_snapshot(
@@ -197,13 +198,15 @@ def merge_into_snapshot(
 ) -> int:
     """The APPEND-MERGE commit — the production index-update path
     composed end-to-end: union the CURRENT snapshot's postings/docs
-    with the accumulated streaming deltas, re-derive the global tables
+    with the new streaming delta batches, re-derive the global tables
     (df/cf/stats/norms — the stream's per-batch aggregates and the
     snapshot's doc sets are disjoint, so the union IS the posting set),
     and commit the result as a NEW immutable snapshot
     (operation "merge-append").  Prior snapshots stay readable
     (time travel) and GC-able (expire_snapshots) — the Iceberg
-    append-commit analog for the serving index.
+    append-commit analog for the serving index.  ``n_docs``,
+    ``total_len`` and ``n_postings`` are the parent snapshot's plus the
+    new batches' (``ADDITIVE_STATS``).
 
     Invariant: a document lands EITHER in the snapshot or in the deltas
     (exactly-once file landing — same invariant the streaming module
@@ -212,10 +215,12 @@ def merge_into_snapshot(
 
     RE-MERGEABLE: each merge commit records the highest delta
     ``batch_id`` it consumed (``merge_watermark`` on the log entry), and
-    the next merge only reads ``batch_id > watermark`` — so calling this
-    repeatedly as the stream keeps appending never double-counts an
-    already-merged batch.  With no deltas past the watermark (or no
-    delta dir yet) it is a NO-OP returning the current snapshot id.
+    the next merge reads only the written batches (``_SUCCESS`` in
+    ``docs_delta/batch_id=<n>/``, found by listing the directory) past
+    it — so calling this repeatedly as the stream keeps writing never
+    double-counts an already-merged batch.  With no new batch, or only
+    batches without documents, it is a NO-OP returning the current
+    snapshot id.
 
     The watermark is sound within ONE streaming checkpoint lineage:
     Structured Streaming's batch_id is monotonic per checkpoint, so the
@@ -230,49 +235,40 @@ def merge_into_snapshot(
     if not log:
         raise FileNotFoundError(f"no snapshots at {snapshot_root} to merge into")
     wm = max((e.get("merge_watermark", -1) for e in log), default=-1)
-    p_dir = os.path.join(delta_dir, "postings_delta")
     d_dir = os.path.join(delta_dir, "docs_delta")
-    if not os.path.isdir(d_dir):  # stream drained zero batches: no-op
+    new = [b for b in _written_batches(d_dir) if b > wm]
+    if not new:
         return log[-1]["id"]
-    if os.path.isdir(p_dir):
-        dp = spark.read.parquet(p_dir).filter(F.col("batch_id") > wm)
-    else:  # every batch so far tokenized to zero terms: docs only
-        dp = spark.createDataFrame(
-            [], "term string, doc_id long, tf int, batch_id long")
-    dd = spark.read.parquet(d_dir).filter(F.col("batch_id") > wm)
-    # Watermark advances on DOCS, not postings: every processed batch
-    # writes docs_delta rows, but a batch whose docs all tokenize to
-    # zero terms writes NO postings rows — deriving the watermark from
-    # dp would leave such a batch above the recorded mark and re-merge
-    # its doc rows next call (double-counted n_docs/avgdl/norms).
-    new_wm = dd.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
-    if new_wm is None:  # nothing new past the watermark: no-op
+    parts = [f"batch_id={b}" for b in new]
+    cols = lambda df: df.select("term", "doc_id", F.col("tf").cast("long").alias("tf"))  # noqa: E731
+    dp = cols(read_table(spark, os.path.join(delta_dir, "postings_delta"), parts))
+    dd = read_table(spark, d_dir, parts).select("doc_id", "length")
+    added = _delta_stats(dp, dd)
+    if not added["n_docs"]:  # only empty micro-batches
         return log[-1]["id"]
     cur = read_snapshot(spark, snapshot_root)
-    cols = lambda df: df.select("term", "doc_id", F.col("tf").cast("long").alias("tf"))  # noqa: E731
-    postings = cols(cur.postings).unionByName(cols(dp))
-    docs = cur.docs.select("doc_id", "length").unionByName(
-        dd.select("doc_id", "length"))
-    tables, cached = _tables_from_view(postings, docs)
+    postings = cols(cur.postings).unionByName(dp)
+    docs = cur.docs.select("doc_id", "length").unionByName(dd)
+    tables, cached = _tables_from_view(
+        postings, docs, {k: cur.stats[k] + added[k] for k in ADDITIVE_STATS})
     try:
         return commit_snapshot(tables, snapshot_root, cfg,
                                operation="merge-append", note=note,
-                               extra={"merge_watermark": int(new_wm)})
+                               extra={"merge_watermark": new[-1]})
     finally:
-        cached.unpersist()
+        for df in cached:
+            df.unpersist()
 
 
 def merged_index_view(spark: SparkSession, out_dir: str):
-    """Union the deltas into queryable postings/docs/terms/stats —
-    the compaction-read path (compact_delta_index is the periodic job
-    that rewrites this union into the bucketed serving layout)."""
-    postings = spark.read.parquet(os.path.join(out_dir, "postings_delta")).drop("batch_id")
-    docs = spark.read.parquet(os.path.join(out_dir, "docs_delta")).drop("batch_id")
+    """Union the deltas into queryable postings/docs/terms/stats — the
+    compaction-read path (compact_to_snapshot is the job that commits
+    this union in the bucketed serving layout)."""
+    postings = read_table(spark, os.path.join(out_dir, "postings_delta")).drop("batch_id")
+    docs = read_table(spark, os.path.join(out_dir, "docs_delta")).drop("batch_id")
     terms = postings.groupBy("term").agg(
         F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf")
     )
-    row = docs.agg(F.count("*").alias("n"), F.sum("length").alias("s")).collect()[0]
-    n = int(row["n"]); total = int(row["s"] or 0)
-    stats = {"n_docs": n, "total_len": total, "avgdl": total // n if n else 0,
-             "n_postings": postings.count()}
+    stats = _delta_stats(postings, docs)
+    stats["avgdl"] = _avgdl(stats)
     return postings, docs, terms, stats

@@ -1,0 +1,108 @@
+"""read_table: the schema from one file footer equals parquet schema
+inference, the rows are the same, and reading an index starts no Spark
+job."""
+
+from __future__ import annotations
+
+import os
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from information_retrieval_system_spark.config import EngineConfig
+from information_retrieval_system_spark.index.builder import (
+    build_index, read_index, read_table, write_index)
+from information_retrieval_system_spark.index.compression import (
+    build_block_postings, build_dl_blocks, read_block_index, write_block_index)
+
+#: the write_index layouts: stemmed (term_id assigned before the postings
+#: aggregation), no-stem (term_id attached at write time), positional, and
+#: string doc ids (ranked doc_int) with metadata columns in docs
+LAYOUTS = {
+    "stemmed": dict(cfg=EngineConfig(term_buckets=4)),
+    "no_stem": dict(cfg=EngineConfig(use_stopwords=False, use_stemmer=False,
+                                     term_buckets=4)),
+    "positional": dict(cfg=EngineConfig(term_buckets=4), with_positions=True),
+    "string_ids_meta": dict(cfg=EngineConfig(use_stemmer=False, term_buckets=4),
+                            string_ids=True, meta_cols=["lang", "source"]),
+}
+INDEX_TABLES = ("postings", "docs", "terms", "term_dict")
+
+
+def jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"read-table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def assert_same_table(spark, path):
+    got, ref = read_table(spark, path), spark.read.parquet(path)
+    assert got.schema == ref.schema, path
+    assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty(), path
+
+
+@pytest.fixture(scope="module")
+def written(spark, sf_small, tmp_path_factory):
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
+    out = {}
+    for name, opts in LAYOUTS.items():
+        corpus = docs
+        if opts.get("string_ids"):
+            corpus = docs.withColumn(
+                "doc_id", F.concat(F.lit("d"), F.col("doc_id").cast("string")))
+        ix = build_index(corpus, opts["cfg"], doc_col="doc_id", text_col="text",
+                         with_positions=opts.get("with_positions", False),
+                         meta_cols=opts.get("meta_cols"))
+        out[name] = str(tmp_path_factory.mktemp(name))
+        write_index(ix, out[name], opts["cfg"])
+    return out
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_read_table_equals_inference(spark, written, layout):
+    for table in INDEX_TABLES:
+        assert_same_table(spark, os.path.join(written[layout], table))
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_read_index_starts_no_job(spark, written, layout):
+    ix, n_jobs = jobs_started(spark, lambda: read_index(spark, written[layout]))
+    assert n_jobs == 0
+    for table in INDEX_TABLES:
+        assert getattr(ix, table).schema == spark.read.parquet(
+            os.path.join(written[layout], table)).schema, table
+
+
+def test_read_table_block_index(spark, written, tmp_path):
+    out = str(tmp_path)
+    ix = read_index(spark, written["no_stem"])
+    write_block_index(build_block_postings(ix.postings.drop("bucket"), block_span=128),
+                      build_dl_blocks(ix.docs, block_span=128), out, term_buckets=4)
+    for table in ("blocks", "dl_blocks"):
+        assert_same_table(spark, os.path.join(out, table))
+    (blocks, dl_blocks), n_jobs = jobs_started(
+        spark, lambda: read_block_index(spark, out, keep_bucket=True))
+    assert n_jobs == 0
+    assert blocks.schema == spark.read.parquet(os.path.join(out, "blocks")).schema
+    assert dl_blocks.schema == spark.read.parquet(os.path.join(out, "dl_blocks")).schema
+
+
+def test_read_table_partition_subset(spark, tmp_path):
+    """``partitions`` reads only the named directories and keeps their
+    partition column."""
+    base = str(tmp_path / "t")
+    for b in range(3):
+        spark.createDataFrame([(b, f"r{b}")], "doc_id long, text string").write.parquet(
+            os.path.join(base, f"batch_id={b}"))
+    got = read_table(spark, base, ["batch_id=0", "batch_id=2"])
+    ref = spark.read.parquet(base)
+    assert got.schema == ref.schema
+    assert sorted(got.collect()) == sorted(ref.filter("batch_id != 1").collect())

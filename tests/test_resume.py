@@ -343,3 +343,41 @@ def test_expire_preserves_merge_watermark(spark, tmp_path):
     before = log[-1]["id"]
     assert merge_into_snapshot(spark, root, str(tmp_path / "delta"), cfg) == before
     assert read_snapshot(spark, root).stats["n_docs"] == n_docs
+
+
+def test_replayed_batch_merges_once(spark, tmp_path):
+    """foreachBatch is at-least-once: a micro-batch that was written but
+    not yet recorded in the stream's commit log runs again after a
+    restart, with the same batch_id.  The replay must replace the
+    batch's delta, not add a second copy: after the merge, terms, stats
+    and VSM norms equal a from-scratch build over all docs."""
+    from information_retrieval_system_spark.config import EngineConfig
+    from information_retrieval_system_spark.index.builder import build_index
+    from information_retrieval_system_spark.index.snapshots import (
+        commit_snapshot, read_snapshot)
+    from information_retrieval_system_spark.streaming.incremental import (
+        _process_batch_factory, merge_into_snapshot)
+
+    cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
+        .select("doc_id", "text")
+    root, delta = str(tmp_path / "snaps"), str(tmp_path / "delta")
+    commit_snapshot(
+        build_index(docs.filter("doc_id < 200"), cfg, doc_col="doc_id",
+                    text_col="text", with_positions=False),
+        root, cfg, operation="initial-build")
+    process = _process_batch_factory(delta, cfg, "doc_id", "text")
+    batch = docs.filter("doc_id >= 200")
+    process(batch, 0)
+    process(batch, 0)  # the replay
+    merge_into_snapshot(spark, root, delta, cfg)
+
+    merged = read_snapshot(spark, root)
+    full = build_index(docs, cfg, doc_col="doc_id", text_col="text",
+                       with_positions=False)
+    assert sorted((r.term, r.df, r.cf) for r in merged.terms.collect()) == \
+        sorted((r.term, r.df, r.cf) for r in full.terms.collect())
+    for k in ("n_docs", "avgdl", "total_len", "n_postings"):
+        assert merged.stats[k] == full.stats[k], k
+    assert sorted((r.doc_id, round(r.norm, 6)) for r in merged.docs.collect()) == \
+        sorted((r.doc_id, round(r.norm, 6)) for r in full.docs.collect())

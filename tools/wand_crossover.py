@@ -13,7 +13,9 @@ Two modes:
   aligned, no docs join).  This is WAND's regime and the fair
   serving-vs-serving comparison.
 
-Prints one JSON line.
+Both modes run on ``get_spark``'s host-sized session (``local[CPUs
+this process may use]``); a ``parallelism`` argument overrides the CPU
+count.  Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -193,7 +195,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     from pyspark.sql import functions as F
 
     from information_retrieval_system_spark.index.builder import (
-        IndexTables, read_index, write_index)
+        IndexTables, read_index, read_table, write_index)
     from information_retrieval_system_spark.index.compression import (
         read_block_index, term_buckets_for, write_block_index)
     from information_retrieval_system_spark.sources.zipf import rank_token, zipf_corpus
@@ -233,8 +235,8 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     # postings table (the production shape: the encoder is a separate
     # job reading the postings table, not a continuation of the build
     # lineage), min over reps
-    served_postings = spark.read.parquet(os.path.join(ix_dir, "postings")).drop("bucket")
-    served_docs = spark.read.parquet(os.path.join(ix_dir, "docs"))
+    served_postings = read_table(spark, os.path.join(ix_dir, "postings")).drop("bucket")
+    served_docs = read_table(spark, os.path.join(ix_dir, "docs"))
     t_enc = float("inf")
     for _ in range(max(reps, 1)):
         t0 = time.perf_counter()
@@ -305,17 +307,18 @@ def main_zipf() -> None:
     args = [a for a in sys.argv[2:] if not a.startswith("-")]
     n_docs = int(args[0]) if len(args) > 0 else 2_000_000
     vocab = int(args[1]) if len(args) > 1 else 200_000
-    par = int(args[2]) if len(args) > 2 else 16
-    spark = get_spark("wand-zipf", parallelism=par, shuffle_partitions=64)
+    par = int(args[2]) if len(args) > 2 else None
+    spark = get_spark("wand-zipf", parallelism=par)
     out = run_zipf_crossover(spark, n_docs, vocab)
-    out["parallelism"] = par
+    out["parallelism"] = spark.sparkContext.defaultParallelism
     print(json.dumps(out))
 
 
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 160
-    par = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-    spark = get_spark("wand-crossover", parallelism=par, shuffle_partitions=64)
+    par = int(sys.argv[2]) if len(sys.argv) > 2 else None
+    spark = get_spark("wand-crossover", parallelism=par)
+    par = spark.sparkContext.defaultParallelism
     cfg = EngineConfig()
     docs = expand_documents(
         spark.read.parquet("/root/testdata/sf0.1/documents.parquet"), factor
