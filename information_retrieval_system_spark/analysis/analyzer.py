@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructType
 
 from .porter import stem_series
 from .stopwords import ALL_FILTERED, STOPWORDS
@@ -139,8 +139,20 @@ def analyze_query_string(query: str, use_stopwords: bool = True,
     return out
 
 
+def local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver rows as a local relation, built from a pyarrow Table (a
+    list-built frame is an RDD): collecting or broadcasting it starts
+    no Spark job."""
+    import pyarrow as pa
+
+    st = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(st.names)
+    return spark.createDataFrame(
+        pa.table({n: pa.array(c) for n, c in zip(st.names, cols)}), st)
+
+
 def analyze_query_terms(spark, query: str, cfg) -> DataFrame:
-    """query string -> DataFrame(term, qtf double) — tiny, driver-built."""
+    """query string -> DataFrame(term, qtf double), a local relation."""
     qts = analyze_query_string(query, cfg.use_stopwords, cfg.use_stemmer)
     rows = [(t, float(c)) for t, c in sorted(qts.items())]
-    return spark.createDataFrame(rows, "term string, qtf double")
+    return local_frame(spark, rows, "term string, qtf double")

@@ -34,7 +34,6 @@ class EngineConfig:
     # --- retrieval ----------------------------------------------------
     k1: float = 1.2
     b: float = 0.75
-    retrieval_model: str = "BM25"  # BM25 | VSM | Existential
     model_weight: float = 0.7      # B6 fusion weight for the retrieval score
     pagerank_weight: float = 0.3   # B6 fusion weight for pagerank
 

@@ -82,39 +82,6 @@ def ndcg(ranked: DataFrame, qrels: DataFrame, k: int | None = None) -> DataFrame
     )
 
 
-def precision_recall_mrr(results: DataFrame, qrels: DataFrame, k: int = 5) -> DataFrame:
-    """-> (qid, p_at_k, r_at_k, rr): precision@k, recall@k (vs the
-    query's total relevant count) and reciprocal rank of the FIRST
-    relevant retrieved doc (0 when none) — the remaining classic
-    binary metrics alongside AP/nDCG."""
-    ranked = ranked_with_relevance(results, qrels)
-    bin_rel = (F.col("rel") > 0).cast("int")
-    topk = ranked.filter(F.col("rank") <= k).groupBy("qid").agg(
-        F.sum(bin_rel).alias("hits")
-    )
-    first_rel = ranked.filter(F.col("rel") > 0).groupBy("qid").agg(
-        F.min("rank").alias("first_rank")
-    )
-    totals = qrels.filter(F.col("relevance") > 0).groupBy("qid").agg(
-        F.count("*").alias("n_rel")
-    )
-    base = results.select("qid").distinct()
-    return (
-        base.join(topk, "qid", "left")
-        .join(first_rel, "qid", "left")
-        .join(totals, "qid", "left")
-        .fillna({"hits": 0, "n_rel": 0})
-        .select(
-            "qid",
-            (F.col("hits") / F.lit(float(k))).alias("p_at_k"),
-            F.when(F.col("n_rel") > 0, F.col("hits") / F.col("n_rel"))
-            .otherwise(F.lit(0.0)).alias("r_at_k"),
-            F.when(F.col("first_rank").isNotNull(), F.lit(1.0) / F.col("first_rank"))
-            .otherwise(F.lit(0.0)).alias("rr"),
-        )
-    )
-
-
 def per_query_eval(results: DataFrame, qrels: DataFrame, k: int | None = None) -> DataFrame:
     """-> (qid, ap, ndcg) — the per-query rows underneath ``evaluate``'s
     aggregates (Search_FR.java:1016,1031 records per-query values before

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
-from .builder import read_table
+from .builder import read_table, term_bucket_expr
 
 #: docs per aligned block range (power of two keeps div/mod cheap)
 DEFAULT_BLOCK_SPAN = 1024
@@ -237,7 +237,7 @@ def write_block_index(
     import os
 
     (
-        blocks.withColumn("tbucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"))
+        blocks.withColumn("tbucket", term_bucket_expr(F.col("term"), term_buckets))
         .repartition(term_buckets, "tbucket")
         .sortWithinPartitions("term", "block_id")
         .write.mode("overwrite")
@@ -247,38 +247,19 @@ def write_block_index(
     dl_blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "dl_blocks"))
 
 
-def term_buckets_for(spark, terms: list[str], term_buckets: int) -> list[int]:
-    """The tbucket partitions holding these terms (same xxhash64 as the
-    write side, evaluated by Spark so the hash is bit-identical)."""
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    rows = df.select(
-        F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int").alias("b")
-    ).distinct().collect()
-    return sorted(r.b for r in rows)
-
-
 def read_block_index(
     spark,
     out_dir: str,
-    prune_terms: list[str] | None = None,
-    term_buckets: int | None = None,
     keep_bucket: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Read the serving layout.  With ``prune_terms`` + ``term_buckets``
-    the blocks scan is restricted to the partitions that can contain the
-    query terms — a T-term query touches at most T of the
-    ``term_buckets`` partitions (partition pruning, visible as
-    PartitionFilters in the scan node).  With ``keep_bucket`` the
-    tbucket partition column stays on the frame so a long-lived reader
-    can list the layout ONCE and prune per query with a
-    ``tbucket.isin(...)`` filter (partition pruning still applies at
-    plan time)."""
+    """Read the serving layout, without a Spark job.  With
+    ``keep_bucket`` the tbucket partition column stays on the frame so a
+    long-lived reader lists the layout ONCE and the route prunes per
+    query with a ``tbucket.isin(...)`` filter (partition pruning still
+    applies at plan time)."""
     import os
 
     blocks = read_table(spark, os.path.join(out_dir, "blocks"))
-    if prune_terms is not None and term_buckets:
-        bs = term_buckets_for(spark, prune_terms, term_buckets)
-        blocks = blocks.filter(F.col("tbucket").isin(bs))
     if not keep_bucket:
         blocks = blocks.drop("tbucket")
     dl_blocks = read_table(spark, os.path.join(out_dir, "dl_blocks"))

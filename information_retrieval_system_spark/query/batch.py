@@ -2,11 +2,12 @@
 
 The reference's B2 harness loops 635 queries through the scorer one at a
 time (Search_FR.java:994-1098).  The Spark-native shape scores the entire
-query set set-wise: queries become a (qid, term, qtf) DataFrame, every
-join carries qid along, and the per-query top-k is one window over
-(qid) — no driver loop, one pass over the postings regardless of the
-number of queries.  This is the operator that makes 635 (or 635 000)
-queries cost one scan + two shuffles.
+query set set-wise: queries become a (qid, term, qtf) local relation
+(``queries_to_terms``), the one exhaustive plan ``scoring.bm25_scores``
+carries qid through every join, and ``rank_per_qid`` cuts each query's
+top-k with one window over (qid) — no driver loop, one pass over the
+postings regardless of the number of queries.  The routed form
+(``query/wand.route_batch_bm25``) ends in the same window.
 
 Also here: result-type projections (DocInfo PLAIN/ESSENTIAL/FULL,
 ARetrievalModel_FR.java:42-44 — column-projection levels, SURVEY.md §1.4)
@@ -19,20 +20,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..analysis.analyzer import analyze_query_string, local_frame
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..index.builder import IndexTables
-from .scoring import bm25_term_score, log2c
+from .scoring import bm25_scores
 
 
 def queries_to_terms(spark, queries: list[tuple[int, str]], cfg: EngineConfig) -> DataFrame:
-    """[(qid, text)] -> (qid, term, qtf) via the driver-side analyzer."""
-    from ..analysis.analyzer import analyze_query_string
+    """[(qid, text)] -> (qid, term, qtf), a local relation, via the
+    driver-side analyzer."""
+    rows = [(qid, t, float(c)) for qid, text in queries for t, c in
+            sorted(analyze_query_string(text, cfg.use_stopwords, cfg.use_stemmer).items())]
+    return local_frame(spark, rows, "qid long, term string, qtf double")
 
-    rows = []
-    for qid, text in queries:
-        for t, c in sorted(analyze_query_string(text, cfg.use_stopwords, cfg.use_stemmer).items()):
-            rows.append((qid, t, float(c)))
-    return spark.createDataFrame(rows, "qid long, term string, qtf double")
+
+def rank_per_qid(scores: DataFrame, k: int) -> DataFrame:
+    """(qid, doc_id, score) -> (qid, doc_id, rank, score): each query's
+    top-k under (score DESC, doc_id ASC)."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        scores.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "doc_id", "rank", "score")
+    )
 
 
 def batch_bm25_search(
@@ -45,29 +55,10 @@ def batch_bm25_search(
     """query_terms(qid, term, qtf) -> (qid, doc_id, rank, score) top-k per
     query.  ``qrels(qid, doc_id, relevance)`` restricts each query's
     scoring to its relevance=1 candidates (J4, per-query semi-join)."""
-    n, avgdl = index.stats["n_docs"], float(index.stats["avgdl"])
-    # broadcast the QUERY side and stream the vocabulary (not vice
-    # versa): the build relation stays query-set-sized at any corpus
-    # scale, while broadcast(index.terms) would hash the whole
-    # dictionary per batch (r7; guide §3.1)
-    qt = F.broadcast(query_terms).join(index.terms.select("term", "df"), "term")
-    m = index.postings.join(F.broadcast(qt), "term")
+    cand = None
     if qrels is not None:
         cand = qrels.filter(F.col("relevance") == 1).select("qid", "doc_id")
-        m = m.join(cand, ["qid", "doc_id"], "leftsemi")
-    m = m.join(index.docs.select("doc_id", "length"), "doc_id")
-    scored = m.withColumn(
-        "tscore",
-        bm25_term_score(F.col("tf").cast("double"), F.col("df").cast("double"),
-                        F.col("length").cast("double"), n, avgdl, cfg.k1, cfg.b),
-    )
-    per_doc = scored.groupBy("qid", "doc_id").agg(F.sum("tscore").alias("score"))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "rank", "score")
-    )
+    return rank_per_qid(bm25_scores(index, query_terms, cfg=cfg, candidates=cand), k)
 
 
 def expand_query_terms(

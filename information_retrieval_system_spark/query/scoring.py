@@ -1,16 +1,22 @@
 """Exact ranked retrieval: BM25 / VSM / Existential / B6 fusion.
 
-Query plan shape (SURVEY.md §3 E2), as ``bm25_search`` plans over a
-written index without candidates: ``broadcast(query_terms) ⋈ terms``
-(a scan of the terms table) yields the query-sized (term, df) frame,
-which is broadcast into a scan of ALL postings buckets (no partition
-filter: nothing maps the query terms to ``bucket`` values here) -->
-``⋈ docs`` (length; a broadcast join while docs fit under
-``spark.sql.autoBroadcastJoinThreshold``) --> partial sum per doc -->
-ONE shuffle, ``Exchange hashpartitioning(doc_id)`` --> final sum -->
-``TakeOrderedAndProject(k)`` (per-partition top-k plus a driver-side
-merge of the k-row partials: the bounded-heap pattern, no second
-shuffle).  Candidates add a semi-join on doc_id before the docs join.
+One exhaustive BM25 plan, ``bm25_scores``: every matched doc's score,
+per (qid, doc) when the query frame carries ``qid``.  ``bm25_search``
+cuts it with one global top-k and stays the exhaustive reference that
+the routed path (``query/wand.py``) and the bench are checked against;
+``batch.batch_bm25_search`` and the route cut it with one per-qid window.
+
+Plan shape (SURVEY.md §3 E2) over a written index without candidates:
+``broadcast(query_terms) ⋈ terms`` (a scan of the terms table) yields
+the query-sized (term, df) frame, which is broadcast into a scan of ALL
+postings buckets (no partition filter: nothing maps the query terms to
+``bucket`` values here) --> ``⋈ docs`` (length; a broadcast join while
+docs fit under ``spark.sql.autoBroadcastJoinThreshold``) --> partial sum
+per doc --> ONE shuffle, ``Exchange hashpartitioning([qid,] doc_id)``
+--> final sum.  ``bm25_search`` then plans ``TakeOrderedAndProject(k)``
+(per-partition top-k plus a driver-side merge of the k-row partials, no
+second shuffle).  Candidates add a semi-join on ([qid,] doc_id) before
+the docs join.
 
 Scoring semantics, with reference citations:
 - BM25 (OkapiBM25_FR.java:160,329): ``idf = log2((N - df + 0.5)/(df+0.5))``;
@@ -63,7 +69,8 @@ def bm25_term_score(tf: Column, df: Column, dl: Column, n_docs: int, avgdl: floa
 def _matched(index: IndexTables, query_terms: DataFrame,
              candidates: DataFrame | None) -> DataFrame:
     """query_terms ⋈ terms ⋈ postings [⋈semi candidates]: one row per
-    (term, doc) match, carrying qtf/df/tf.
+    ([qid,] term, doc) match, carrying qtf/df/tf.  Candidates that carry
+    ``qid`` restrict per query when the query frame does too.
 
     The broadcast BUILD side is the query-term set, never the terms
     table: ``broadcast(query_terms) ⋈ terms`` streams the vocabulary
@@ -75,7 +82,8 @@ def _matched(index: IndexTables, query_terms: DataFrame,
     qt = F.broadcast(query_terms).join(index.terms, "term", "inner")
     m = index.postings.join(F.broadcast(qt), "term", "inner")
     if candidates is not None:
-        m = m.join(candidates.select("doc_id"), "doc_id", "leftsemi")
+        keys = [c for c in ("qid", "doc_id") if c in candidates.columns and c in m.columns]
+        m = m.join(candidates.select(*keys), keys, "leftsemi")
     return m
 
 
@@ -100,11 +108,11 @@ def bm25_scores(
     cfg: EngineConfig = DEFAULT_CONFIG,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """-> (doc_id, score) for EVERY matched doc — the pre-cut scoring
-    plan ``bm25_search`` limits.  Feed rollups that aggregate ABOVE the
-    document level (per-repo grouping, score histograms) where a top-k
-    cut before the rollup would be wrong."""
+    """-> ([qid,] doc_id, score) for EVERY matched doc: the one
+    exhaustive BM25 plan, before any top-k cut.  ``qid`` rides along when
+    ``query_terms`` carries it, so one plan scores a whole query set."""
     n, avgdl = index.stats["n_docs"], index.stats["avgdl"]
+    keys = (["qid"] if "qid" in query_terms.columns else []) + ["doc_id"]
     m = _matched(index, query_terms, candidates)
     m = m.join(index.docs.select("doc_id", "length"), "doc_id", "inner")
     scored = m.withColumn(
@@ -112,57 +120,7 @@ def bm25_scores(
         bm25_term_score(F.col("tf").cast("double"), F.col("df").cast("double"),
                         F.col("length").cast("double"), n, float(avgdl), cfg.k1, cfg.b),
     )
-    return scored.groupBy("doc_id").agg(F.sum("tscore").alias("score"))
-
-
-def bm25_search_id_keyed(
-    index: IndexTables,
-    query_terms: DataFrame,
-    k: int = 10,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """BM25 top-k over the dense ``term_id`` dictionary — rank- and
-    score-identical to ``bm25_search``, but every corpus-sized join keys
-    on the 8-byte int64 id and the postings' string column is never
-    read (column pruning drops it at the scan).
-
-    The query side resolves term strings through ONE broadcast of the
-    (term, term_id) dictionary — the DataFrame form of the reference's
-    vocabulary.idx lookup before seeking into postings.idx
-    (Index.java:215-241): the dictionary IS the vocabulary, exploited
-    as a join instead of a per-term binary search.  At 100 TB the
-    postings side shuffles/scans fixed-width ids instead of
-    variable-length strings; the dictionary and term-stats joins stay
-    broadcast (vocabulary-sized)."""
-    if index.term_dict is None:
-        raise ValueError("index carries no term dictionary (term_dict=None)")
-    n, avgdl = index.stats["n_docs"], index.stats["avgdl"]
-    qt = (
-        F.broadcast(query_terms).join(index.term_dict, "term")
-        .join(index.terms, "term")
-        .select("term_id", "df")
-    )
-    p = index.postings
-    if "term_id" not in p.columns:
-        # in-memory no-stem index: postings are string-keyed; attach the
-        # id with one broadcast probe in the same stage as the join below
-        p = p.join(F.broadcast(index.term_dict), "term")
-    m = (
-        p.select("term_id", "doc_id", "tf")
-        .join(F.broadcast(qt), "term_id", "inner")
-        .join(index.docs.select("doc_id", "length"), "doc_id", "inner")
-    )
-    scored = m.withColumn(
-        "tscore",
-        bm25_term_score(F.col("tf").cast("double"), F.col("df").cast("double"),
-                        F.col("length").cast("double"), n, float(avgdl), cfg.k1, cfg.b),
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.sum("tscore").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return scored.groupBy(*keys).agg(F.sum("tscore").alias("score"))
 
 
 def vsm_search(
@@ -291,22 +249,3 @@ def conjunctive_search(
         .orderBy(F.asc("doc_id"))
         .limit(k)
     )
-
-
-MODELS = {
-    "BM25": bm25_search,
-    "VSM": vsm_search,
-    "Existential": existential_search,
-}
-
-
-def search(
-    index: IndexTables,
-    query_terms: DataFrame,
-    k: int = 10,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    candidates: DataFrame | None = None,
-    model: str | None = None,
-) -> DataFrame:
-    fn = MODELS[(model or cfg.retrieval_model)]
-    return fn(index, query_terms, k=k, cfg=cfg, candidates=candidates)

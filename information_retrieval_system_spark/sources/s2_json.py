@@ -128,40 +128,6 @@ def body_expr(e: DataFrame | None = None) -> Column:
     )
 
 
-def string_preparation_expr() -> Column:
-    """T8: the exact per-field ``stringPreparation`` chain
-    (Indexer.java:475-492) — one "Field: value" line per field with \\n
-    REMOVED inside values (not blanked, unlike actions), then the
-    reference's punctuation-removal regex chain, including its quirks:
-
-    * ``[`` is deleted but ``]`` becomes a space (the , . ] class),
-    * ``^[A-Za-z]`` strips the FIRST character when it is a letter —
-      the leading 'T' of "Title: " is eaten.
-
-    The per-char class replace is semantically identical to the
-    reference's ``X*`` form (runs collapse either way) and portable to
-    RE2-based engines where empty-match replacement differs."""
-    def nl0(c: Column) -> Column:
-        return F.regexp_replace(c, "\n", "")
-
-    t = F.concat(
-        F.lit("Title: "), nl0(F.col("title")), F.lit("\n"),
-        F.lit("Abstract: "), nl0(F.col("paperAbstract")), F.lit("\n"),
-        F.lit("Entities: "), nl0(_list_str(F.col("entities"))), F.lit("\n"),
-        F.lit("Fields of study: "), nl0(_list_str(F.col("fieldsOfStudy"))), F.lit("\n"),
-        F.lit("Authors: "), nl0(_authors_str(F.col("authors"))), F.lit("\n"),
-        F.lit("Journal Name: "), nl0(F.col("journalName")), F.lit("\n"),
-        F.lit("Venue: "), nl0(F.col("venue")), F.lit("\n"),
-        F.lit("Sources: "), nl0(_list_str(F.col("sources"))), F.lit("\n"),
-        F.lit("Year: "), F.col("year").cast("string"), F.lit("\n"),
-    )
-    t = F.regexp_replace(t, "[-(=)'!/\"{?}#$%&*+;<>@_^`～~×’|\\\\]", "")
-    t = F.regexp_replace(t, "\\[", "")
-    t = F.regexp_replace(t, "[,.\\]]", " ")
-    t = F.regexp_replace(t, "^[A-Za-z]", "")
-    return t
-
-
 def s2_corpus(spark: SparkSession, path: str) -> DataFrame:
     """-> (doc_id, body, title, year, journalName, venue, ...): the
     index-ready corpus view — feed ``body`` to build_index as text_col."""

@@ -114,45 +114,3 @@ def test_conjunctive_strict_and_contract(spark, sf_small):
             .groupBy("doc_id").agg(F.countDistinct("term").alias("n"))
             .filter("n = 2"))
     assert got == {r.doc_id for r in both.collect()} and got
-
-
-@pytest.mark.parametrize("query", ["spark join merge", "vector stream",
-                                   "zzz_absent_term spark"])
-def test_termdict_bm25_identity(built, spark, query):
-    """The dense term_id dictionary path (bm25_search_id_keyed) must be
-    score- and order-identical to the string-keyed bm25_search — the id
-    encoding is a physical optimization, never a semantic one."""
-    cfg, index, oracle = built
-    qt = analyze_query_terms(spark, query, cfg)
-    a = [(int(r.doc_id), r.score)
-         for r in scoring.bm25_search(index, qt, k=25, cfg=cfg).collect()]
-    b = [(int(r.doc_id), r.score)
-         for r in scoring.bm25_search_id_keyed(index, qt, k=25, cfg=cfg).collect()]
-    assert [d for d, _ in a] == [d for d, _ in b]
-    for (_, sa), (_, sb) in zip(a, b):
-        assert abs(sa - sb) < 1e-12 * max(1.0, abs(sa))
-
-
-def test_termdict_prunes_string_column(built, spark, tmp_path):
-    """Served id-keyed path: the postings scan must NOT read the term
-    string column (ReadSchema pruned to ids) — the byte saving the
-    dictionary exists for."""
-    from information_retrieval_system_spark.index.builder import (
-        read_index, write_index)
-
-    cfg, index, oracle = built
-    out = str(tmp_path / "ix")
-    write_index(index, out, cfg)
-    served = read_index(spark, out)
-    assert served.term_dict is not None
-    qt = analyze_query_terms(spark, "spark join merge", cfg)
-    res = scoring.bm25_search_id_keyed(served, qt, k=10, cfg=cfg)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    # identify the postings parquet scan by its schema (tmp paths get
-    # elided in Location): it must project term_id/doc_id/tf, NOT term
-    schemas = [l.split("ReadSchema:")[-1]
-               for l in plan.splitlines() if "ReadSchema:" in l]
-    post = [s for s in schemas if "tf:" in s]
-    assert post, plan
-    for schema in post:
-        assert "term_id" in schema and "term:" not in schema, schema

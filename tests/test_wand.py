@@ -1,6 +1,10 @@
-"""WAND == exhaustive-scoring equality (prune safety, SURVEY.md §5.5)."""
+"""The one routed BM25 path: WAND == exhaustive scoring (prune safety,
+SURVEY.md §5.5), a batch == its queries run alone, and a planned query
+starts one Spark job."""
 
 from __future__ import annotations
+
+import uuid
 
 import pytest
 
@@ -11,11 +15,15 @@ from information_retrieval_system_spark.index.compression import (
     build_block_postings,
     build_dl_blocks,
     decode_block,
+    read_block_index,
+    write_block_index,
 )
 from information_retrieval_system_spark.query import scoring
-from information_retrieval_system_spark.query.wand import bm25_topk_wand
+from information_retrieval_system_spark.query.batch import queries_to_terms
+from information_retrieval_system_spark.query.wand import route_batch_bm25, route_bm25
 
 SPAN = 128  # small span to exercise multi-block paths on 500 docs
+ALL_WAND = dict(block_span=SPAN, wand_min_postings=0)
 
 
 @pytest.fixture(scope="module")
@@ -27,6 +35,36 @@ def blocked(spark, sf_small):
     dl_blocks = build_dl_blocks(index.docs, block_span=SPAN).cache()
     blocks.count(), dl_blocks.count()
     return cfg, index, blocks, dl_blocks
+
+
+@pytest.fixture(scope="module")
+def served(blocked, spark, tmp_path_factory):
+    """The persisted layout, read with its tbucket partition column."""
+    cfg, index, blocks, dl_blocks = blocked
+    out_dir = str(tmp_path_factory.mktemp("layout"))
+    write_block_index(blocks, dl_blocks, out_dir, term_buckets=8)
+    return read_block_index(spark, out_dir, keep_bucket=True)
+
+
+def jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"wand-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def ranked(res, tol_digits: int = 9):
+    """Per-qid [(doc_id, score)] in rank order of a route_batch_bm25 frame."""
+    got: dict[int, list] = {}
+    for r in sorted(res.collect(), key=lambda r: (r.qid, r.rank)):
+        got.setdefault(r.qid, []).append((r.doc_id, round(r.score, tol_digits)))
+    return got
 
 
 def test_blocks_roundtrip_postings(blocked):
@@ -54,131 +92,80 @@ def test_blocks_roundtrip_postings(blocked):
 def test_wand_equals_exhaustive(blocked, spark, query, k):
     cfg, index, blocks, dl_blocks = blocked
     qt = analyze_query_terms(spark, query, cfg)
-    terms = [r.term for r in qt.collect()]
     exact = [(r.doc_id, r.score) for r in
              scoring.bm25_search(index, qt, k=k, cfg=cfg).collect()]
-    wand = [(r.doc_id, r.score) for r in
-            bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                           terms, k=k, cfg=cfg, block_span=SPAN,
-                           docs=index.docs).collect()]
+    res, route = route_bm25(index, blocks, dl_blocks, qt, k=k, cfg=cfg, **ALL_WAND)
+    wand = [(r.doc_id, r.score) for r in res.collect()]
+    assert route == "wand"
     assert [d for d, _ in wand] == [d for d, _ in exact]
     for (d1, s1), (d2, s2) in zip(wand, exact):
         assert abs(s1 - s2) <= 1e-9 * max(1.0, abs(s2))
 
 
 def test_wand_dl_side_semijoin_pruned(blocked, spark):
-    """With prune_dl on, the dl_blocks side of the cogroup must be
-    restricted to the query's posting block ids (a LeftSemi join in the
-    plan) — without it every query shuffles N/span dl rows,
-    corpus-proportional work.  Results identical either way."""
+    """The dl_blocks side of the cogroup is joined to the query's posting
+    block ids — without it every query would shuffle N/span dl rows,
+    corpus-proportional work."""
     cfg, index, blocks, dl_blocks = blocked
     qt = analyze_query_terms(spark, "spark join merge", cfg)
-    terms = [r.term for r in qt.collect()]
-    out = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                         terms, k=10, cfg=cfg, block_span=SPAN, prune_dl=True)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftSemi" in plan
-    # and the opt-out really opts out
-    out2 = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                          terms, k=10, cfg=cfg, block_span=SPAN, prune_dl=False)
-    assert "LeftSemi" not in out2._jdf.queryExecution().optimizedPlan().toString()
-    assert [(r.doc_int, round(r.score, 9)) for r in out.collect()] == \
-           [(r.doc_int, round(r.score, 9)) for r in out2.collect()]
+    res, _ = route_bm25(index, blocks, dl_blocks, qt, k=10, cfg=cfg, **ALL_WAND)
+    plan = res._jdf.queryExecution().optimizedPlan().toString()
+    assert "(block_id#" in plan and "= _bid#" in plan, plan
+    assert "dls_vb" in plan and "FlatMapCoGroupsInArrow" in plan
 
 
-def test_should_prune_dl_auto_bound():
-    """Auto mode prunes only when Σ df bounds the posting-block
-    footprint well under the corpus block count."""
-    from information_retrieval_system_spark.query.wand import _should_prune_dl
-
-    # 1M docs, span 1024 -> 977 blocks: a 3-rare-term query prunes...
-    assert _should_prune_dl(df_sum=300, n_docs=1_000_000, block_span=1024)
-    # ...a head-term query (df ~ every block) does not
-    assert not _should_prune_dl(df_sum=500_000, n_docs=1_000_000, block_span=1024)
-    # boundary: footprint comparable to block count -> overhead, skip
-    assert not _should_prune_dl(df_sum=600, n_docs=1_000_000, block_span=1024)
-
-
-def test_wand_served_bucket_partition_filter(blocked, spark, tmp_path):
+def test_wand_served_bucket_partition_filter(blocked, served, spark):
     """Through the persisted layout with keep_bucket=True + term_buckets,
-    the blocks scan must carry a tbucket PartitionFilter (the pruned
-    serving read path) and results must match the in-memory path."""
-    from information_retrieval_system_spark.index.compression import (
-        read_block_index, write_block_index)
-
+    the blocks scan carries a tbucket PartitionFilter, and results match
+    the in-memory blocks."""
     cfg, index, blocks, dl_blocks = blocked
-    out_dir = str(tmp_path / "layout")
-    write_block_index(blocks, dl_blocks, out_dir, term_buckets=8)
-    b_all, dlb = read_block_index(spark, out_dir, keep_bucket=True)
+    b_all, dlb = served
     qt = analyze_query_terms(spark, "spark join merge", cfg)
-    terms = [r.term for r in qt.collect()]
-    served = bm25_topk_wand(b_all, dlb, index.terms, index.stats,
-                            terms, k=10, cfg=cfg, block_span=SPAN,
-                            term_buckets=8)
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    res, _ = route_bm25(index, b_all, dlb, qt, k=10, cfg=cfg, term_buckets=8, **ALL_WAND)
+    plan = res._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "tbucket" in plan
-    mem = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                         terms, k=10, cfg=cfg, block_span=SPAN)
-    assert [(r.doc_int, round(r.score, 9)) for r in served.collect()] == \
-           [(r.doc_int, round(r.score, 9)) for r in mem.collect()]
+    mem, _ = route_bm25(index, blocks, dl_blocks, qt, k=10, cfg=cfg, **ALL_WAND)
+    assert [(r.doc_id, round(r.score, 9)) for r in res.collect()] == \
+           [(r.doc_id, round(r.score, 9)) for r in mem.collect()]
 
 
 def test_batch_wand_equals_per_query_loop(blocked, spark):
-    """Batched WAND (one cogroup for the whole query set) must equal
-    the single-query kernel run in a loop — same docs, same scores."""
-    from information_retrieval_system_spark.query.wand import batch_bm25_topk_wand
-
+    """A batch through the WAND route (one cogroup for the whole query
+    set) equals each of its queries run alone — same docs, same scores."""
     cfg, index, blocks, dl_blocks = blocked
-    queries = {}
-    for qid, text in [(1, "spark join merge"), (2, "vector stream"),
-                      (3, "window filter sort batch"), (4, "zzz_absent")]:
-        qt = analyze_query_terms(spark, text, cfg)
-        queries[qid] = [r.term for r in qt.collect()]
-    batch = batch_bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                                 queries, k=7, cfg=cfg, block_span=SPAN)
-    got = {(r.qid, r.rank): (r.doc_int, round(r.score, 9)) for r in batch.collect()}
+    qs = [(1, "spark join merge"), (2, "vector stream"),
+          (3, "window filter sort batch"), (4, "zzz_absent")]
+    res, routes = route_batch_bm25(index, blocks, dl_blocks,
+                                   queries_to_terms(spark, qs, cfg), k=7, cfg=cfg, **ALL_WAND)
+    assert set(routes.values()) == {"wand"}
     want = {}
-    for qid, ts in queries.items():
-        single = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                                ts, k=7, cfg=cfg, block_span=SPAN).collect()
-        for rank, r in enumerate(single, start=1):
-            want[(qid, rank)] = (r.doc_int, round(r.score, 9))
-    assert got == want
-    assert not any(q == 4 for q, _ in got)  # absent-term query yields nothing
+    for qid, text in qs:
+        one, _ = route_bm25(index, blocks, dl_blocks, analyze_query_terms(spark, text, cfg),
+                            k=7, cfg=cfg, **ALL_WAND)
+        rows = [(r.doc_id, round(r.score, 9)) for r in one.collect()]
+        if rows:
+            want[qid] = rows
+    assert ranked(res) == want
+    assert 4 not in want  # absent-term query yields nothing
 
 
-def test_batch_wand_served_bucket_pruned(blocked, spark, tmp_path):
-    """Batched WAND through the persisted layout: tbucket partition
-    filter applies to the UNION of all query terms; results equal the
+def test_batch_wand_served_bucket_pruned(blocked, served, spark):
+    """A batch through the persisted layout: the tbucket partition filter
+    applies to the UNION of the WAND queries' terms; results equal the
     in-memory batch."""
-    from information_retrieval_system_spark.index.compression import (
-        read_block_index, write_block_index)
-    from information_retrieval_system_spark.query.wand import batch_bm25_topk_wand
-
     cfg, index, blocks, dl_blocks = blocked
-    out_dir = str(tmp_path / "layout")
-    write_block_index(blocks, dl_blocks, out_dir, term_buckets=8)
-    b_all, dlb = read_block_index(spark, out_dir, keep_bucket=True)
-    queries = {}
-    for qid, text in [(1, "spark join merge"), (2, "vector stream")]:
-        qt = analyze_query_terms(spark, text, cfg)
-        queries[qid] = [r.term for r in qt.collect()]
-    served = batch_bm25_topk_wand(b_all, dlb, index.terms, index.stats,
-                                  queries, k=5, cfg=cfg, block_span=SPAN,
-                                  term_buckets=8)
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    b_all, dlb = served
+    qt = queries_to_terms(spark, [(1, "spark join merge"), (2, "vector stream")], cfg)
+    res, _ = route_batch_bm25(index, b_all, dlb, qt, k=5, cfg=cfg, term_buckets=8, **ALL_WAND)
+    plan = res._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "tbucket" in plan
-    mem = batch_bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                               queries, k=5, cfg=cfg, block_span=SPAN)
-    key = lambda rs: sorted((r.qid, r.rank, r.doc_int, round(r.score, 9)) for r in rs)
-    assert key(served.collect()) == key(mem.collect())
+    mem, _ = route_batch_bm25(index, blocks, dl_blocks, qt, k=5, cfg=cfg, **ALL_WAND)
+    assert ranked(res) == ranked(mem)
 
 
 def test_route_bm25_flips_on_threshold_value_invisibly(blocked, spark):
     """Routing must pick WAND above the posting-volume threshold and
     exhaustive below — with IDENTICAL top-k values either way."""
-    from information_retrieval_system_spark.query.wand import route_bm25
-
     cfg, index, blocks, dl_blocks = blocked
     qt = analyze_query_terms(spark, "spark join merge", cfg)
     lo, route_lo = route_bm25(index, blocks, dl_blocks, qt, k=10, cfg=cfg,
@@ -197,7 +184,6 @@ def test_route_batch_mixed_routes_equal_unrouted(blocked, spark):
     result frame equal to the unrouted batch oracle — and duplicate
     (qid, term) rows are collapsed on BOTH routes."""
     from information_retrieval_system_spark.query.batch import batch_bm25_search
-    from information_retrieval_system_spark.query.wand import route_batch_bm25
 
     cfg, index, blocks, dl_blocks = blocked
     qt = spark.createDataFrame(
@@ -216,3 +202,36 @@ def test_route_batch_mixed_routes_equal_unrouted(blocked, spark):
     a = sorted((r.qid, r.doc_id, r.rank, round(r.score, 9)) for r in res.collect())
     b = sorted((r.qid, r.doc_id, r.rank, round(r.score, 9)) for r in ref.collect())
     assert a == b and len(a) > 0
+
+
+@pytest.mark.parametrize("text", ["zzz_absent qqq_nothing", "the and or"])
+@pytest.mark.parametrize("wand_min_postings", [0, 10**9])
+def test_route_empty_queries(blocked, spark, text, wand_min_postings):
+    """An absent-term query and an all-stopword query return no rows
+    through both adapters, on either route."""
+    cfg, index, blocks, dl_blocks = blocked
+    kw = dict(k=10, cfg=cfg, block_span=SPAN, wand_min_postings=wand_min_postings)
+    one, _ = route_bm25(index, blocks, dl_blocks, analyze_query_terms(spark, text, cfg), **kw)
+    assert one.collect() == []
+    batch, _ = route_batch_bm25(index, blocks, dl_blocks,
+                                queries_to_terms(spark, [(7, text)], cfg), **kw)
+    assert batch.collect() == []
+    assert scoring.bm25_search(index, analyze_query_terms(spark, text, cfg),
+                               k=10, cfg=cfg).collect() == []
+
+
+@pytest.mark.parametrize("wand_min_postings", [0, 10**9])
+def test_planning_a_query_starts_one_job(blocked, served, spark, wand_min_postings):
+    """The query side is driver data: the frames of analyze_query_terms and
+    queries_to_terms collect with no Spark job, and planning a routed
+    query starts exactly one, the term-stats collect."""
+    cfg, index, blocks, dl_blocks = blocked
+    b_all, dlb = served
+    qt = analyze_query_terms(spark, "spark join merge", cfg)
+    assert jobs_started(spark, qt.collect)[1] == 0
+    assert jobs_started(spark, queries_to_terms(spark, [(1, "vector stream")], cfg).collect)[1] == 0
+    (res, _), n_jobs = jobs_started(spark, lambda: route_bm25(
+        index, b_all, dlb, qt, k=10, cfg=cfg, block_span=SPAN, term_buckets=8,
+        wand_min_postings=wand_min_postings))
+    assert n_jobs == 1
+    assert len(res.collect()) == 10

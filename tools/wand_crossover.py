@@ -7,9 +7,10 @@ Two modes:
   regime where WAND CANNOT win, kept as the honest negative control).
 - ``--zipf [n_docs] [vocab] [parallelism]``: deterministic Zipf corpus
   (sources/zipf.py — realistic term distribution, selective tails),
-  BOTH paths served from their persisted layouts with term-bucket
-  partition pruning: exhaustive reads the bucketed postings parquet and
-  joins docs for dl; WAND reads the compressed block layout (dl blocks
+  BOTH routes of ``route_bm25`` served from the persisted layouts, the
+  threshold forcing one route or the other: exhaustive reads the
+  postings parquet and joins docs for dl; WAND reads the compressed
+  block layout with its term-bucket partition filter (dl blocks
   aligned, no docs join).  This is WAND's regime and the fair
   serving-vs-serving comparison.
 
@@ -28,7 +29,7 @@ import time
 
 sys.path.insert(0, ".")
 
-from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
+from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms, local_frame
 from information_retrieval_system_spark.config import EngineConfig
 from information_retrieval_system_spark.index.builder import build_index
 from information_retrieval_system_spark.index.compression import (
@@ -36,7 +37,7 @@ from information_retrieval_system_spark.index.compression import (
     build_dl_blocks,
 )
 from information_retrieval_system_spark.query import scoring
-from information_retrieval_system_spark.query.wand import bm25_topk_wand
+from information_retrieval_system_spark.query.wand import route_batch_bm25, route_bm25
 from information_retrieval_system_spark.session import get_spark
 from information_retrieval_system_spark.sources.corpus import expand_documents
 
@@ -93,15 +94,12 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
     """
     from pyspark.sql import functions as F
 
-    from information_retrieval_system_spark.query.wand import (
-        route_batch_bm25, route_bm25)
-
     cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
     queries = batch_zipf_queries(vocab, n_queries)
 
     def batch_df(qids):
         rows = [(q, t, 1.0) for q in qids for t in queries[q]]
-        return spark.createDataFrame(rows, "qid long, term string, qtf double")
+        return local_frame(spark, rows, "qid long, term string, qtf double")
 
     # warm both paths (JIT, codegen, python worker pool)
     route_batch_bm25(six, b_all, dlb_served, batch_df(range(4)), k=k,
@@ -192,12 +190,10 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     Returns the result dict."""
     import os
 
-    from pyspark.sql import functions as F
-
     from information_retrieval_system_spark.index.builder import (
-        IndexTables, read_index, read_table, write_index)
+        read_index, read_table, write_index)
     from information_retrieval_system_spark.index.compression import (
-        read_block_index, term_buckets_for, write_block_index)
+        read_block_index, write_block_index)
     from information_retrieval_system_spark.sources.zipf import rank_token, zipf_corpus
 
     cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
@@ -254,38 +250,25 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     six.terms.cache().count()
     six.docs.cache().count()
 
-    def exhaustive(Q, qt):
-        bs = term_buckets_for(spark, Q, cfg.term_buckets)
-        p = (six.postings.filter(F.col("bucket").isin(bs))
-             .filter(F.col("term").isin(Q)).drop("bucket"))
-        ixq = IndexTables(postings=p, docs=six.docs, terms=six.terms, stats=six.stats)
-        return scoring.bm25_search(ixq, qt, k=k, cfg=cfg).collect()
-
-    # integer doc ids (stats flag): doc_int == doc_id, so WAND skips the
-    # final mapping join — the compressed layout's one denormalization gap
-    wand_docs = None if six.stats.get("int_doc_ids") else six.docs
-    # list the layout ONCE (symmetric with six.postings on the exhaustive
-    # side); per-query pruning (tbucket partition filter + dl semi-join)
-    # happens inside bm25_topk_wand — one driver job per query, not two
+    # list the layout ONCE; the route prunes per query (tbucket partition
+    # filter, dl side joined to the query's block ids)
     b_all, dlb_served = read_block_index(spark, bl_dir, keep_bucket=True)
 
-    def wand(Q):
-        out = bm25_topk_wand(b_all, dlb_served, six.terms, six.stats, Q, k=k, cfg=cfg,
-                             block_span=block_span, docs=wand_docs,
-                             term_buckets=term_buckets)
-        if wand_docs is None:
-            out = out.select(F.col("doc_int").alias("doc_id"), "doc_int", "score")
-        return out.collect()
+    def routed(qt, wand_min_postings):
+        res, _ = route_bm25(six, b_all, dlb_served, qt, k=k, cfg=cfg,
+                            block_span=block_span, term_buckets=term_buckets,
+                            wand_min_postings=wand_min_postings)
+        return res.collect()
 
     out["queries"] = {}
     for ranks in zipf_query_ranks(vocab):
-        Q = [rank_token(r) for r in ranks]
-        qt = spark.createDataFrame([(t, 1.0) for t in Q], "term string, qtf double")
-        exhaustive(Q, qt); wand(Q)  # warm both paths (JIT, python pool)
+        qt = local_frame(spark, [(rank_token(r), 1.0) for r in ranks],
+                         "term string, qtf double")
+        routed(qt, 10**18); routed(qt, 0)  # warm both routes (JIT, python pool)
         t_ex = t_wd = float("inf")
         for _ in range(reps):
-            t0 = time.perf_counter(); ex = exhaustive(Q, qt); t_ex = min(t_ex, time.perf_counter() - t0)
-            t0 = time.perf_counter(); wd = wand(Q); t_wd = min(t_wd, time.perf_counter() - t0)
+            t0 = time.perf_counter(); ex = routed(qt, 10**18); t_ex = min(t_ex, time.perf_counter() - t0)
+            t0 = time.perf_counter(); wd = routed(qt, 0); t_wd = min(t_wd, time.perf_counter() - t0)
         same = ([(r.doc_id, round(r.score, 6)) for r in ex]
                 == [(r.doc_id, round(r.score, 6)) for r in wd])
         out["queries"]["+".join(map(str, ranks))] = {
@@ -334,18 +317,21 @@ def main() -> None:
     out = {"n_docs": n, "parallelism": par, "queries": {}}
     for q in queries:
         qt = analyze_query_terms(spark, q, cfg)
-        terms = [r.term for r in qt.collect()]
+
+        def wand():
+            return route_bm25(ix, blocks, dlb, qt, k=20, cfg=cfg,
+                              wand_min_postings=0)[0].collect()
+
         # warm both paths once, then measure
         scoring.bm25_search(ix, qt, k=20, cfg=cfg).collect()
-        bm25_topk_wand(blocks, dlb, ix.terms, ix.stats, terms, k=20, cfg=cfg).collect()
+        wand()
         t0 = time.perf_counter()
         exact = scoring.bm25_search(ix, qt, k=20, cfg=cfg).collect()
         t_exact = time.perf_counter() - t0
         t0 = time.perf_counter()
-        wand = bm25_topk_wand(blocks, dlb, ix.terms, ix.stats, terms, k=20, cfg=cfg,
-                              docs=ix.docs).collect()
+        got = wand()
         t_wand = time.perf_counter() - t0
-        same = [r.doc_id for r in wand] == [r.doc_id for r in exact]
+        same = [r.doc_id for r in got] == [r.doc_id for r in exact]
         out["queries"][q] = {"exact_sec": round(t_exact, 3),
                              "wand_sec": round(t_wand, 3),
                              "identical_topk": same}
