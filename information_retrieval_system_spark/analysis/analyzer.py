@@ -68,51 +68,23 @@ def stopword_filter_condition(term: Column, include_operators: bool = True) -> C
     return ~term.isin(*sorted(words))
 
 
-def tokenize(
-    df: DataFrame,
-    text_col: str,
-    id_cols: list[str],
-    with_positions: bool = True,
-) -> DataFrame:
-    """Explode ``df[text_col]`` into one row per token.
-
-    Returns id_cols + (``pos`` int, ``token`` string).  ``pos`` is the
-    0-based pre-filter token position (positions survive stop/stem
-    filtering with gaps, like a positional index should).
-    """
-    arr = tokens_array_expr(F.col(text_col))
-    cols = [F.col(c) for c in id_cols]
-    if with_positions:
-        ex = F.posexplode(arr).alias("pos", "token")
-        return df.select(*cols, arr.alias("_toks")).select(
-            *[F.col(c) for c in id_cols], F.posexplode(F.col("_toks")).alias("pos", "token")
-        )
-    return df.select(*cols, F.explode(arr).alias("token"))
-
-
 def analyze_tokens(
     df: DataFrame,
     text_col: str,
     id_cols: list[str],
     use_stopwords: bool = True,
     use_stemmer: bool = True,
-    stem_via_join: bool = True,
 ) -> DataFrame:
-    """Full T2-T7 pipeline: id_cols + (pos, term).
-
-    ``stem_via_join=True`` stems the distinct token set once and joins it
-    back (broadcast when small — Catalyst decides via AQE); ``False``
-    stems the raw token stream (simpler plan, used for tiny query-side
-    inputs).
-    """
-    toks = tokenize(df, text_col, id_cols)
+    """Full T2-T7 pipeline: id_cols + (pos, term), one row per kept
+    token; ``pos`` is the 0-based pre-filter token position.  The stem
+    runs on the token stream (the index build stems its distinct token
+    set instead, ``index.builder``)."""
+    toks = df.select(*[F.col(c) for c in id_cols],
+                     F.posexplode(tokens_array_expr(F.col(text_col))).alias("pos", "token"))
     if use_stopwords:
         toks = toks.filter(stopword_filter_condition(F.col("token")))
     if not use_stemmer:
         return toks.withColumnRenamed("token", "term")
-    if stem_via_join:
-        stems = toks.select("token").distinct().withColumn("term", porter_stem_udf("token"))
-        return toks.join(F.broadcast(stems), "token", "inner").drop("token")
     return toks.withColumn("term", porter_stem_udf("token")).drop("token")
 
 

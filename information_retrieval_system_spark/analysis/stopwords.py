@@ -69,11 +69,3 @@ OPERATOR_WORDS: frozenset[str] = frozenset(("and", "or", "not"))
 
 #: the set actually applied in the analyzer hot path
 ALL_FILTERED: frozenset[str] = STOPWORDS | OPERATOR_WORDS
-
-
-def is_stopword(word: str) -> bool:
-    return word.lower() in STOPWORDS
-
-
-def is_operator_word(word: str) -> bool:
-    return word.lower() in OPERATOR_WORDS

@@ -40,15 +40,10 @@ class IndexTables:
     docs; meta.idx -> stats.
     """
 
-    postings: DataFrame  # term_id, term, doc_id, doc_int, tf, positions
+    postings: DataFrame  # term, doc_id, doc_int, tf
     docs: DataFrame      # doc_id, doc_int, length, norm, pagerank
     terms: DataFrame     # term, df, cf
     stats: dict          # n_docs, avgdl (floored long), n_postings, total_len
-    # (term, term_id): dense int64 dictionary in sorted term order —
-    # vocabulary.idx's implicit positional rank as a broadcastable
-    # column.  None for index views built outside build_index (e.g.
-    # streaming delta unions); string-keyed paths never need it.
-    term_dict: DataFrame | None = None
 
 
 def assign_dense_ids(
@@ -70,10 +65,8 @@ def assign_dense_ids(
     ``offset[pid] + local_rank`` IS the global rank of the (unique) key.
 
     Used for doc ids (``assign_doc_ints`` — the ingestion counter,
-    Indexer.java:630-632, made order-independent) and for the term
-    dictionary (``term_id`` — the positional rank the reference's sorted
-    vocabulary.idx implies, Index.java:215-241, materialized as a
-    column so the postings shuffle can carry ints instead of strings).
+    Indexer.java:630-632, made order-independent) and for the stemmed
+    build's in-memory ``term_id`` aggregation key.
     """
     spark = df.sparkSession
     if num_ranges is None:
@@ -120,7 +113,7 @@ def build_index(
     cfg: EngineConfig = DEFAULT_CONFIG,
     doc_col: str = "doc_id",
     text_col: str = "content",
-    with_positions: bool = True,
+    with_positions: bool = False,
     meta_cols: list[str] | None = None,
 ) -> IndexTables:
     """corpus(doc_col, text_col, ...) -> IndexTables.
@@ -133,8 +126,13 @@ def build_index(
     title/authors/year/journal alongside the scoring fields,
     DocInfoFull.java:34-94; here any metadata column rides along the same
     way).  They are joined in at the end from a slim projection, so the
-    tokenize/stage path never carries them."""
-    spark = corpus.sparkSession
+    tokenize/stage path never carries them.
+
+    Postings hold no positions, as the reference's hold none
+    (Index.java:230-235).  ``with_positions`` stays only because the
+    ``irbench`` workloads pass ``with_positions=False``; ``True`` raises."""
+    if with_positions:
+        raise ValueError("positional postings are not supported")
 
     slim_corpus = corpus.select(F.col(doc_col).alias("doc_id"), F.col(text_col).alias("content"))
     doc_type = dict(slim_corpus.dtypes)["doc_id"]
@@ -171,56 +169,27 @@ def build_index(
         "doc_id", "doc_int", F.size("_arr").alias("length")
     ).cache()
 
-    tokens = pre.select(
-        "doc_id", "doc_int", F.posexplode("_arr").alias("pos", "token")
-    )
+    tokens = pre.select("doc_id", "doc_int", F.explode("_arr").alias("token"))
     if cfg.use_stopwords:
         tokens = tokens.filter(stopword_filter_condition(F.col("token")))
 
-    # --- term dictionary (dense int64 term_id) ------------------------
-    # Every build assigns a dense dictionary — rank 1..V over the sorted
-    # distinct TERM set (the positional rank the reference's sorted
-    # vocabulary.idx implies, Index.java:215-241), via the same
-    # two-phase parallel ranking as doc_int — but WHERE it is built
-    # depends on whether it pays for itself (A/B-measured, BENCH.md r6):
-    #
-    # - STEMMED build: dictionary FIRST, from the distinct token set
-    #   (map-side partial distinct shuffles per-partition vocabularies,
-    #   not the token stream), stemmed ONCE, then token -> term_id
-    #   broadcast into the stream.  The corpus-sized aggregation then
-    #   keys on (term_id int64, doc int64) — fixed 8-byte keys instead
-    #   of strings — AND the stem-variant collapse folds into the SAME
-    #   aggregation (variants share a term_id), so the stemmed build
-    #   does ONE corpus shuffle where it previously did two, and the
-    #   corpus-sized tok_doc disk staging disappears entirely.  The
-    #   extra distinct pass is paid for by the eliminated shuffle.
-    #
-    # - NO-STEM build: there is no second shuffle to eliminate, and the
-    #   interleaved A/B at 600k docs measured every pre-/post-shuffle
-    #   id-attachment variant as a 15-45% build slowdown (an extra
-    #   token-stream pass, or an extra broadcast-probe pass over the
-    #   31M-row postings cache per consumer).  So the single
-    #   string-keyed aggregation stays EXACTLY as before; the
-    #   dictionary derives from the vocabulary-sized ``terms`` table
-    #   (near-free), and term_id attaches lazily — inside write_index's
-    #   write plan and inside id-keyed serving — where the broadcast
-    #   probe rides an existing pass instead of adding one.
-    #
-    # Either way: the dictionary is broadcastable, the WRITTEN layout
-    # carries term_id, id-keyed serving works identically.
-    agg1 = [F.count("*").cast("int").alias("tf")]
-    if with_positions:
-        agg1.append(F.sort_array(F.collect_list("pos")).alias("positions"))
-
+    # The stemmed build stems the distinct token set once and ranks the
+    # stems to a dense in-memory ``term_id``: the corpus aggregation then
+    # keys on (term_id, doc) — fixed 8-byte keys — and the stem-variant
+    # collapse folds into that same aggregation (variants share a
+    # term_id), so the build does one corpus shuffle instead of two
+    # (A/B-measured, BENCH.md r6).  The no-stem build has no second
+    # shuffle to save and aggregates on the string term.
+    tf = F.count("*").cast("int").alias("tf")
     if cfg.use_stemmer:
         vocab = tokens.select("token").distinct().withColumn(
             "term", porter_stem_udf("token")
         )
-        # cached: build joins it twice, id-keyed queries broadcast it
-        term_dict = assign_dense_ids(
+        # cached: the build joins it twice
+        stem_ids = assign_dense_ids(
             vocab.select("term").distinct(), "term", "term_id"
         ).cache()
-        tok2id = vocab.join(F.broadcast(term_dict), "term").select("token", "term_id")
+        tok2id = vocab.join(F.broadcast(stem_ids), "term").select("token", "term_id")
         # A1 (both levels in one agg): tf per (term_id, doc) — Catalyst
         # partial+final hash agg (the map-side combine IS the salted
         # pre-aggregation for the tf metric: the reduce key never
@@ -230,11 +199,10 @@ def build_index(
         postings = (
             tokens.join(F.broadcast(tok2id), "token", "inner")
             .groupBy("term_id", "doc_id", "doc_int")
-            .agg(*agg1)
+            .agg(tf)
             # re-attach the string post-agg: BroadcastHashJoin in the
-            # same stage — zero extra shuffle, keeps every string-keyed
-            # consumer (scoring, WAND, compression) source-compatible
-            .join(F.broadcast(term_dict), "term_id")
+            # same stage, zero extra shuffle
+            .join(F.broadcast(stem_ids), "term_id")
         ).cache()
         # A3: df/cf per term — keyed by term_id (fixed-width int agg),
         # string attached from the broadcast dictionary.  Cached: every
@@ -243,23 +211,19 @@ def build_index(
             F.count("*").cast("long").alias("df"),
             F.sum("tf").cast("long").alias("cf"),
         ).cache()
-        terms = tstats.join(F.broadcast(term_dict), "term_id").select(
+        terms = tstats.join(F.broadcast(stem_ids), "term_id").select(
             "term", "df", "cf"
         ).cache()
         norm_key, norm_stats = "term_id", tstats.select("term_id", "df")
     else:
         postings = (
-            tokens.groupBy("token", "doc_id", "doc_int").agg(*agg1)
+            tokens.groupBy("token", "doc_id", "doc_int").agg(tf)
             .withColumnRenamed("token", "term")
         ).cache()
-        # A3 on the string key (unchanged plan), then rank the
-        # vocabulary-sized terms table for the dictionary
+        # A3 on the string key
         terms = postings.groupBy("term").agg(
             F.count("*").cast("long").alias("df"),
             F.sum("tf").cast("long").alias("cf"),
-        ).cache()
-        term_dict = assign_dense_ids(
-            terms.select("term"), "term", "term_id"
         ).cache()
         norm_key, norm_stats = "term", terms.select("term", "df")
 
@@ -278,25 +242,8 @@ def build_index(
     n_postings = int(terms.agg(F.sum("df")).collect()[0][0] or 0)
     avgdl = total_len // n_docs if n_docs else 0
 
-    # A5: VSM norms — second pass over postings, idf uses the reference's
-    # Java-int floor division (N+1)/df (Index.java:371). Stored SQUARED,
-    # exactly like documents.idx offset+48 (Index.java:385).
-    log2 = math.log(2.0)
-    norm_df = (
-        postings.join(F.broadcast(norm_stats), norm_key)
-        .withColumn(
-            "w", F.col("tf") * F.log(F.floor(F.lit(n_docs + 1) / F.col("df")).cast("double")) / F.lit(log2)
-        )
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("w") * F.col("w")).alias("norm"))
-    )
-
     # Cached: the norm aggregation must not rerun per query.
-    docs = (
-        docs_slim.join(norm_df, "doc_id", "left")
-        .withColumn("norm", F.coalesce(F.col("norm"), F.lit(0.0)))
-        .withColumn("pagerank", F.lit(0.0))
-    )
+    docs = with_vsm_norms(docs_slim, postings, norm_stats, norm_key, n_docs)
     if meta_cols:
         meta = corpus.select(F.col(doc_col).alias("doc_id"), *meta_cols)
         docs = docs.join(meta, "doc_id", "left")
@@ -311,8 +258,31 @@ def build_index(
         # skip the final doc_int -> doc_id mapping join entirely
         "int_doc_ids": doc_type in ("tinyint", "smallint", "int", "bigint"),
     }
-    return IndexTables(postings=postings, docs=docs, terms=terms, stats=stats,
-                       term_dict=term_dict)
+    # the stemmed build's term_id stays in memory
+    postings = postings.select("term", "doc_id", "doc_int", "tf")
+    return IndexTables(postings=postings, docs=docs, terms=terms, stats=stats)
+
+
+def with_vsm_norms(docs: DataFrame, postings: DataFrame, term_df: DataFrame,
+                   key: str, n_docs: int) -> DataFrame:
+    """A5: ``docs`` plus its VSM ``norm`` (0.0 for a doc with no posting)
+    and ``pagerank`` 0.0.  The norm is a second pass over ``postings``
+    joined to ``term_df`` (``key``, df); idf uses the reference's
+    Java-int floor division (N+1)/df (Index.java:371), and the norm is
+    stored SQUARED, exactly like documents.idx offset+48
+    (Index.java:385)."""
+    idf = F.log(F.floor(F.lit(n_docs + 1) / F.col("df")).cast("double")) / F.lit(math.log(2.0))
+    norms = (
+        postings.join(F.broadcast(term_df), key)
+        .withColumn("w", F.col("tf") * idf)
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("w") * F.col("w")).alias("norm"))
+    )
+    return (
+        docs.join(norms, "doc_id", "left")
+        .withColumn("norm", F.coalesce(F.col("norm"), F.lit(0.0)))
+        .withColumn("pagerank", F.lit(0.0))
+    )
 
 
 def term_bucket_expr(term, n_buckets: int):
@@ -334,21 +304,11 @@ def write_index(
     - ``postings/`` partitioned by ``bucket`` = hash(term) % term_buckets,
       sorted within partitions by (term, doc_int) — the columnar
       equivalent of the reference's vocabulary-ordered postings file.
-      Carries ``term_id`` when the build assigned a dictionary (parquet
-      dictionary-encodes the redundant string column to near-nothing on
-      disk; the id column is what id-keyed serving joins on).
-    - ``docs/``, ``terms/``, ``term_dict/`` (when present), ``stats.json``.
+    - ``docs/``, ``terms/``, ``stats.json``.
     """
     os.makedirs(out_dir, exist_ok=True)
-    p = tables.postings
-    if tables.term_dict is not None and "term_id" not in p.columns:
-        # no-stem builds keep in-memory postings string-keyed (A/B: an
-        # eager id-attach pass costs more than it saves there); the id
-        # lands in the LAYOUT here, where the broadcast probe rides the
-        # write plan's existing repartition pass for free
-        p = p.join(F.broadcast(tables.term_dict), "term")
     (
-        p.withColumn("bucket", term_bucket_expr(F.col("term"), cfg.term_buckets))
+        tables.postings.withColumn("bucket", term_bucket_expr(F.col("term"), cfg.term_buckets))
         .repartition(cfg.term_buckets, "bucket")
         .sortWithinPartitions("term", "doc_int")
         .write.mode("overwrite")
@@ -357,9 +317,6 @@ def write_index(
     )
     tables.docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
     tables.terms.write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
-    if tables.term_dict is not None:
-        tables.term_dict.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "term_dict"))
     with open(os.path.join(out_dir, "stats.json"), "w") as f:
         json.dump(tables.stats, f, indent=2)
 
@@ -413,7 +370,4 @@ def read_index(spark: SparkSession, out_dir: str) -> IndexTables:
     terms = read_table(spark, os.path.join(out_dir, "terms"))
     with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
-    td_dir = os.path.join(out_dir, "term_dict")
-    term_dict = read_table(spark, td_dir) if os.path.isdir(td_dir) else None
-    return IndexTables(postings=postings, docs=docs, terms=terms, stats=stats,
-                       term_dict=term_dict)
+    return IndexTables(postings=postings, docs=docs, terms=terms, stats=stats)

@@ -27,7 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
 from .builder import read_table, term_bucket_expr
 
 #: docs per aligned block range (power of two keeps div/mod cheap)

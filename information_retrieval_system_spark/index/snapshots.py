@@ -14,7 +14,7 @@ call sites would swap to real Iceberg commits unchanged):
   so concurrent readers of any older snapshot are unaffected.
 
 Lineage is the parent chain; per-snapshot ``note``/``operation`` record
-WHY a snapshot exists (initial build, streaming compaction, delete,
+WHY a snapshot exists (initial build, streaming merge, delete,
 re-crawl) — the audit trail a production index needs.
 """
 
@@ -206,10 +206,11 @@ def expire_snapshots(root: str, keep_last: int = 2) -> list[int]:
             kept_log.append(e)
         # merge_into_snapshot's delta watermark is max(merge_watermark)
         # over log ENTRIES; if the only entries carrying it are being
-        # expired (e.g. compaction commits landed after the last merge),
-        # the rewritten log would reset it to -1 and the next merge
-        # would re-consume every already-merged delta batch.  Carry the
-        # expired maximum onto the oldest retained entry.
+        # expired (e.g. plain commit_snapshot commits, such as a re-crawl,
+        # landed after the last merge), the rewritten log would reset it
+        # to -1 and the next merge would re-consume every already-merged
+        # delta batch.  Carry the expired maximum onto the oldest
+        # retained entry.
         expired_wm = max((e.get("merge_watermark", -1) for e in expired),
                          default=-1)
         kept_wm = max((e.get("merge_watermark", -1) for e in kept_log),

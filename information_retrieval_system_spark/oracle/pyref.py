@@ -51,14 +51,12 @@ def analyze(text: str, use_stopwords: bool = True, use_stemmer: bool = True):
 class OracleIndex:
     def __init__(self, docs: dict[str, str], use_stopwords=True, use_stemmer=True):
         self.postings: dict[str, dict[str, int]] = defaultdict(dict)
-        self.positions: dict[tuple[str, str], list[int]] = defaultdict(list)
         self.dl: dict[str, int] = {}
         for doc_id, text in docs.items():
             terms, dl = analyze(text, use_stopwords, use_stemmer)
             self.dl[doc_id] = dl
-            for pos, t in terms:
+            for _, t in terms:
                 self.postings[t][doc_id] = self.postings[t].get(doc_id, 0) + 1
-                self.positions[(t, doc_id)].append(pos)
         self.n = len(docs)
         self.avgdl = (sum(self.dl.values()) // self.n) if self.n else 0
         self.df = {t: len(pl) for t, pl in self.postings.items()}

@@ -217,35 +217,3 @@ def batch_fuse_with_pagerank(
             + F.lit(cfg.pagerank_weight) * F.col("pagerank") / F.col("_z")
         ).alias("score"),
     )
-
-
-def conjunctive_search(
-    index: IndexTables,
-    query_terms: DataFrame,
-    k: int = 10,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Boolean AND retrieval: docs containing EVERY query term (that
-    exists in the vocabulary — absent terms make the result empty, the
-    strict-AND convention), scored 1.0.  The posting-list intersection
-    is one groupBy counting distinct matched terms per doc — no
-    iterative list-merge, and skew-capped like any count aggregate.
-
-    Strict-AND emptiness is decided IN-PLAN (r5 verdict #6): the
-    REQUIRED distinct-term count (absent terms included) rides the plan
-    as a 1-row broadcast, and docs keep only when matched == required —
-    a doc cannot match an absent term, so any absent term empties the
-    result by arithmetic.  No per-query driver round-trip."""
-    need = query_terms.select("term").distinct().agg(
-        F.count("*").alias("_need"))
-    m = _matched(index, query_terms, candidates)
-    return (
-        m.groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("_nt"))
-        .join(F.broadcast(need))  # 1-row scalar rides the plan
-        .filter(F.col("_nt") == F.col("_need"))
-        .select("doc_id", F.lit(1.0).alias("score"))
-        .orderBy(F.asc("doc_id"))
-        .limit(k)
-    )

@@ -11,10 +11,11 @@ marker.  Both writes overwrite their directory, so a batch that Spark
 replays after a crash (``foreachBatch`` is at-least-once) replaces its
 own output instead of adding a second copy.  Because a document arrives
 exactly once, per-batch (term, doc) aggregates are disjoint across
-batches — the merged view is a pure union, and global stats (df, N,
-avgdl) are re-derived by one aggregation over the union (the streaming
-analog of the reference's merge cascade, which Spark's shuffle already
-replaced in batch mode).
+batches.  ``merge_into_snapshot`` is the one commit path: it unions the
+current snapshot with the new batches, re-derives the global stats (df,
+N, avgdl) by one aggregation over the union (the streaming analog of the
+reference's merge cascade, which Spark's shuffle already replaced in
+batch mode) and commits the result as a new snapshot.
 
 ``trigger(availableNow=True)`` drains everything pending then stops —
 the cron-style incremental build; remove it for continuous mode.
@@ -22,14 +23,13 @@ the cron-style incremental build; remove it for continuous mode.
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analysis.analyzer import analyze_tokens, doc_length_expr
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..index.builder import IndexTables, read_table
+from ..index.builder import IndexTables, read_table, with_vsm_norms
 
 CORPUS_STREAM_SCHEMA = "doc_id long, text string"
 
@@ -46,10 +46,6 @@ def _process_batch_factory(out_dir: str, cfg: EngineConfig,
         toks = analyze_tokens(
             docs, "content", ["doc_id"],
             use_stopwords=cfg.use_stopwords, use_stemmer=cfg.use_stemmer,
-            # micro-batches are small: the direct Arrow stem UDF beats the
-            # distinct+broadcast-join plan (which pays an extra shuffle
-            # that only amortizes on large batch sizes)
-            stem_via_join=False,
         )
         postings = toks.groupBy("term", "doc_id").agg(F.count("*").cast("int").alias("tf"))
         part = f"batch_id={batch_id}"
@@ -90,26 +86,6 @@ def incremental_index_stream(
     return writer.start()
 
 
-def compact_to_snapshot(spark: SparkSession, delta_dir: str, snapshot_root: str,
-                        cfg: EngineConfig = DEFAULT_CONFIG,
-                        note: str = "") -> int:
-    """Compaction committed as an immutable SNAPSHOT (operation
-    "compaction" in the lineage log): the streaming deltas become a new
-    version of the serving index without disturbing any prior snapshot
-    a reader may hold.  Returns the snapshot id."""
-    from ..index.snapshots import commit_snapshot
-
-    postings = read_table(spark, os.path.join(delta_dir, "postings_delta")).drop("batch_id")
-    docs = read_table(spark, os.path.join(delta_dir, "docs_delta")).drop("batch_id")
-    tables, cached = _tables_from_view(postings, docs, _delta_stats(postings, docs))
-    try:
-        return commit_snapshot(tables, snapshot_root, cfg,
-                               operation="compaction", note=note)
-    finally:
-        for df in cached:
-            df.unpersist()
-
-
 #: the additive index stats: a merge adds the new batches' to the parent's
 ADDITIVE_STATS = ("n_docs", "total_len", "n_postings")
 
@@ -125,57 +101,6 @@ def _delta_stats(postings: DataFrame, docs: DataFrame) -> dict:
         zero.alias("n_docs"), zero.alias("total_len"), one.alias("n_postings")))
     r = rows.agg(*[F.sum(k).alias(k) for k in ADDITIVE_STATS]).collect()[0]
     return {k: int(r[k] or 0) for k in ADDITIVE_STATS}
-
-
-def _avgdl(stats: dict) -> int:
-    """The floored average doc length (Indexer.java:688-691)."""
-    return stats["total_len"] // stats["n_docs"] if stats["n_docs"] else 0
-
-
-def _tables_from_view(postings: DataFrame, docs: DataFrame, stats: dict):
-    """(term, doc_id, tf) + (doc_id, length) -> full IndexTables: terms
-    re-derived by one aggregation, VSM norms with the builder's floor-idf
-    quirk, integer doc ids (doc_int == doc_id).  ``stats`` holds the
-    ``ADDITIVE_STATS`` of the union (a merge carries them forward from
-    the parent snapshot, so the snapshot is never scanned for them).
-    Shared by delta compaction and snapshot merge — both are 'derive the
-    global tables from a posting-row union' jobs.
-
-    The terms table is cached and aggregated once: the norms' df and the
-    terms write both read it.  It is written as one file: the norms
-    broadcast it, so it is small by assumption, and a cached plan keeps
-    its shuffle's partition count (one small file per shuffle partition
-    otherwise, where adaptive execution coalesced the uncached
-    aggregation to one).
-
-    Returns ``(tables, cached)`` — the CALLER must unpersist every frame
-    in ``cached`` after consuming the tables (write/commit), or repeated
-    maintenance cycles in a long-lived session leak them."""
-    n_docs = stats["n_docs"]
-    stats = {**stats, "avgdl": _avgdl(stats), "int_doc_ids": True}
-    terms = postings.groupBy("term").agg(
-        F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf")
-    ).cache()
-    p = postings.withColumn("doc_int", F.col("doc_id").cast("long"))
-    log2 = math.log(2.0)
-    norm_df = (
-        p.join(F.broadcast(terms.select("term", "df")), "term")
-        .withColumn(
-            "w",
-            F.col("tf") * F.log(F.floor(F.lit(n_docs + 1) / F.col("df")).cast("double")) / F.lit(log2),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("w") * F.col("w")).alias("norm"))
-    )
-    docs_full = (
-        docs.withColumn("doc_int", F.col("doc_id").cast("long"))
-        .join(norm_df, "doc_id", "left")
-        .withColumn("norm", F.coalesce(F.col("norm"), F.lit(0.0)))
-        .withColumn("pagerank", F.lit(0.0))
-    )
-    tables = IndexTables(postings=p, docs=docs_full, terms=terms.coalesce(1),
-                         stats=stats)
-    return tables, [terms]
 
 
 def _written_batches(docs_dir: str) -> list[int]:
@@ -199,12 +124,12 @@ def merge_into_snapshot(
     """The APPEND-MERGE commit — the production index-update path
     composed end-to-end: union the CURRENT snapshot's postings/docs
     with the new streaming delta batches, re-derive the global tables
-    (df/cf/stats/norms — the stream's per-batch aggregates and the
-    snapshot's doc sets are disjoint, so the union IS the posting set),
-    and commit the result as a NEW immutable snapshot
-    (operation "merge-append").  Prior snapshots stay readable
-    (time travel) and GC-able (expire_snapshots) — the Iceberg
-    append-commit analog for the serving index.  ``n_docs``,
+    (df/cf/stats, and the VSM norms with the builder's floor-idf quirk —
+    the stream's per-batch aggregates and the snapshot's doc sets are
+    disjoint, so the union IS the posting set), and commit the result as
+    a NEW immutable snapshot (operation "merge-append").  Prior
+    snapshots stay readable (time travel) and GC-able (expire_snapshots)
+    — the Iceberg append-commit analog for the serving index.  ``n_docs``,
     ``total_len`` and ``n_postings`` are the parent snapshot's plus the
     new batches' (``ADDITIVE_STATS``).
 
@@ -247,28 +172,29 @@ def merge_into_snapshot(
     if not added["n_docs"]:  # only empty micro-batches
         return log[-1]["id"]
     cur = read_snapshot(spark, snapshot_root)
-    postings = cols(cur.postings).unionByName(dp)
-    docs = cur.docs.select("doc_id", "length").unionByName(dd)
-    tables, cached = _tables_from_view(
-        postings, docs, {k: cur.stats[k] + added[k] for k in ADDITIVE_STATS})
-    try:
-        return commit_snapshot(tables, snapshot_root, cfg,
-                               operation="merge-append", note=note,
-                               extra={"merge_watermark": new[-1]})
-    finally:
-        for df in cached:
-            df.unpersist()
-
-
-def merged_index_view(spark: SparkSession, out_dir: str):
-    """Union the deltas into queryable postings/docs/terms/stats — the
-    compaction-read path (compact_to_snapshot is the job that commits
-    this union in the bucketed serving layout)."""
-    postings = read_table(spark, os.path.join(out_dir, "postings_delta")).drop("batch_id")
-    docs = read_table(spark, os.path.join(out_dir, "docs_delta")).drop("batch_id")
+    postings = cols(cur.postings).unionByName(dp).withColumn(
+        "doc_int", F.col("doc_id").cast("long"))
+    docs = cur.docs.select("doc_id", "length").unionByName(dd).withColumn(
+        "doc_int", F.col("doc_id").cast("long"))
+    stats = {k: cur.stats[k] + added[k] for k in ADDITIVE_STATS}
+    # the floored average doc length (Indexer.java:688-691)
+    stats.update(avgdl=stats["total_len"] // stats["n_docs"], int_doc_ids=True)
+    # terms re-derived by one aggregation, cached: the norms' df and the
+    # terms write both read it.  Written as one file: the norms broadcast
+    # it, so it is small by assumption, and a cached plan keeps its
+    # shuffle's partition count (one small file per shuffle partition
+    # otherwise, where adaptive execution coalesced the uncached
+    # aggregation to one).
     terms = postings.groupBy("term").agg(
         F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf")
-    )
-    stats = _delta_stats(postings, docs)
-    stats["avgdl"] = _avgdl(stats)
-    return postings, docs, terms, stats
+    ).cache()
+    docs = with_vsm_norms(docs, postings, terms.select("term", "df"), "term",
+                          stats["n_docs"])
+    try:
+        return commit_snapshot(
+            IndexTables(postings=postings, docs=docs, terms=terms.coalesce(1),
+                        stats=stats),
+            snapshot_root, cfg, operation="merge-append", note=note,
+            extra={"merge_watermark": new[-1]})
+    finally:
+        terms.unpersist()

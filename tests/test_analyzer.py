@@ -30,7 +30,7 @@ CASES = [
 def _spark_tokens(spark, text, use_stop, use_stem):
     df = spark.createDataFrame([(0, text)], "id long, text string")
     toks = analyze_tokens(df, "text", ["id"], use_stopwords=use_stop,
-                          use_stemmer=use_stem, stem_via_join=False)
+                          use_stemmer=use_stem)
     return [(r.pos, r.term) for r in toks.orderBy("pos").collect()]
 
 

@@ -74,7 +74,7 @@ def get_index(spark: SparkSession, sf_dir: str) -> IndexTables:
     if sf_dir not in _index_cache:
         docs = load_documents(spark, sf_dir)
         _index_cache[sf_dir] = build_index(docs, NOSTEM_CFG, doc_col="doc_id",
-                                           text_col="text", with_positions=False)
+                                           text_col="text")
     return _index_cache[sf_dir]
 
 
@@ -622,8 +622,7 @@ def q_s2_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw JSONL -> typed entries -> T1 body -> inverted index -> BM25
     top-k: the reference's whole ingest+index+query path in one plan."""
     corpus = s2_json.s2_corpus(spark, S2_FIXTURE)
-    ix = build_index(corpus, NOSTEM_CFG, doc_col="id", text_col="body",
-                     with_positions=False)
+    ix = build_index(corpus, NOSTEM_CFG, doc_col="id", text_col="body")
     qt = spark.createDataFrame([(t, 1.0) for t in S2_QUERY_TERMS], "term string, qtf double")
     res = scoring.bm25_search(ix, qt, k=S2_TOPK, cfg=NOSTEM_CFG)
     return res.select(F.col("doc_id").cast("string").alias("id"),

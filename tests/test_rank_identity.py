@@ -5,7 +5,6 @@ Porter), on the sf0.001 documents table."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
 from information_retrieval_system_spark.config import EngineConfig
@@ -88,29 +87,3 @@ def test_bm25_candidate_semijoin(built, spark):
            scoring.bm25_search(index, qt, k=10, cfg=cfg, candidates=cdf).collect()]
     exp = oracle.bm25("spark join", k=10, k1=cfg.k1, b=cfg.b, candidates=cand)
     assert [d for d, _ in eng] == [d for d, _ in exp]
-
-
-def test_conjunctive_strict_and_contract(spark, sf_small):
-    """Strict AND: any vocabulary-absent query term empties the result;
-    otherwise results = docs containing every term."""
-    from pyspark.sql import functions as F
-
-    from information_retrieval_system_spark.config import EngineConfig
-    from information_retrieval_system_spark.index.builder import build_index
-    from information_retrieval_system_spark.query.scoring import conjunctive_search
-
-    cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
-    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    ix = build_index(docs, cfg, doc_col="doc_id", text_col="text",
-                     with_positions=False)
-
-    def qt(terms):
-        return spark.createDataFrame([(t, 1.0) for t in terms],
-                                     "term string, qtf double")
-
-    assert conjunctive_search(ix, qt(["spark", "zzz_absent"]), k=100).count() == 0
-    got = {r.doc_id for r in conjunctive_search(ix, qt(["spark", "join"]), k=10**9).collect()}
-    both = (ix.postings.filter(F.col("term").isin(["spark", "join"]))
-            .groupBy("doc_id").agg(F.countDistinct("term").alias("n"))
-            .filter("n = 2"))
-    assert got == {r.doc_id for r in both.collect()} and got

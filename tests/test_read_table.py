@@ -16,18 +16,17 @@ from information_retrieval_system_spark.index.builder import (
 from information_retrieval_system_spark.index.compression import (
     build_block_postings, build_dl_blocks, read_block_index, write_block_index)
 
-#: the write_index layouts: stemmed (term_id assigned before the postings
-#: aggregation), no-stem (term_id attached at write time), positional, and
-#: string doc ids (ranked doc_int) with metadata columns in docs
+#: the write_index layouts: stemmed (aggregated on an in-memory term id),
+#: no-stem (aggregated on the term string), and string doc ids (ranked
+#: doc_int) with metadata columns in docs
 LAYOUTS = {
     "stemmed": dict(cfg=EngineConfig(term_buckets=4)),
     "no_stem": dict(cfg=EngineConfig(use_stopwords=False, use_stemmer=False,
                                      term_buckets=4)),
-    "positional": dict(cfg=EngineConfig(term_buckets=4), with_positions=True),
     "string_ids_meta": dict(cfg=EngineConfig(use_stemmer=False, term_buckets=4),
                             string_ids=True, meta_cols=["lang", "source"]),
 }
-INDEX_TABLES = ("postings", "docs", "terms", "term_dict")
+INDEX_TABLES = ("postings", "docs", "terms")
 
 
 def jobs_started(spark, fn):
@@ -59,7 +58,6 @@ def written(spark, sf_small, tmp_path_factory):
             corpus = docs.withColumn(
                 "doc_id", F.concat(F.lit("d"), F.col("doc_id").cast("string")))
         ix = build_index(corpus, opts["cfg"], doc_col="doc_id", text_col="text",
-                         with_positions=opts.get("with_positions", False),
                          meta_cols=opts.get("meta_cols"))
         out[name] = str(tmp_path_factory.mktemp(name))
         write_index(ix, out[name], opts["cfg"])
@@ -79,6 +77,22 @@ def test_read_index_starts_no_job(spark, written, layout):
     for table in INDEX_TABLES:
         assert getattr(ix, table).schema == spark.read.parquet(
             os.path.join(written[layout], table)).schema, table
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_written_layout(spark, written, layout):
+    """A written index is exactly its three tables and the stats; its
+    postings carry no positions and no term id."""
+    assert sorted(os.listdir(written[layout])) == sorted([*INDEX_TABLES, "stats.json"])
+    postings = spark.read.parquet(os.path.join(written[layout], "postings"))
+    assert postings.columns == ["term", "doc_id", "doc_int", "tf", "bucket"]
+
+
+def test_positional_build_rejected(spark):
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError):
+        build_index(docs, EngineConfig(), doc_col="doc_id", text_col="text",
+                    with_positions=True)
 
 
 def test_read_table_block_index(spark, written, tmp_path):

@@ -22,14 +22,13 @@ def test_snapshot_time_travel_and_lineage(spark, tmp_path):
     root = str(tmp_path / "snaps")
 
     v1 = commit_snapshot(
-        build_index(docs, cfg, doc_col="doc_id", text_col="text",
-                    with_positions=False),
+        build_index(docs, cfg, doc_col="doc_id", text_col="text"),
         root, cfg, operation="initial-build")
     before = sorted((r.term, r.df) for r in read_snapshot(spark, root, v1).terms.collect())
 
     v2 = commit_snapshot(
         build_index(docs.filter(F.col("doc_id") < 100), cfg, doc_col="doc_id",
-                    text_col="text", with_positions=False),
+                    text_col="text"),
         root, cfg, operation="delete", note="drop doc_id >= 100")
 
     assert current_snapshot_id(root) == v2
@@ -75,8 +74,7 @@ def test_snapshot_concurrent_commits(spark, tmp_path):
 
     cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    tables = build_index(docs, cfg, doc_col="doc_id", text_col="text",
-                         with_positions=False)
+    tables = build_index(docs, cfg, doc_col="doc_id", text_col="text")
     root = str(tmp_path / "snaps")
 
     with ThreadPoolExecutor(max_workers=4) as ex:
@@ -109,8 +107,7 @@ def test_expire_snapshots(spark, tmp_path):
     sids = []
     for i, cap in enumerate((100, 200, 300, 400)):
         tables = build_index(docs.filter(f"doc_id < {cap}"), cfg,
-                             doc_col="doc_id", text_col="text",
-                             with_positions=False)
+                             doc_col="doc_id", text_col="text")
         sids.append(commit_snapshot(tables, root, cfg, note=f"gen-{i}"))
     v3_terms = sorted((r.term, r.df)
                       for r in read_snapshot(spark, root, sids[2]).terms.collect())
@@ -155,7 +152,7 @@ def test_merge_into_snapshot_equals_batch_build(spark, tmp_path):
     root = str(tmp_path / "snaps")
     v1 = commit_snapshot(
         build_index(docs.filter("doc_id < 200"), cfg, doc_col="doc_id",
-                    text_col="text", with_positions=False),
+                    text_col="text"),
         root, cfg, operation="initial-build")
     in_dir = str(tmp_path / "in")
     docs.filter("doc_id >= 200").repartition(4).write.parquet(in_dir)
@@ -170,8 +167,7 @@ def test_merge_into_snapshot_equals_batch_build(spark, tmp_path):
         ["initial-build", "merge-append"]
 
     merged = read_snapshot(spark, root)  # current == v2
-    full = build_index(docs, cfg, doc_col="doc_id", text_col="text",
-                       with_positions=False)
+    full = build_index(docs, cfg, doc_col="doc_id", text_col="text")
     assert sorted((r.term, r.df, r.cf) for r in merged.terms.collect()) == \
         sorted((r.term, r.df, r.cf) for r in full.terms.collect())
     for k in ("n_docs", "avgdl", "total_len", "n_postings"):
@@ -201,7 +197,7 @@ def test_merge_watermark_no_double_count(spark, tmp_path):
     root = str(tmp_path / "snaps")
     commit_snapshot(
         build_index(docs.filter("doc_id < 150"), cfg, doc_col="doc_id",
-                    text_col="text", with_positions=False),
+                    text_col="text"),
         root, cfg, operation="initial-build")
 
     # ONE logical maintenance stream: same input dir + same checkpoint
@@ -229,8 +225,7 @@ def test_merge_watermark_no_double_count(spark, tmp_path):
     v3 = merge_into_snapshot(spark, root, str(tmp_path / "delta"), cfg)
     assert v3 > v2
     merged = read_snapshot(spark, root)
-    full = build_index(docs, cfg, doc_col="doc_id", text_col="text",
-                       with_positions=False)
+    full = build_index(docs, cfg, doc_col="doc_id", text_col="text")
     for k in ("n_docs", "avgdl", "total_len", "n_postings"):
         assert merged.stats[k] == full.stats[k], k
     assert sorted((r.term, r.df, r.cf) for r in merged.terms.collect()) == \
@@ -255,7 +250,7 @@ def test_merge_watermark_advances_on_zero_term_batch(spark, tmp_path):
     root = str(tmp_path / "snaps")
     commit_snapshot(
         build_index(docs.filter("doc_id < 100"), cfg, doc_col="doc_id",
-                    text_col="text", with_positions=False),
+                    text_col="text"),
         root, cfg, operation="initial-build")
     in_dir = str(tmp_path / "in")
 
@@ -290,14 +285,14 @@ def test_merge_watermark_advances_on_zero_term_batch(spark, tmp_path):
     merged = read_snapshot(spark, root)
     assert merged.stats["n_docs"] == 155
     full = build_index(docs.filter("doc_id < 150"), cfg, doc_col="doc_id",
-                       text_col="text", with_positions=False)
+                       text_col="text")
     assert sorted((r.term, r.df, r.cf) for r in merged.terms.collect()) == \
         sorted((r.term, r.df, r.cf) for r in full.terms.collect())
 
 
 def test_expire_preserves_merge_watermark(spark, tmp_path):
     """expire_snapshots must carry max(merge_watermark) from expired
-    log entries onto the retained tail: if compaction/re-crawl commits
+    log entries onto the retained tail: if re-crawl commits
     land after the last merge and expiry drops the merge entry, a
     watermark reset to -1 would re-consume every already-merged delta
     batch (round-5 ADVICE regression)."""
@@ -313,7 +308,7 @@ def test_expire_preserves_merge_watermark(spark, tmp_path):
     root = str(tmp_path / "snaps")
     commit_snapshot(
         build_index(docs.filter("doc_id < 150"), cfg, doc_col="doc_id",
-                    text_col="text", with_positions=False),
+                    text_col="text"),
         root, cfg, operation="initial-build")
     in_dir = str(tmp_path / "in")
     docs.filter("doc_id >= 150 AND doc_id < 300").select("doc_id", "text") \
@@ -364,7 +359,7 @@ def test_replayed_batch_merges_once(spark, tmp_path):
     root, delta = str(tmp_path / "snaps"), str(tmp_path / "delta")
     commit_snapshot(
         build_index(docs.filter("doc_id < 200"), cfg, doc_col="doc_id",
-                    text_col="text", with_positions=False),
+                    text_col="text"),
         root, cfg, operation="initial-build")
     process = _process_batch_factory(delta, cfg, "doc_id", "text")
     batch = docs.filter("doc_id >= 200")
@@ -373,8 +368,7 @@ def test_replayed_batch_merges_once(spark, tmp_path):
     merge_into_snapshot(spark, root, delta, cfg)
 
     merged = read_snapshot(spark, root)
-    full = build_index(docs, cfg, doc_col="doc_id", text_col="text",
-                       with_positions=False)
+    full = build_index(docs, cfg, doc_col="doc_id", text_col="text")
     assert sorted((r.term, r.df, r.cf) for r in merged.terms.collect()) == \
         sorted((r.term, r.df, r.cf) for r in full.terms.collect())
     for k in ("n_docs", "avgdl", "total_len", "n_postings"):

@@ -210,7 +210,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     t0 = time.perf_counter()
     corpus = zipf_corpus(spark, n_docs, vocab=vocab).cache()
     corpus.count()
-    ix = build_index(corpus, cfg, doc_col="doc_id", text_col="text", with_positions=False)
+    ix = build_index(corpus, cfg, doc_col="doc_id", text_col="text")
     ix.postings.count(); ix.docs.count(); ix.terms.count()
     out["build_sec"] = round(time.perf_counter() - t0, 2)
 
@@ -307,7 +307,7 @@ def main() -> None:
         spark.read.parquet("/root/testdata/sf0.1/documents.parquet"), factor
     ).cache()
     n = docs.count()
-    ix = build_index(docs, cfg, doc_col="doc_id", text_col="text", with_positions=False)
+    ix = build_index(docs, cfg, doc_col="doc_id", text_col="text")
     ix.postings.count(); ix.docs.count(); ix.terms.count()
     blocks = build_block_postings(ix.postings).cache()
     dlb = build_dl_blocks(ix.docs).cache()
