@@ -23,8 +23,12 @@ no per-row Python.
 
 from __future__ import annotations
 
+import os
+import weakref
+
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, functions as F
 
 from .builder import read_table, term_bucket_expr
@@ -233,8 +237,6 @@ def write_block_index(
     the columnar analog of the reference's vocabulary offset pointers),
     and sorted within partitions by (term, block_id) for row-group
     locality."""
-    import os
-
     (
         blocks.withColumn("tbucket", term_bucket_expr(F.col("term"), term_buckets))
         .repartition(term_buckets, "tbucket")
@@ -246,6 +248,31 @@ def write_block_index(
     dl_blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "dl_blocks"))
 
 
+class BlockLayout:
+    """The files of one ``read_block_index`` call as pyarrow datasets, for
+    readers in the driver.  Listed when the frames are read, as Spark
+    lists them, so both readers see the same files.  ``blocks`` carries
+    the ``tbucket`` hive partition column."""
+
+    def __init__(self, out_dir: str):
+        self.blocks = ds.dataset(os.path.join(out_dir, "blocks"), format="parquet",
+                                 partitioning="hive")
+        self.dl_blocks = ds.dataset(os.path.join(out_dir, "dl_blocks"), format="parquet")
+
+
+#: frame -> the layout ``read_block_index`` read it from.  A frame derived
+#: from one of these (filtered, projected, joined) is a new object and is
+#: not a key.
+_READ_FROM: "weakref.WeakKeyDictionary[DataFrame, BlockLayout]" = weakref.WeakKeyDictionary()
+
+
+def served_layout(blocks: DataFrame, dl_blocks: DataFrame) -> BlockLayout | None:
+    """The layout when both frames are the exact ones one
+    ``read_block_index`` call returned, else None."""
+    layout = _READ_FROM.get(blocks)
+    return layout if layout is not None and _READ_FROM.get(dl_blocks) is layout else None
+
+
 def read_block_index(
     spark,
     out_dir: str,
@@ -255,11 +282,12 @@ def read_block_index(
     ``keep_bucket`` the tbucket partition column stays on the frame so a
     long-lived reader lists the layout ONCE and the route prunes per
     query with a ``tbucket.isin(...)`` filter (partition pruning still
-    applies at plan time)."""
-    import os
-
+    applies at plan time).  The returned pair is registered with its
+    files (``served_layout``), so the route can serve small queries from
+    them in the driver."""
     blocks = read_table(spark, os.path.join(out_dir, "blocks"))
     if not keep_bucket:
         blocks = blocks.drop("tbucket")
     dl_blocks = read_table(spark, os.path.join(out_dir, "dl_blocks"))
+    _READ_FROM[blocks] = _READ_FROM[dl_blocks] = BlockLayout(out_dir)
     return blocks, dl_blocks

@@ -1,49 +1,60 @@
 """Routed exact top-k BM25: one path for one query and for a query set.
 
-The reference sends every query through one scorer, one ad-hoc query or
-the 635 queries of a TREC run alike (OkapiBM25_FR.java:90-420, looped by
-Search_FR.java:994-1098).  Here too there is one path:
-``route_batch_bm25`` takes a (qid, term[, qtf]) frame, and a single query
-is a batch of one (``route_bm25`` runs it as qid 0).
+The reference answers each query in one process: it loads the
+vocabulary, fetches the query terms' posting lists and scores them
+(OkapiBM25_FR.java:90-420), one ad-hoc query or the 635 queries of a
+TREC run alike (looped by Search_FR.java:994-1098).  Here too there is
+one path: ``route_batch_bm25`` takes a (qid, term[, qtf]) frame, and a
+single query is a batch of one (``route_bm25`` runs it as qid 0).
 
-- The query frame is collected in the driver once, and ONE term-stats
-  collect fetches every distinct query term's (df[, tbucket]) row.  The
-  frames of ``analyze_query_terms`` / ``queries_to_terms`` and the route's
-  own (qid, term) frames are local relations, so that collect is the only
-  Spark job of planning.
-- Each qid routes on ``Σ df``, the posting rows the exhaustive plan would
-  score: ``>= wand_min_postings`` -> block-max WAND over the compressed
-  blocks, below -> the exhaustive ``scoring.bm25_scores`` plan.
-- ONE per-qid window over the union of both routes cuts each query's
-  top-k under (score DESC, doc_id ASC).  Both routes are exact, so
-  routing is invisible in values.
+- The query frame is collected in the driver once.  Each distinct query
+  term's df comes from the written layout when ``blocks``/``dl_blocks``
+  are the exact pair ``read_block_index`` returned
+  (``compression.served_layout``): a pyarrow read of the terms'
+  ``(term, n, tbucket)`` block rows gives df = Σ ``n`` and the term's
+  ``tbucket`` hive partition, with no Spark job.  Any other frames (in
+  memory, or derived from a read frame) take ONE term-stats collect.
+- The first routing choice is driver or Spark, by each qid's ``Σ df``
+  (the posting rows an exhaustive plan would score):
+  - driver: on the written layout and ``Σ df <= DRIVER_MAX_POSTINGS``.
+    pyarrow reads the qid's block rows (its terms' tbucket partitions, a
+    ``term`` filter) and the dl blocks they touch; ``score_block`` scores
+    each (qid, block) in this process.  The rows come back as a local
+    relation already in rank order: 0 Spark jobs for int doc ids, one
+    doc_int -> doc_id lookup job for string ones;
+  - Spark: ``>= wand_min_postings`` -> block-max WAND, ``score_block``
+    run by an ``applyInArrow`` cogroup kernel; below -> the exhaustive
+    ``scoring.bm25_scores`` plan.  ONE per-qid window over the union of
+    both cuts each query's top-k under (score DESC, doc_id ASC).
+- Every route is exact, so routing is invisible in values; the route
+  is named per qid, so a fallback to Spark is never silent.
 
 Block-max WAND replaces the reference's approximate early cutoff
 (idf-sorted terms, stop when >= topk docs collected,
 OkapiBM25_FR.java:486-511,758-761) with an EXACT scheme (SURVEY.md §2.5
-O5, §4 item 1):
+O5, §4 item 1), in ONE per-(qid, block) body, ``score_block``:
 
-- posting blocks are doc-range aligned across terms (compression.py); a
-  broadcast (qid, term) fan-out keys them by (qid, block_id), and the dl
-  blocks are inner-joined to each qid's block ids, so one cogroup yields,
-  per (query, doc range), the query's postings plus the range's doc
-  lengths.  dl work follows the query's posting footprint, never the
-  corpus;
+- posting blocks are doc-range aligned across terms (compression.py), so
+  one (qid, block) cell holds the query's postings of one doc range plus
+  the range's doc lengths.  On Spark a broadcast (qid, term) fan-out
+  keys the blocks by (qid, block_id) and the dl blocks are inner-joined
+  to each qid's block ids; in the driver the read is keyed the same way.
+  dl work follows the query's posting footprint, never the corpus;
 - per-range upper bound: ``ub(range) = Σ_t idf_t · max_tf·(k1+1) /
   (max_tf + k1·(1-b))`` — since ``dl ≥ 0`` and the BM25 term score is
   monotone increasing in tf and decreasing in dl, this dominates every
   doc score in the range (safe-pruning proof in SURVEY.md §4.1);
-- a per-(python worker, qid) shared threshold (the k-th best score seen
-  so far) skips whole ranges whose ub cannot reach the heap —
-  opportunistic but SAFE: the final k-th best is ≥ any worker's current
+- a threshold heap (the k-th best score seen so far; per qid in the
+  driver, per (python worker, qid) on Spark) skips whole ranges whose ub
+  cannot reach it — SAFE: the final k-th best is ≥ any partial heap's
   k-th best, so skipped ranges can never hold a final top-k doc.
   Negative-idf terms (df > N/2, common in tiny corpora) bound at 0;
-- each cogroup cell emits at most k rows.
+- each cell emits at most k rows.
 
-Only the kernel body is Python (vectorized numpy over decoded blocks),
-entering via ``applyInArrow`` on a cogroup — pyarrow Tables in and out,
-never per-row and never through a pandas block manager (the per-cell
-pandas construction cost halved the batch path in the r7 A/B).
+The body is vectorized numpy over decoded blocks.  On Spark it enters
+via ``applyInArrow`` — pyarrow Tables in and out, never per-row and never
+through a pandas block manager (the per-cell pandas construction cost
+halved the batch path in the r7 A/B).
 """
 
 from __future__ import annotations
@@ -53,20 +64,33 @@ import heapq
 import uuid
 
 import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..analysis.analyzer import local_frame
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..index.builder import term_bucket_expr
-from ..index.compression import DEFAULT_BLOCK_SPAN, vbyte_decode
+from ..index.builder import term_bucket, term_bucket_expr
+from ..index.compression import DEFAULT_BLOCK_SPAN, BlockLayout, served_layout, vbyte_decode
 from .batch import rank_per_qid
 from .scoring import bm25_scores
+
+#: Σdf at or below which a qid on a written layout is scored in the
+#: driver.  ``tools/wand_crossover.py --zipf`` on 4 vCPUs (local[4]) found
+#: no crossover: the driver beat both Spark routes at every Σdf measured,
+#: 176 to 772k postings over 2k-1M docs (0.03 s against 0.47-0.65 s at 2k
+#: docs; 0.14 s against 0.88 s WAND and 1.66 s exhaustive at 772k), so
+#: the limit is the measured range, rounded up.  Memory: a driver query
+#: holds its terms' encoded block rows (a few bytes per posting) and
+#: decodes one block at a time behind two 32 MB decode memos; even all 1M
+#: postings decoded at once (uint64 doc + tf) would be 16 MB, three
+#: orders of magnitude under a 16 GB host.
+DRIVER_MAX_POSTINGS = 1_000_000
 
 # per-worker shared pruning state: {query_key: heap of best scores (size<=k)}
 _THRESH: dict[str, list[float]] = {}
 
 class _DecodeMemo(dict):
-    """Per-worker decode memo keyed by the ENCODED bytes themselves: in a
+    """Per-process decode memo keyed by the ENCODED bytes themselves: in a
     batch, every query touching a (term, block) cell receives the same
     VByte payload, so a head term shared by hundreds of Zipf queries
     would otherwise decode once PER QUERY.
@@ -98,7 +122,7 @@ class _DecodeMemo(dict):
         self.nbytes = 0
 
 
-#: per memo, per Python worker
+#: per memo, per process (the driver and each Python worker)
 _DECODE_MAX_BYTES = 32 * 2**20
 _DECODE_VALS = _DecodeMemo(vbyte_decode, _DECODE_MAX_BYTES)
 # absolute doc ids (cumsum of the stored gaps), cached post-cumsum
@@ -120,6 +144,22 @@ def collect_query_term_rows(terms: DataFrame, qset: list[str],
     return terms.filter(F.col("term").isin(list(qset))).select(*sel).collect()
 
 
+def layout_term_rows(layout: BlockLayout, qset: list[str],
+                     term_buckets: int | None) -> tuple[dict, dict]:
+    """The same (df, tbucket) per query term, read from a written layout
+    by pyarrow in the driver: df is the Σ ``n`` of the term's block rows
+    and tbucket its hive partition.  With ``term_buckets`` the read
+    opens only the query terms' partitions (``term_bucket``), else every
+    one.  No Spark job."""
+    keep = pc.field("term").isin(qset)
+    if term_buckets:
+        keep &= pc.field("tbucket").isin(sorted({term_bucket(t, term_buckets) for t in qset}))
+    t = layout.blocks.to_table(columns=["term", "n", "tbucket"], filter=keep)
+    g = t.group_by(["term", "tbucket"]).aggregate([("n", "sum")]).to_pydict()
+    return (dict(zip(g["term"], map(float, g["n_sum"]))),
+            dict(zip(g["term"], g["tbucket"])))
+
+
 def _empty_cell():
     import pyarrow as pa
 
@@ -128,10 +168,96 @@ def _empty_cell():
                      "score": pa.array([], pa.float64())})
 
 
-def _wand_kernel(idfs_by_qid: dict[int, dict[str, float]], k: int,
-                 k1: float, b: float, avgdl: float, span: int, qkey: str):
-    """The cogroup kernel over one (qid, block) cell -> that query's top-k
-    docs of the range.
+@dataclasses.dataclass(frozen=True)
+class Bm25Params:
+    """What scoring a block needs besides its rows."""
+    k: int
+    k1: float
+    b: float
+    avgdl: float
+    span: int
+
+
+#: the block columns ``score_block`` reads, one tuple per (term, block) row
+BLOCK_COLS = ("term", "max_tf", "docs_vb", "tfs_vb")
+
+
+def score_block(block: int, rows: list[tuple], dl: tuple[bytes, bytes],
+                idfs: dict[str, float], heap: list[float], p: Bm25Params):
+    """One query's top-k docs of one doc range, the body of both the
+    Spark kernel and the driver loop.
+
+    ``rows`` are the query terms' ``BLOCK_COLS`` rows of ``block``, ``dl``
+    its (docs_vb, dls_vb) doc-length block; ``heap`` holds the best
+    scores seen so far for the query (size <= k) and is updated here.
+    -> (doc_int, score) arrays, or None when no doc of the range can
+    reach the heap."""
+    theta = heap[0] if len(heap) >= p.k else -np.inf
+
+    # --- block-max upper bound for this doc range ----------------------
+    # per-term contributions, kept for the early exit below (negative idf
+    # contributes 0: the term score is < 0 everywhere, so 0 is a safe
+    # upper bound for it)
+    contribs = []
+    for term, max_tf, _, _ in rows:
+        idf, mt = idfs[term], float(max_tf)
+        contribs.append(idf * mt * (p.k1 + 1.0) / (mt + p.k1 * (1.0 - p.b))
+                        if idf >= 0.0 else 0.0)
+    if sum(contribs) < theta:
+        return None
+
+    # --- decode dl block (memoized across queries) ---------------------
+    base = block * p.span
+    ddocs = _cached_docs(dl[0])
+    dl_arr = np.zeros(p.span, dtype=np.float64)
+    dl_arr[(ddocs - np.uint64(base)).astype(np.int64)] = _cached_vals(dl[1])
+
+    # --- doc-at-a-time accumulation over the range ---------------------
+    # terms in DESCENDING bound order with suffix sums: after term j, no
+    # doc can exceed max(best partial, 0) + suffix_ub[j+1] — when that
+    # falls below theta the remaining (smaller) terms need not be decoded
+    # at all (tightens the static block-max with the ACTUAL best partial
+    # once the heavy terms are in)
+    order = sorted(range(len(contribs)), key=lambda i: -contribs[i])
+    suffix_ub = np.cumsum([contribs[i] for i in order][::-1])[::-1].tolist()
+    scores = np.zeros(p.span, dtype=np.float64)
+    touched = np.zeros(p.span, dtype=bool)
+    best_partial = 0.0
+    for j, ri in enumerate(order):
+        if j > 0 and best_partial + suffix_ub[j] < theta:
+            return None  # no doc here can reach the heap
+        term, _, docs_vb, tfs_vb = rows[ri]
+        off = (_cached_docs(docs_vb) - np.uint64(base)).astype(np.int64)
+        tfs = _cached_vals(tfs_vb).astype(np.float64)
+        s = idfs[term] * tfs * (p.k1 + 1.0) / (
+            tfs + p.k1 * (1.0 - p.b + p.b * dl_arr[off] / p.avgdl))
+        scores[off] += s
+        touched[off] = True
+        if off.size:
+            best_partial = max(best_partial, float(scores[off].max()))
+
+    idx = np.nonzero(touched)[0]
+    if idx.size == 0:
+        return None
+    sc = scores[idx]
+    # local top-k of this range under the GLOBAL total order (score DESC,
+    # doc_int ASC): argpartition alone keeps an arbitrary subset among
+    # docs tied at the k-th score, which can drop the smaller-doc_int doc
+    # the final ranking would have kept
+    if idx.size > p.k:
+        top = np.lexsort((idx, -sc))[:p.k]
+        idx, sc = idx[top], sc[top]
+    for v in sc.tolist():
+        if len(heap) < p.k:
+            heapq.heappush(heap, v)
+        elif v > heap[0]:
+            heapq.heapreplace(heap, v)
+    return idx + base, sc
+
+
+def _wand_kernel(idfs_by_qid: dict[int, dict[str, float]], p: Bm25Params, qkey: str):
+    """The cogroup kernel over one (qid, block) cell: ``score_block`` with
+    a per-(python worker, qid) shared heap.
 
     Arrow-native (``applyInArrow``): each cell arrives as a pyarrow Table
     and never round-trips through a pandas block manager — the per-cell
@@ -144,144 +270,123 @@ def _wand_kernel(idfs_by_qid: dict[int, dict[str, float]], k: int,
         if pblocks.num_rows == 0 or dlblock.num_rows == 0:
             return _empty_cell()
         qid, block = int(key[0].as_py()), int(key[1].as_py())
-        idfs = idfs_by_qid[qid]
         if len(_THRESH) > 4096:  # bound per-worker state across queries
             _THRESH.clear()
-        heap = _THRESH.setdefault(f"{qkey}:{qid}", [])
-        theta = heap[0] if len(heap) >= k else -np.inf
-
-        # --- block-max upper bound for this doc range ------------------
-        # per-term contributions, kept for the in-kernel early exit
-        # (negative idf contributes 0: the term score is < 0 everywhere,
-        # so 0 is a safe upper bound for it)
-        rows_term = pblocks.column("term").to_pylist()
-        contribs = []
-        for term, max_tf in zip(rows_term, pblocks.column("max_tf").to_pylist()):
-            idf = idfs[term]
-            mt = float(max_tf)
-            contribs.append(
-                idf * mt * (k1 + 1.0) / (mt + k1 * (1.0 - b)) if idf >= 0.0 else 0.0
-            )
-        ub = sum(contribs)
-        if ub < theta:
+        got = score_block(
+            block, list(zip(*(pblocks.column(c).to_pylist() for c in BLOCK_COLS))),
+            (dlblock.column("docs_vb")[0].as_py(), dlblock.column("dls_vb")[0].as_py()),
+            idfs_by_qid[qid], _THRESH.setdefault(f"{qkey}:{qid}", []), p)
+        if got is None:
             return _empty_cell()
-
-        # --- decode dl block (memoized across queries) ----------------
-        base = block * span
-        ddocs = _cached_docs(dlblock.column("docs_vb")[0].as_py())
-        dls = _cached_vals(dlblock.column("dls_vb")[0].as_py()).astype(np.float64)
-        dl_arr = np.zeros(span, dtype=np.float64)
-        dl_arr[(ddocs - np.uint64(base)).astype(np.int64)] = dls
-
-        # --- doc-at-a-time accumulation over the range -----------------
-        # terms in DESCENDING bound order with suffix sums: after term j,
-        # no doc can exceed max(best partial, 0) + suffix_ub[j+1] — when
-        # that falls below theta the remaining (smaller) terms need not
-        # be decoded at all (tightens the static block-max with the
-        # ACTUAL best partial once the heavy terms are in)
-        order = sorted(range(len(contribs)), key=lambda i: -contribs[i])
-        suffix = 0.0
-        suffix_ub = [0.0] * (len(order) + 1)
-        for j in range(len(order) - 1, -1, -1):
-            suffix += contribs[order[j]]
-            suffix_ub[j] = suffix
-        rows_dvb = pblocks.column("docs_vb").to_pylist()
-        rows_tvb = pblocks.column("tfs_vb").to_pylist()
-        scores = np.zeros(span, dtype=np.float64)
-        touched = np.zeros(span, dtype=bool)
-        best_partial = 0.0
-        for j, ri in enumerate(order):
-            if best_partial + suffix_ub[j] < theta and j > 0:
-                return _empty_cell()  # no doc here can reach the heap
-            idf = idfs[rows_term[ri]]
-            docs = _cached_docs(rows_dvb[ri])
-            tfs = _cached_vals(rows_tvb[ri]).astype(np.float64)
-            off = (docs - np.uint64(base)).astype(np.int64)
-            dl = dl_arr[off]
-            s = idf * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dl / avgdl))
-            scores[off] += s
-            touched[off] = True
-            if off.size:
-                best_partial = max(best_partial, float(scores[off].max()))
-
-        idx = np.nonzero(touched)[0]
-        if idx.size == 0:
-            return _empty_cell()
-        sc = scores[idx]
-        # local top-k of this range under the GLOBAL total order
-        # (score DESC, doc_int ASC): argpartition alone keeps an arbitrary
-        # subset among docs tied at the k-th score, which can drop the
-        # smaller-doc_int doc the per-qid window would have kept
-        if idx.size > k:
-            order = np.lexsort((idx, -sc))[:k]
-            idx, sc = idx[order], sc[order]
-        # update the worker-shared threshold heap
-        for v in sc:
-            if len(heap) < k:
-                heapq.heappush(heap, float(v))
-            elif v > heap[0]:
-                heapq.heapreplace(heap, float(v))
-        return pa.table({"qid": pa.array(np.full(idx.size, qid, dtype=np.int64)),
-                         "doc_int": pa.array((idx + base).astype(np.int64)),
+        docs, sc = got
+        return pa.table({"qid": pa.array(np.full(docs.size, qid, dtype=np.int64)),
+                         "doc_int": pa.array(docs),
                          "score": pa.array(sc)})
 
     return kernel
 
 
-def route_batch_bm25(
-    index,
-    blocks: DataFrame,
-    dl_blocks: DataFrame,
-    query_terms: DataFrame,
-    k: int = 10,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    block_span: int = DEFAULT_BLOCK_SPAN,
-    term_buckets: int | None = None,
-    wand_min_postings: int = 1_000_000,
-) -> tuple[DataFrame, dict[int, str]]:
-    """query_terms(qid, term[, qtf]) -> ((qid, doc_id, rank, score) top-k
-    per query, {qid: route}).
+def driver_ranked(layout: BlockLayout, idfs_by_qid: dict[int, dict[str, float]],
+                  tbucket: dict[str, int], p: Bm25Params) -> dict[int, list[tuple[int, float]]]:
+    """qid -> its top-k [(doc_int, score)] in rank order (score DESC,
+    doc_int ASC), scored in the driver: one pyarrow read of the query
+    terms' block rows (their tbucket partitions, a ``term`` filter), one of
+    the dl blocks they touch, then ``score_block`` per (qid, block)."""
+    terms = sorted({t for idfs in idfs_by_qid.values() for t in idfs})
+    if not terms:
+        return {}
+    rows = layout.blocks.to_table(
+        columns=["block_id", *BLOCK_COLS],
+        filter=(pc.field("tbucket").isin(sorted({tbucket[t] for t in terms}))
+                & pc.field("term").isin(terms))).to_pydict()
+    by_term: dict[str, list[tuple]] = {}  # term -> [(block_id, *BLOCK_COLS)]
+    for row in zip(rows["block_id"], *(rows[c] for c in BLOCK_COLS)):
+        by_term.setdefault(row[1], []).append(row)
+    dl = layout.dl_blocks.to_table(
+        columns=["block_id", "docs_vb", "dls_vb"],
+        filter=pc.field("block_id").isin(sorted(set(rows["block_id"])))).to_pydict()
+    dl_of = {b: (d, n) for b, d, n in zip(dl["block_id"], dl["docs_vb"], dl["dls_vb"])}
+    out = {}
+    for q, idfs in idfs_by_qid.items():
+        by_block: dict[int, list[tuple]] = {}
+        for t in idfs:
+            for b, *row in by_term.get(t, ()):
+                by_block.setdefault(b, []).append(tuple(row))
+        heap: list[float] = []
+        docs, sc = [np.zeros(0, np.int64)], [np.zeros(0)]
+        for b in sorted(by_block.keys() & dl_of.keys()):
+            got = score_block(b, by_block[b], dl_of[b], idfs, heap, p)
+            if got is not None:
+                docs.append(got[0])
+                sc.append(got[1])
+        d, s = np.concatenate(docs), np.concatenate(sc)
+        top = np.lexsort((d, -s))[:p.k]
+        out[q] = list(zip(d[top].tolist(), s[top].tolist()))
+    return out
 
-    ``blocks``/``dl_blocks`` come from compression.build_* or
-    ``read_block_index``; with ``keep_bucket=True`` and ``term_buckets``
-    the blocks scan carries a ``tbucket`` partition filter for the WAND
-    queries' terms.  ``wand_min_postings`` is the per-cluster crossover:
-    BENCH.md round 4 (5M-doc Zipf) measured WAND 1.9-2.2x faster at 2.5M+
-    postings and 0.91x at ~380k; re-calibrate with
-    ``tools/wand_crossover.py``.  Duplicate (qid, term) rows count once
-    (BM25 counts a term once per query, OkapiBM25_FR.java:330-404)."""
-    spark = query_terms.sparkSession
-    queries: dict[int, set[str]] = {}
-    for r in query_terms.select("qid", "term").collect():
-        queries.setdefault(int(r.qid), set()).add(r.term)
+
+def _with_doc_ids(index, ranked: dict[int, list[tuple[int, float]]]) -> tuple[dict, str]:
+    """``driver_ranked``'s rows with doc_int mapped to doc_id, and the
+    doc_id type.  String doc ids cost one lookup job for the result
+    rows' docs; integer ones are their doc_int."""
+    if index.stats.get("int_doc_ids"):
+        return ranked, "long"
+    ints = sorted({d for rows in ranked.values() for d, _ in rows})
+    ids = {r.doc_int: r.doc_id for r in index.docs.filter(F.col("doc_int").isin(ints))
+           .select("doc_int", "doc_id").collect()} if ints else {}
+    return ({q: [(ids[d], s) for d, s in rows] for q, rows in ranked.items()},
+            dict(index.docs.dtypes)["doc_id"])
+
+
+def _route(index, blocks, dl_blocks, queries: dict[int, set[str]], k, cfg, block_span,
+           term_buckets, wand_min_postings):
+    """{qid: terms} -> ((qid, doc_id, rank, score) frame of the Spark
+    routes or None, {qid: [(doc_id, score)] in rank order} of the driver
+    route, doc_id type, {qid: route})."""
+    spark = blocks.sparkSession
     union_terms = sorted({t for ts in queries.values() for t in ts})
-    trows = (collect_query_term_rows(index.terms, union_terms, blocks, term_buckets)
-             if union_terms else [])
-    dfmap = {r.term: float(r.df) for r in trows}
-    routes = {q: "wand" if sum(dfmap.get(t, 0) for t in ts) >= wand_min_postings
-              else "exhaustive" for q, ts in queries.items()}
+    layout = served_layout(blocks, dl_blocks)
+    if not union_terms:
+        dfmap, tbmap = {}, {}
+    elif layout is not None:
+        dfmap, tbmap = layout_term_rows(layout, union_terms, term_buckets)
+    else:
+        trows = collect_query_term_rows(index.terms, union_terms, blocks, term_buckets)
+        dfmap = {r.term: float(r.df) for r in trows}
+        tbmap = {r.term: int(r.tb) for r in trows if "tb" in r.asDict()}
 
-    def pairs(route: str) -> list[tuple[int, str]]:
-        return [(q, t) for q in sorted(queries) if routes[q] == route
+    def choose(sigma_df: float) -> str:
+        if layout is not None and sigma_df <= DRIVER_MAX_POSTINGS:
+            return "driver"
+        return "wand" if sigma_df >= wand_min_postings else "exhaustive"
+
+    routes = {q: choose(sum(dfmap.get(t, 0) for t in ts)) for q, ts in queries.items()}
+
+    def pairs(name: str) -> list[tuple[int, str]]:
+        return [(q, t) for q in sorted(queries) if routes[q] == name
                 for t in sorted(queries[q]) if t in dfmap]
 
+    n, avgdl = index.stats["n_docs"], float(index.stats["avgdl"])
+
+    def idfs_of(qt_pairs) -> dict[int, dict[str, float]]:
+        idfs: dict[int, dict[str, float]] = {}
+        for q, t in qt_pairs:
+            idfs.setdefault(q, {})[t] = float(
+                np.log2((n - dfmap[t] + 0.5) / (dfmap[t] + 0.5)))
+        return idfs
+
+    p = Bm25Params(k, cfg.k1, cfg.b, avgdl, block_span)
     parts = []
     wand_pairs = pairs("wand")
     if wand_pairs:
-        n, avgdl = index.stats["n_docs"], float(index.stats["avgdl"])
-        idfs: dict[int, dict[str, float]] = {}
-        for q, t in wand_pairs:
-            idfs.setdefault(q, {})[t] = float(
-                np.log2((n - dfmap[t] + 0.5) / (dfmap[t] + 0.5)))
         # unique per plan: a stale heap from an earlier plan (possibly
         # another corpus) must never seed this one's pruning threshold
-        kernel = _wand_kernel(idfs, k, cfg.k1, cfg.b, avgdl, block_span, uuid.uuid4().hex)
+        kernel = _wand_kernel(idfs_of(wand_pairs), p, uuid.uuid4().hex)
         wand_terms = sorted({t for _, t in wand_pairs})
         qb = blocks
         if "tbucket" in qb.columns:
-            if term_buckets:
-                tbs = sorted({int(r.tb) for r in trows if r.term in wand_terms})
-                qb = qb.filter(F.col("tbucket").isin(tbs))
+            if tbmap:
+                qb = qb.filter(F.col("tbucket").isin(sorted({tbmap[t] for t in wand_terms})))
             qb = qb.drop("tbucket")
         qt = local_frame(spark, wand_pairs, "qid long, term string")
         qblocks = qb.filter(F.col("term").isin(wand_terms)).join(F.broadcast(qt), "term")
@@ -312,21 +417,72 @@ def route_batch_bm25(
             index, postings=index.postings.filter(F.col("term").isin(ex_terms)))
         parts.append(bm25_scores(ix_f, local_frame(spark, ex_pairs, "qid long, term string"),
                                  cfg=cfg))
-    if not parts:
-        return local_frame(spark, [], "qid long, doc_id long, rank int, score double"), routes
-    scores = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return rank_per_qid(scores, k), routes
+    ranked = None
+    if parts:
+        ranked = rank_per_qid(parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1]), k)
+    driver, id_type = _with_doc_ids(
+        index, driver_ranked(layout, idfs_of(pairs("driver")), tbmap, p))
+    return ranked, driver, id_type, routes
+
+
+def route_batch_bm25(
+    index,
+    blocks: DataFrame,
+    dl_blocks: DataFrame,
+    query_terms: DataFrame,
+    k: int = 10,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    block_span: int = DEFAULT_BLOCK_SPAN,
+    term_buckets: int | None = None,
+    wand_min_postings: int = 1_000_000,
+) -> tuple[DataFrame, dict[int, str]]:
+    """query_terms(qid, term[, qtf]) -> ((qid, doc_id, rank, score) top-k
+    per query, {qid: route}), route one of "driver", "wand", "exhaustive".
+
+    ``blocks``/``dl_blocks`` come from compression.build_* or
+    ``read_block_index``; only the exact pair ``read_block_index``
+    returned is served from its files (the driver route).
+    ``term_buckets`` is the layout's bucket count (``write_block_index``):
+    with it, the driver's reads open only the query terms' ``tbucket``
+    partitions.  Over ``keep_bucket=True`` frames the Spark WAND blocks
+    scan carries a ``tbucket`` partition filter, its buckets read from the
+    layout when served, else computed from ``term_buckets`` (when given).
+    ``wand_min_postings``
+    is the Spark route's crossover: WAND beat exhaustive from ~50k-90k
+    postings at 200k-1M Zipf docs and never at 2k-10k docs (CHANGES.md);
+    BENCH.md round 4 (5M docs) measured 1.9-2.2x at 2.5M+ postings.
+    Re-calibrate with ``tools/wand_crossover.py``.  Duplicate (qid, term)
+    rows count once (BM25 counts a term once per query,
+    OkapiBM25_FR.java:330-404)."""
+    queries: dict[int, set[str]] = {}
+    for r in query_terms.select("qid", "term").collect():
+        queries.setdefault(int(r.qid), set()).add(r.term)
+    ranked, driver, id_type, routes = _route(
+        index, blocks, dl_blocks, queries, k, cfg, block_span, term_buckets, wand_min_postings)
+    if ranked is not None and not driver:
+        return ranked, routes
+    drv = local_frame(query_terms.sparkSession,
+                      [(q, d, r, s) for q in sorted(driver)
+                       for r, (d, s) in enumerate(driver[q], 1)],
+                      f"qid long, doc_id {id_type}, rank int, score double")
+    return (drv if ranked is None else ranked.unionByName(drv)), routes
 
 
 def route_bm25(index, blocks: DataFrame, dl_blocks: DataFrame, query_terms: DataFrame,
                k: int = 10, cfg: EngineConfig = DEFAULT_CONFIG,
                block_span: int = DEFAULT_BLOCK_SPAN, term_buckets: int | None = None,
                wand_min_postings: int = 1_000_000) -> tuple[DataFrame, str]:
-    """One query (term[, qtf]) run as the batch of one, qid 0 ->
-    ((doc_id, score) top-k in rank order, route)."""
-    res, routes = route_batch_bm25(
-        index, blocks, dl_blocks, query_terms.withColumn("qid", F.lit(0).cast("long")),
-        k=k, cfg=cfg, block_span=block_span, term_buckets=term_buckets,
-        wand_min_postings=wand_min_postings)
-    # the limit plans a k-row top-k merge, not a range-partitioned sort
-    return res.orderBy("rank").limit(k).select("doc_id", "score"), routes.get(0, "exhaustive")
+    """One query (term[, qtf]) routed as the batch of one, qid 0 ->
+    ((doc_id, score) top-k in rank order, route).  A driver result, or a
+    query that matches no term, is a local relation already in rank
+    order; a query with no terms reports "driver"."""
+    terms = {r.term for r in query_terms.collect()}
+    ranked, driver, id_type, routes = _route(
+        index, blocks, dl_blocks, {0: terms} if terms else {}, k, cfg, block_span,
+        term_buckets, wand_min_postings)
+    route = routes.get(0, "driver")
+    if ranked is not None:
+        # the limit plans a k-row top-k merge, not a range-partitioned sort
+        return ranked.orderBy("rank").limit(k).select("doc_id", "score"), route
+    return local_frame(blocks.sparkSession, driver.get(0, []),
+                       f"doc_id {id_type}, score double"), route

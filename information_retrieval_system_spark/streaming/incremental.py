@@ -165,17 +165,20 @@ def merge_into_snapshot(
     if not new:
         return log[-1]["id"]
     parts = [f"batch_id={b}" for b in new]
-    cols = lambda df: df.select("term", "doc_id", F.col("tf").cast("long").alias("tf"))  # noqa: E731
-    dp = cols(read_table(spark, os.path.join(delta_dir, "postings_delta"), parts))
+    dp = read_table(spark, os.path.join(delta_dir, "postings_delta"), parts).select(
+        "term", "doc_id", "tf")
     dd = read_table(spark, d_dir, parts).select("doc_id", "length")
     added = _delta_stats(dp, dd)
     if not added["n_docs"]:  # only empty micro-batches
         return log[-1]["id"]
     cur = read_snapshot(spark, snapshot_root)
-    postings = cols(cur.postings).unionByName(dp).withColumn(
-        "doc_int", F.col("doc_id").cast("long"))
-    docs = cur.docs.select("doc_id", "length").unionByName(dd).withColumn(
-        "doc_int", F.col("doc_id").cast("long"))
+    # build_index's written schemas: postings (term, doc_id, doc_int, tf
+    # int), docs (doc_id, doc_int, length, norm, pagerank)
+    doc_int = F.col("doc_id").cast("long").alias("doc_int")
+    postings = cur.postings.select("term", "doc_id", "tf").unionByName(dp).select(
+        "term", "doc_id", doc_int, "tf")
+    docs = cur.docs.select("doc_id", "length").unionByName(dd).select(
+        "doc_id", doc_int, "length")
     stats = {k: cur.stats[k] + added[k] for k in ADDITIVE_STATS}
     # the floored average doc length (Indexer.java:688-691)
     stats.update(avgdl=stats["total_len"] // stats["n_docs"], int_doc_ids=True)

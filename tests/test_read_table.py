@@ -15,6 +15,9 @@ from information_retrieval_system_spark.index.builder import (
     build_index, read_index, read_table, write_index)
 from information_retrieval_system_spark.index.compression import (
     build_block_postings, build_dl_blocks, read_block_index, write_block_index)
+from information_retrieval_system_spark.index.snapshots import commit_snapshot
+from information_retrieval_system_spark.streaming.incremental import (
+    incremental_index_stream, merge_into_snapshot)
 
 #: the write_index layouts: stemmed (aggregated on an in-memory term id),
 #: no-stem (aggregated on the term string), and string doc ids (ranked
@@ -79,13 +82,45 @@ def test_read_index_starts_no_job(spark, written, layout):
             os.path.join(written[layout], table)).schema, table
 
 
+@pytest.fixture(scope="module")
+def merged(spark, sf_small, tmp_path_factory):
+    """layout -> the snapshot directory of one merge commit (a build of
+    the first 200 docs plus the rest streamed as deltas), for the layouts
+    with integer doc ids (a merge needs them)."""
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
+    out = {}
+    for name, opts in LAYOUTS.items():
+        if opts.get("string_ids"):
+            continue
+        base, cfg = tmp_path_factory.mktemp(f"merged_{name}"), opts["cfg"]
+        root, delta = str(base / "snaps"), str(base / "delta")
+        commit_snapshot(build_index(docs.filter("doc_id < 200"), cfg, doc_col="doc_id",
+                                    text_col="text"), root, cfg)
+        docs.filter("doc_id >= 200").select("doc_id", "text").write.parquet(str(base / "in"))
+        q = incremental_index_stream(spark, str(base / "in"), str(base / "ckpt"), delta, cfg)
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+        out[name] = os.path.join(root, f"v{merge_into_snapshot(spark, root, delta, cfg)}")
+    return out
+
+
 @pytest.mark.parametrize("layout", sorted(LAYOUTS))
-def test_written_layout(spark, written, layout):
-    """A written index is exactly its three tables and the stats; its
-    postings carry no positions and no term id."""
-    assert sorted(os.listdir(written[layout])) == sorted([*INDEX_TABLES, "stats.json"])
-    postings = spark.read.parquet(os.path.join(written[layout], "postings"))
-    assert postings.columns == ["term", "doc_id", "doc_int", "tf", "bucket"]
+def test_written_layout(spark, written, merged, layout):
+    """A written index, built or merged, is exactly its three tables and
+    the stats; its postings carry no positions and no term id; a merge
+    commit writes the build's postings and docs schemas."""
+    for out in [written[layout], merged.get(layout)]:
+        if out is None:
+            continue
+        assert sorted(os.listdir(out)) == sorted([*INDEX_TABLES, "stats.json"])
+        postings = spark.read.parquet(os.path.join(out, "postings"))
+        assert postings.columns == ["term", "doc_id", "doc_int", "tf", "bucket"]
+    if layout in merged:
+        for table in ("postings", "docs"):
+            assert (read_table(spark, os.path.join(merged[layout], table)).dtypes
+                    == read_table(spark, os.path.join(written[layout], table)).dtypes), table
 
 
 def test_positional_build_rejected(spark):

@@ -1,16 +1,19 @@
-"""The one routed BM25 path: WAND == exhaustive scoring (prune safety,
-SURVEY.md §5.5), a batch == its queries run alone, and a planned query
-starts one Spark job."""
+"""The one routed BM25 path: the driver route and WAND == exhaustive
+scoring and the pure-Python oracle (prune safety, SURVEY.md §5.5), a
+batch == its queries run alone, only the written layout is served in the
+driver, and a served query starts no Spark job."""
 
 from __future__ import annotations
 
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
 from information_retrieval_system_spark.config import EngineConfig
-from information_retrieval_system_spark.index.builder import build_index
+from information_retrieval_system_spark.index.builder import (
+    build_index, term_bucket, term_bucket_expr)
 from information_retrieval_system_spark.index.compression import (
     build_block_postings,
     build_dl_blocks,
@@ -18,7 +21,8 @@ from information_retrieval_system_spark.index.compression import (
     read_block_index,
     write_block_index,
 )
-from information_retrieval_system_spark.query import scoring
+from information_retrieval_system_spark.oracle.pyref import OracleIndex
+from information_retrieval_system_spark.query import scoring, wand
 from information_retrieval_system_spark.query.batch import queries_to_terms
 from information_retrieval_system_spark.query.wand import route_batch_bm25, route_bm25
 
@@ -46,6 +50,24 @@ def served(blocked, spark, tmp_path_factory):
     return read_block_index(spark, out_dir, keep_bucket=True)
 
 
+@pytest.fixture(scope="module", params=["int_ids", "string_ids"])
+def layout(request, spark, sf_small, tmp_path_factory):
+    """(cfg, index, served blocks, served dl blocks, pyref oracle) on int
+    doc ids and on string ones (doc_int ranked from them)."""
+    cfg = EngineConfig()
+    docs_df = spark.read.parquet(f"{sf_small}/documents.parquet")
+    if request.param == "string_ids":
+        docs_df = docs_df.withColumn("doc_id", F.concat(F.lit("d"), F.col("doc_id").cast("string")))
+    index = build_index(docs_df, cfg, doc_col="doc_id", text_col="text")
+    out_dir = str(tmp_path_factory.mktemp(request.param))
+    write_block_index(build_block_postings(index.postings, block_span=SPAN),
+                      build_dl_blocks(index.docs, block_span=SPAN), out_dir, term_buckets=8)
+    b_all, dlb = read_block_index(spark, out_dir, keep_bucket=True)
+    oracle = OracleIndex({r.doc_id: r.text for r in docs_df.select("doc_id", "text").collect()},
+                         use_stopwords=cfg.use_stopwords, use_stemmer=cfg.use_stemmer)
+    return cfg, index, b_all, dlb, oracle
+
+
 def jobs_started(spark, fn):
     """(fn(), number of Spark jobs fn started)."""
     sc = spark.sparkContext
@@ -65,6 +87,17 @@ def ranked(res, tol_digits: int = 9):
     for r in sorted(res.collect(), key=lambda r: (r.qid, r.rank)):
         got.setdefault(r.qid, []).append((r.doc_id, round(r.score, tol_digits)))
     return got
+
+
+def test_term_bucket_matches_spark(spark):
+    """The driver's term_bucket equals Spark's term_bucket_expr on every
+    XXH64 input path: lengths 0-79 bytes (32-byte stripes, 8- and 4-byte
+    words, tail bytes), multi-byte UTF-8 included."""
+    words = [("abcdefghé日"[i % 7:] * 9)[:n] for n in range(80) for i in range(3)]
+    df = spark.createDataFrame([(w,) for w in words], "t string")
+    for n_buckets in (8, 64, 1_000_003):
+        got = df.select("t", term_bucket_expr(F.col("t"), n_buckets).alias("b")).collect()
+        assert [r.b for r in got] == [term_bucket(r.t, n_buckets) for r in got]
 
 
 def test_blocks_roundtrip_postings(blocked):
@@ -114,14 +147,16 @@ def test_wand_dl_side_semijoin_pruned(blocked, spark):
     assert "dls_vb" in plan and "FlatMapCoGroupsInArrow" in plan
 
 
-def test_wand_served_bucket_partition_filter(blocked, served, spark):
-    """Through the persisted layout with keep_bucket=True + term_buckets,
-    the blocks scan carries a tbucket PartitionFilter, and results match
-    the in-memory blocks."""
+def test_wand_served_bucket_partition_filter(blocked, served, spark, monkeypatch):
+    """Through the persisted layout with keep_bucket=True on the (forced)
+    Spark route, the blocks scan carries a tbucket PartitionFilter, and
+    results match the in-memory blocks."""
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
     cfg, index, blocks, dl_blocks = blocked
     b_all, dlb = served
     qt = analyze_query_terms(spark, "spark join merge", cfg)
-    res, _ = route_bm25(index, b_all, dlb, qt, k=10, cfg=cfg, term_buckets=8, **ALL_WAND)
+    res, route = route_bm25(index, b_all, dlb, qt, k=10, cfg=cfg, term_buckets=8, **ALL_WAND)
+    assert route == "wand"
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "tbucket" in plan
     mem, _ = route_bm25(index, blocks, dl_blocks, qt, k=10, cfg=cfg, **ALL_WAND)
@@ -149,14 +184,17 @@ def test_batch_wand_equals_per_query_loop(blocked, spark):
     assert 4 not in want  # absent-term query yields nothing
 
 
-def test_batch_wand_served_bucket_pruned(blocked, served, spark):
-    """A batch through the persisted layout: the tbucket partition filter
-    applies to the UNION of the WAND queries' terms; results equal the
-    in-memory batch."""
+def test_batch_wand_served_bucket_pruned(blocked, served, spark, monkeypatch):
+    """A batch through the persisted layout on the (forced) Spark route:
+    the tbucket partition filter applies to the UNION of the WAND
+    queries' terms; results equal the in-memory batch."""
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
     cfg, index, blocks, dl_blocks = blocked
     b_all, dlb = served
     qt = queries_to_terms(spark, [(1, "spark join merge"), (2, "vector stream")], cfg)
-    res, _ = route_batch_bm25(index, b_all, dlb, qt, k=5, cfg=cfg, term_buckets=8, **ALL_WAND)
+    res, routes = route_batch_bm25(index, b_all, dlb, qt, k=5, cfg=cfg, term_buckets=8,
+                                   **ALL_WAND)
+    assert set(routes.values()) == {"wand"}
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "tbucket" in plan
     mem, _ = route_batch_bm25(index, blocks, dl_blocks, qt, k=5, cfg=cfg, **ALL_WAND)
@@ -221,17 +259,113 @@ def test_route_empty_queries(blocked, spark, text, wand_min_postings):
 
 
 @pytest.mark.parametrize("wand_min_postings", [0, 10**9])
-def test_planning_a_query_starts_one_job(blocked, served, spark, wand_min_postings):
+def test_planning_a_query_starts_one_job(blocked, served, spark, monkeypatch, wand_min_postings):
     """The query side is driver data: the frames of analyze_query_terms and
-    queries_to_terms collect with no Spark job, and planning a routed
-    query starts exactly one, the term-stats collect."""
+    queries_to_terms collect with no Spark job.  Over the written layout
+    (int doc ids) routing AND collecting a query start no job: it is
+    served in the driver, and on the forced Spark route the term stats
+    come from the files, so planning starts none.  Over in-memory blocks
+    planning starts exactly one, the term-stats collect."""
     cfg, index, blocks, dl_blocks = blocked
     b_all, dlb = served
     qt = analyze_query_terms(spark, "spark join merge", cfg)
     assert jobs_started(spark, qt.collect)[1] == 0
     assert jobs_started(spark, queries_to_terms(spark, [(1, "vector stream")], cfg).collect)[1] == 0
-    (res, _), n_jobs = jobs_started(spark, lambda: route_bm25(
-        index, b_all, dlb, qt, k=10, cfg=cfg, block_span=SPAN, term_buckets=8,
-        wand_min_postings=wand_min_postings))
+    kw = dict(k=10, cfg=cfg, block_span=SPAN, term_buckets=8, wand_min_postings=wand_min_postings)
+
+    def served_rows():
+        res, route = route_bm25(index, b_all, dlb, qt, **kw)
+        return route, [(r.doc_id, round(r.score, 9)) for r in res.collect()]
+
+    (route, rows), n_jobs = jobs_started(spark, served_rows)
+    assert route == "driver" and n_jobs == 0 and len(rows) == 10
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
+    (res, route), n_jobs = jobs_started(spark, lambda: route_bm25(index, b_all, dlb, qt, **kw))
+    assert route != "driver" and n_jobs == 0
+    assert [(r.doc_id, round(r.score, 9)) for r in res.collect()] == rows
+    (res, _), n_jobs = jobs_started(spark, lambda: route_bm25(index, blocks, dl_blocks, qt, **kw))
     assert n_jobs == 1
-    assert len(res.collect()) == 10
+    assert [(r.doc_id, round(r.score, 9)) for r in res.collect()] == rows
+
+
+def tie_cut(oracle, text: str) -> int:
+    """The smallest k >= 2 whose k-th and (k+1)-th oracle scores tie."""
+    full = oracle.bm25(text, k=10**6)
+    return next(i for i in range(2, len(full)) if full[i][1] == full[i - 1][1])
+
+
+def same_rows(got, want) -> bool:
+    return [d for d, _ in got] == [d for d, _ in want] and all(
+        abs(a - b) <= 1e-9 * max(1.0, abs(b)) for (_, a), (_, b) in zip(got, want))
+
+
+@pytest.mark.parametrize("text", [
+    "spark join merge",
+    "spark",            # ties at the k-th score
+    "dup spark window",  # positive and negative idf in one query
+    "zzz_absent qqq_nothing",
+    "the and or",       # all stopwords
+])
+def test_driver_route_equals_oracles(layout, spark, text):
+    """The driver route equals bm25_search and oracle/pyref.py, ties at
+    the k-th score broken on doc_id ASC, on int and string doc ids."""
+    cfg, index, b_all, dlb, oracle = layout
+    k = tie_cut(oracle, text) if oracle.bm25(text) else 10
+    qt = analyze_query_terms(spark, text, cfg)
+    res, route = route_bm25(index, b_all, dlb, qt, k=k, cfg=cfg, block_span=SPAN, term_buckets=8)
+    got = [(r.doc_id, r.score) for r in res.collect()]
+    assert route == "driver"
+    assert same_rows(got, [(r.doc_id, r.score) for r in
+                           scoring.bm25_search(index, qt, k=k, cfg=cfg).collect()])
+    assert same_rows(got, oracle.bm25(text, k=k, k1=cfg.k1, b=cfg.b))
+    if text == "dup spark window":
+        idfs = [oracle.n - 2 * oracle.df[t] for t in oracle.query_terms(text)]
+        assert min(idfs) < 0 < max(idfs)
+
+
+def test_driver_and_spark_batch_equals_queries_alone(layout, spark, monkeypatch):
+    """A batch whose qids split between the driver and the Spark routes
+    equals each of its queries run alone; a string-id batch starts at most
+    its one doc_id lookup job on the driver side."""
+    cfg, index, b_all, dlb, _ = layout
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", 450)  # single terms only
+    qs = [(1, "spark join merge"), (2, "dup"), (3, "window"), (4, "zzz_absent"),
+          (5, "vector stream")]
+    kw = dict(k=7, cfg=cfg, block_span=SPAN, term_buckets=8, wand_min_postings=800)
+    res, routes = route_batch_bm25(index, b_all, dlb, queries_to_terms(spark, qs, cfg), **kw)
+    assert set(routes.values()) == {"driver", "wand", "exhaustive"}
+    want = {}
+    for qid, text in qs:
+        one, route = route_bm25(index, b_all, dlb, analyze_query_terms(spark, text, cfg), **kw)
+        assert route == routes[qid]
+        rows = [(r.doc_id, round(r.score, 9)) for r in one.collect()]
+        if rows:
+            want[qid] = rows
+    assert ranked(res) == want and 4 not in want
+    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", 10**9)
+
+    def all_driver():
+        res, routes = route_batch_bm25(index, b_all, dlb, queries_to_terms(spark, qs, cfg), **kw)
+        return ranked(res), routes
+
+    (rows, routes), n_jobs = jobs_started(spark, all_driver)
+    assert set(routes.values()) == {"driver"} and rows == want
+    assert n_jobs == (0 if index.stats["int_doc_ids"] else 1)
+
+
+def test_derived_or_in_memory_frames_not_served(blocked, served, spark):
+    """Only the exact frames read_block_index returned are served from the
+    files: a filtered frame, a projected one and the in-memory blocks go
+    to Spark, with the same results."""
+    cfg, index, blocks, dl_blocks = blocked
+    b_all, dlb = served
+    qt = analyze_query_terms(spark, "spark join merge", cfg)
+    kw = dict(k=10, cfg=cfg, block_span=SPAN, term_buckets=8, wand_min_postings=0)
+    want, route = route_bm25(index, b_all, dlb, qt, **kw)
+    assert route == "driver"
+    want = [(r.doc_id, round(r.score, 9)) for r in want.collect()]
+    for bl, dl in [(b_all.filter(F.col("n") > 0), dlb), (b_all, dlb.select("*")),
+                   (blocks, dl_blocks)]:
+        res, route = route_bm25(index, bl, dl, qt, **kw)
+        assert route == "wand"
+        assert [(r.doc_id, round(r.score, 9)) for r in res.collect()] == want

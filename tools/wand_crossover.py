@@ -7,12 +7,16 @@ Two modes:
   regime where WAND CANNOT win, kept as the honest negative control).
 - ``--zipf [n_docs] [vocab] [parallelism]``: deterministic Zipf corpus
   (sources/zipf.py — realistic term distribution, selective tails),
-  BOTH routes of ``route_bm25`` served from the persisted layouts, the
-  threshold forcing one route or the other: exhaustive reads the
-  postings parquet and joins docs for dl; WAND reads the compressed
-  block layout with its term-bucket partition filter (dl blocks
-  aligned, no docs join).  This is WAND's regime and the fair
-  serving-vs-serving comparison.
+  ALL THREE routes of ``route_bm25`` served from the persisted layouts,
+  ``wand_min_postings`` and ``wand.DRIVER_MAX_POSTINGS`` forcing one
+  route at a time: the driver reads the query terms' block rows with
+  pyarrow and scores them in this process; Spark WAND reads the
+  compressed block layout with its term-bucket partition filter (dl
+  blocks aligned, no docs join); Spark exhaustive reads the postings
+  parquet and joins docs for dl.  Each query reports its Σdf, so the
+  timings place the driver/Spark and the WAND/exhaustive crossovers.
+  Up to 10k docs the layout has the interactive bench's geometry
+  (block span 256, 8 term buckets).
 
 Both modes run on ``get_spark``'s host-sized session (``local[CPUs
 this process may use]``); a ``parallelism`` argument overrides the CPU
@@ -21,6 +25,7 @@ count.  Prints one JSON line.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import shutil
 import sys
@@ -37,9 +42,22 @@ from information_retrieval_system_spark.index.compression import (
     build_dl_blocks,
 )
 from information_retrieval_system_spark.query import scoring
-from information_retrieval_system_spark.query.wand import route_batch_bm25, route_bm25
+from information_retrieval_system_spark.query import wand
+from information_retrieval_system_spark.query.wand import (
+    layout_term_rows, route_batch_bm25, route_bm25)
 from information_retrieval_system_spark.session import get_spark
 from information_retrieval_system_spark.sources.corpus import expand_documents
+
+
+@contextlib.contextmanager
+def driver_limit(max_postings: int):
+    """Route with ``wand.DRIVER_MAX_POSTINGS`` set to ``max_postings``:
+    -1 sends every query to Spark, a huge value every one to the driver."""
+    saved, wand.DRIVER_MAX_POSTINGS = wand.DRIVER_MAX_POSTINGS, max_postings
+    try:
+        yield
+    finally:
+        wand.DRIVER_MAX_POSTINGS = saved
 
 def zipf_query_ranks(vocab: int) -> list[tuple[int, int, int]]:
     """Query shapes as vocabulary ranks, scaled to the vocabulary size:
@@ -166,8 +184,8 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
         "eval_sec": round(eval_sec, 3),
         "eval_mean_ap": round(float(summary["mean_ap"]), 4),
         "eval_mean_ndcg": round(float(summary["mean_ndcg"]), 4),
-        "routes_wand": sum(1 for v in routes.values() if v == "wand"),
-        "routes_exhaustive": sum(1 for v in routes.values() if v == "exhaustive"),
+        "routes": {name: sum(1 for v in routes.values() if v == name)
+                   for name in ("driver", "wand", "exhaustive")},
         "loop_sample_n": sample_n,
         "loop_sample_sec": round(loop_sample_sec, 3),
         "loop_per_query_sec": round(per_q, 4),
@@ -193,7 +211,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     from information_retrieval_system_spark.index.builder import (
         read_index, read_table, write_index)
     from information_retrieval_system_spark.index.compression import (
-        read_block_index, write_block_index)
+        read_block_index, served_layout, write_block_index)
     from information_retrieval_system_spark.sources.zipf import rank_token, zipf_corpus
 
     cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
@@ -254,29 +272,36 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     # filter, dl side joined to the query's block ids)
     b_all, dlb_served = read_block_index(spark, bl_dir, keep_bucket=True)
 
-    def routed(qt, wand_min_postings):
-        res, _ = route_bm25(six, b_all, dlb_served, qt, k=k, cfg=cfg,
-                            block_span=block_span, term_buckets=term_buckets,
-                            wand_min_postings=wand_min_postings)
-        return res.collect()
+    layout = served_layout(b_all, dlb_served)
 
+    def routed(qt, wand_min_postings, driver_max):
+        with driver_limit(driver_max):
+            res, route = route_bm25(six, b_all, dlb_served, qt, k=k, cfg=cfg,
+                                    block_span=block_span, term_buckets=term_buckets,
+                                    wand_min_postings=wand_min_postings)
+            return route, [(r.doc_id, round(r.score, 6)) for r in res.collect()]
+
+    # the three routes of one query: (wand_min_postings, DRIVER_MAX_POSTINGS)
+    forced = {"driver": (0, 10**18), "wand": (0, -1), "exhaustive": (10**18, -1)}
     out["queries"] = {}
     for ranks in zipf_query_ranks(vocab):
-        qt = local_frame(spark, [(rank_token(r), 1.0) for r in ranks],
-                         "term string, qtf double")
-        routed(qt, 10**18); routed(qt, 0)  # warm both routes (JIT, python pool)
-        t_ex = t_wd = float("inf")
+        terms = [rank_token(r) for r in ranks]
+        qt = local_frame(spark, [(t, 1.0) for t in terms], "term string, qtf double")
+        for args in forced.values():  # warm every route (JIT, python pool)
+            routed(qt, *args)
+        best = {name: float("inf") for name in forced}
+        rows = {}
         for _ in range(reps):
-            t0 = time.perf_counter(); ex = routed(qt, 10**18); t_ex = min(t_ex, time.perf_counter() - t0)
-            t0 = time.perf_counter(); wd = routed(qt, 0); t_wd = min(t_wd, time.perf_counter() - t0)
-        same = ([(r.doc_id, round(r.score, 6)) for r in ex]
-                == [(r.doc_id, round(r.score, 6)) for r in wd])
-        out["queries"]["+".join(map(str, ranks))] = {
-            "exhaustive_sec": round(t_ex, 3),
-            "wand_sec": round(t_wd, 3),
-            "speedup": round(t_ex / t_wd, 2) if t_wd > 0 else None,
-            "identical_topk": same,
-        }
+            for name, args in forced.items():
+                t0 = time.perf_counter()
+                route, rows[name] = routed(qt, *args)
+                best[name] = min(best[name], time.perf_counter() - t0)
+                assert route == name, (route, name)
+        rec = {"sigma_df": int(sum(layout_term_rows(layout, terms, term_buckets)[0].values()))}
+        rec.update({f"{name}_sec": round(t, 4) for name, t in best.items()})
+        rec["wand_speedup"] = round(best["exhaustive"] / best["wand"], 2)
+        rec["identical_topk"] = rows["driver"] == rows["wand"] == rows["exhaustive"]
+        out["queries"]["+".join(map(str, ranks))] = rec
     if batch_n:
         out["batch_routed"] = run_batch_routed(
             spark, six, b_all, dlb_served, vocab,
@@ -292,7 +317,9 @@ def main_zipf() -> None:
     vocab = int(args[1]) if len(args) > 1 else 200_000
     par = int(args[2]) if len(args) > 2 else None
     spark = get_spark("wand-zipf", parallelism=par)
-    out = run_zipf_crossover(spark, n_docs, vocab)
+    small = n_docs <= 10_000
+    out = run_zipf_crossover(spark, n_docs, vocab, block_span=256 if small else 4096,
+                             term_buckets=8 if small else 64)
     out["parallelism"] = spark.sparkContext.defaultParallelism
     print(json.dumps(out))
 
