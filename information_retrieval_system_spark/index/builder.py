@@ -290,54 +290,6 @@ def term_bucket_expr(term, n_buckets: int):
     return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
 
 
-_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-_P4, _P5, _M64 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5, 2**64 - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _round(acc: int, word: int) -> int:
-    return _rotl((acc + word * _P2) & _M64, 31) * _P1 & _M64
-
-
-def term_bucket(term: str, n_buckets: int) -> int:
-    """``term_bucket_expr`` computed in the driver: Spark's ``xxhash64``
-    of the UTF-8 bytes (XXH64 with seed 42, Spark's ``XXH64``) as a
-    signed long, then ``pmod``.  Lets a reader outside Spark name a
-    term's ``tbucket`` partition."""
-    data, seed = term.encode("utf-8"), 42
-    n, i = len(data), 0
-
-    def word(at: int, width: int = 8) -> int:
-        return int.from_bytes(data[at:at + width], "little")
-
-    if n >= 32:
-        v = [(seed + _P1 + _P2) & _M64, seed + _P2, seed, (seed - _P1) & _M64]
-        while i <= n - 32:
-            v = [_round(x, word(i + 8 * j)) for j, x in enumerate(v)]
-            i += 32
-        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
-        for x in v:
-            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
-    else:
-        h = seed + _P5
-    h = (h + n) & _M64
-    while i <= n - 8:
-        h = (_rotl(h ^ _round(0, word(i)), 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = (_rotl(h ^ (word(i, 4) * _P1 & _M64), 23) * _P2 + _P3) & _M64
-        i += 4
-    for byte in data[i:]:
-        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
-    h = (h ^ (h >> 33)) * _P2 & _M64
-    h = (h ^ (h >> 29)) * _P3 & _M64
-    h ^= h >> 32
-    return (h - (1 << 64) if h >> 63 else h) % n_buckets
-
-
 def write_index(
     tables: IndexTables,
     out_dir: str,

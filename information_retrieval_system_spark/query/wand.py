@@ -14,16 +14,19 @@ single query is a batch of one (``route_bm25`` runs it as qid 0).
   ``(term, n, tbucket)`` block rows gives df = Σ ``n`` and the term's
   ``tbucket`` hive partition, with no Spark job.  Any other frames (in
   memory, or derived from a read frame) take ONE term-stats collect.
-- The first routing choice is driver or Spark, by each qid's ``Σ df``
-  (the posting rows an exhaustive plan would score):
-  - driver: on the written layout and ``Σ df <= DRIVER_MAX_POSTINGS``.
-    pyarrow reads the qid's block rows (its terms' tbucket partitions, a
-    ``term`` filter) and the dl blocks they touch; ``score_block`` scores
-    each (qid, block) in this process.  The rows come back as a local
-    relation already in rank order: 0 Spark jobs for int doc ids, one
-    doc_int -> doc_id lookup job for string ones;
-  - Spark: ``>= wand_min_postings`` -> block-max WAND, ``score_block``
-    run by an ``applyInArrow`` cogroup kernel; below -> the exhaustive
+- The first routing choice is driver or Spark:
+  - driver: on the written layout, smallest qids first while the block
+    rows of the driver qids' distinct terms, which the driver holds at
+    once, fit in ``DRIVER_MAX_BYTES`` (a bound on the batch, not per
+    qid).  pyarrow reads those rows (their tbucket partitions, a
+    ``term`` filter) and the dl blocks they touch; ``score_block``
+    scores each (qid, block) in this process.  The rows come back as a
+    local relation already in rank order: 0 Spark jobs for int doc ids,
+    one doc_int -> doc_id lookup job for string ones;
+  - Spark, by each qid's ``Σ df`` (the posting rows an exhaustive plan
+    would score): ``>= wand_min_postings`` -> block-max WAND,
+    ``score_block`` run by an ``applyInArrow`` cogroup kernel; below ->
+    the exhaustive
     ``scoring.bm25_scores`` plan.  ONE per-qid window over the union of
     both cuts each query's top-k under (score DESC, doc_id ASC).
 - Every route is exact, so routing is invisible in values; the route
@@ -69,22 +72,30 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..analysis.analyzer import local_frame
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..index.builder import term_bucket, term_bucket_expr
+from ..index.builder import term_bucket_expr
 from ..index.compression import DEFAULT_BLOCK_SPAN, BlockLayout, served_layout, vbyte_decode
 from .batch import rank_per_qid
 from .scoring import bm25_scores
 
-#: Σdf at or below which a qid on a written layout is scored in the
-#: driver.  ``tools/wand_crossover.py --zipf`` on 4 vCPUs (local[4]) found
-#: no crossover: the driver beat both Spark routes at every Σdf measured,
-#: 176 to 772k postings over 2k-1M docs (0.03 s against 0.47-0.65 s at 2k
-#: docs; 0.14 s against 0.88 s WAND and 1.66 s exhaustive at 772k), so
-#: the limit is the measured range, rounded up.  Memory: a driver query
-#: holds its terms' encoded block rows (a few bytes per posting) and
-#: decodes one block at a time behind two 32 MB decode memos; even all 1M
-#: postings decoded at once (uint64 doc + tf) would be 16 MB, three
-#: orders of magnitude under a 16 GB host.
-DRIVER_MAX_POSTINGS = 1_000_000
+#: what ``driver_ranked`` holds per block row (the row's Python objects:
+#: its tuple, term, block id and both VByte payloads) and per posting (the
+#: encoded bytes).  Measured with tracemalloc on 200k Zipf docs at block
+#: spans 256 and 4096: 300-380 B per row; 2.0-3.8 B per posting.
+ROW_BYTES, POSTING_BYTES = 400, 4
+
+#: the driver route's budget for one routed call: the estimated bytes
+#: (``ROW_BYTES``, ``POSTING_BYTES``) of the distinct terms of every
+#: driver-served qid; the other qids go to Spark.  Besides it the driver
+#: holds the two 32 MiB decode memos and Arrow's scan buffers (10-120 MB
+#: measured), so one call stays near 0.5 GiB.  A memory bound, since no
+#: time crossover was found on 4 vCPUs: the driver beat both Spark routes
+#: on every single query ``tools/wand_crossover.py --zipf`` measured (Σdf
+#: 176 to 772k over 2k-1M docs), on its 635-query batch at 200k docs
+#: (7.6-8.9 s against 14.5 s all on Spark) and on a 50-qid batch of
+#: 14,000 Zipf tail terms (Σdf 583k at 200k docs: 10.5 s against 21.3 s
+#: for Spark WAND).  Σdf alone is no memory bound: that tail batch holds
+#: 539k block rows, the 635-query batch 29,550 rows for 4.3M postings.
+DRIVER_MAX_BYTES = 384 * 2**20
 
 # per-worker shared pruning state: {query_key: heap of best scores (size<=k)}
 _THRESH: dict[str, list[float]] = {}
@@ -144,19 +155,18 @@ def collect_query_term_rows(terms: DataFrame, qset: list[str],
     return terms.filter(F.col("term").isin(list(qset))).select(*sel).collect()
 
 
-def layout_term_rows(layout: BlockLayout, qset: list[str],
-                     term_buckets: int | None) -> tuple[dict, dict]:
+def layout_term_rows(layout: BlockLayout, qset: list[str]) -> tuple[dict, dict, dict]:
     """The same (df, tbucket) per query term, read from a written layout
-    by pyarrow in the driver: df is the Σ ``n`` of the term's block rows
-    and tbucket its hive partition.  With ``term_buckets`` the read
-    opens only the query terms' partitions (``term_bucket``), else every
-    one.  No Spark job."""
-    keep = pc.field("term").isin(qset)
-    if term_buckets:
-        keep &= pc.field("tbucket").isin(sorted({term_bucket(t, term_buckets) for t in qset}))
-    t = layout.blocks.to_table(columns=["term", "n", "tbucket"], filter=keep)
-    g = t.group_by(["term", "tbucket"]).aggregate([("n", "sum")]).to_pydict()
+    by pyarrow in the driver, plus the bytes the driver route holds for
+    the term: df is the Σ ``n`` of the term's block rows and tbucket its
+    hive partition.  A ``term`` filter over every partition, so no bucket
+    count is assumed.  No Spark job."""
+    t = layout.blocks.to_table(columns=["term", "n", "tbucket"],
+                               filter=pc.field("term").isin(qset))
+    g = t.group_by(["term", "tbucket"]).aggregate([("n", "sum"), ("n", "count")]).to_pydict()
     return (dict(zip(g["term"], map(float, g["n_sum"]))),
+            {t: r * ROW_BYTES + n * POSTING_BYTES
+             for t, r, n in zip(g["term"], g["n_count"], g["n_sum"])},
             dict(zip(g["term"], g["tbucket"])))
 
 
@@ -346,21 +356,32 @@ def _route(index, blocks, dl_blocks, queries: dict[int, set[str]], k, cfg, block
     spark = blocks.sparkSession
     union_terms = sorted({t for ts in queries.values() for t in ts})
     layout = served_layout(blocks, dl_blocks)
+    held: dict[str, int] = {}  # term -> bytes the driver route holds
     if not union_terms:
         dfmap, tbmap = {}, {}
     elif layout is not None:
-        dfmap, tbmap = layout_term_rows(layout, union_terms, term_buckets)
+        dfmap, held, tbmap = layout_term_rows(layout, union_terms)
     else:
         trows = collect_query_term_rows(index.terms, union_terms, blocks, term_buckets)
         dfmap = {r.term: float(r.df) for r in trows}
         tbmap = {r.term: int(r.tb) for r in trows if "tb" in r.asDict()}
 
-    def choose(sigma_df: float) -> str:
-        if layout is not None and sigma_df <= DRIVER_MAX_POSTINGS:
-            return "driver"
-        return "wand" if sigma_df >= wand_min_postings else "exhaustive"
-
-    routes = {q: choose(sum(dfmap.get(t, 0) for t in ts)) for q, ts in queries.items()}
+    # driver admission, smallest first: a qid is served in the driver
+    # while the terms of every qid served so far fit in DRIVER_MAX_BYTES
+    # (driver_ranked holds all their block rows at once)
+    sigma = {q: sum(dfmap.get(t, 0) for t in ts) for q, ts in queries.items()}
+    routes: dict[int, str] = {}
+    in_driver: set[str] = set()
+    load = 0
+    for q in sorted(queries, key=lambda q: (sum(held.get(t, 0) for t in queries[q]), q)):
+        new = {t for t in queries[q] if t in held} - in_driver
+        add = sum(held[t] for t in new)
+        if layout is not None and load + add <= DRIVER_MAX_BYTES:
+            routes[q] = "driver"
+            in_driver |= new
+            load += add
+        else:
+            routes[q] = "wand" if sigma[q] >= wand_min_postings else "exhaustive"
 
     def pairs(name: str) -> list[tuple[int, str]]:
         return [(q, t) for q in sorted(queries) if routes[q] == name
@@ -442,11 +463,11 @@ def route_batch_bm25(
     ``blocks``/``dl_blocks`` come from compression.build_* or
     ``read_block_index``; only the exact pair ``read_block_index``
     returned is served from its files (the driver route).
-    ``term_buckets`` is the layout's bucket count (``write_block_index``):
-    with it, the driver's reads open only the query terms' ``tbucket``
-    partitions.  Over ``keep_bucket=True`` frames the Spark WAND blocks
-    scan carries a ``tbucket`` partition filter, its buckets read from the
-    layout when served, else computed from ``term_buckets`` (when given).
+    ``term_buckets`` is the layout's bucket count (``write_block_index``).
+    Over ``keep_bucket=True`` frames the Spark WAND blocks scan carries a
+    ``tbucket`` partition filter, its buckets read from the layout's
+    partitions when served, else computed from ``term_buckets`` (when
+    given); the driver route reads each term's bucket from the layout.
     ``wand_min_postings``
     is the Spark route's crossover: WAND beat exhaustive from ~50k-90k
     postings at 200k-1M Zipf docs and never at 2k-10k docs (CHANGES.md);
@@ -475,12 +496,14 @@ def route_bm25(index, blocks: DataFrame, dl_blocks: DataFrame, query_terms: Data
     """One query (term[, qtf]) routed as the batch of one, qid 0 ->
     ((doc_id, score) top-k in rank order, route).  A driver result, or a
     query that matches no term, is a local relation already in rank
-    order; a query with no terms reports "driver"."""
+    order.  A query with no terms reports "driver" over a served layout,
+    else "exhaustive"."""
     terms = {r.term for r in query_terms.collect()}
     ranked, driver, id_type, routes = _route(
         index, blocks, dl_blocks, {0: terms} if terms else {}, k, cfg, block_span,
         term_buckets, wand_min_postings)
-    route = routes.get(0, "driver")
+    route = routes.get(0) or (
+        "driver" if served_layout(blocks, dl_blocks) is not None else "exhaustive")
     if ranked is not None:
         # the limit plans a k-row top-k merge, not a range-partitioned sort
         return ranked.orderBy("rank").limit(k).select("doc_id", "score"), route

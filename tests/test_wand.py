@@ -12,13 +12,13 @@ from pyspark.sql import functions as F
 
 from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
 from information_retrieval_system_spark.config import EngineConfig
-from information_retrieval_system_spark.index.builder import (
-    build_index, term_bucket, term_bucket_expr)
+from information_retrieval_system_spark.index.builder import build_index
 from information_retrieval_system_spark.index.compression import (
     build_block_postings,
     build_dl_blocks,
     decode_block,
     read_block_index,
+    served_layout,
     write_block_index,
 )
 from information_retrieval_system_spark.oracle.pyref import OracleIndex
@@ -89,17 +89,6 @@ def ranked(res, tol_digits: int = 9):
     return got
 
 
-def test_term_bucket_matches_spark(spark):
-    """The driver's term_bucket equals Spark's term_bucket_expr on every
-    XXH64 input path: lengths 0-79 bytes (32-byte stripes, 8- and 4-byte
-    words, tail bytes), multi-byte UTF-8 included."""
-    words = [("abcdefghé日"[i % 7:] * 9)[:n] for n in range(80) for i in range(3)]
-    df = spark.createDataFrame([(w,) for w in words], "t string")
-    for n_buckets in (8, 64, 1_000_003):
-        got = df.select("t", term_bucket_expr(F.col("t"), n_buckets).alias("b")).collect()
-        assert [r.b for r in got] == [term_bucket(r.t, n_buckets) for r in got]
-
-
 def test_blocks_roundtrip_postings(blocked):
     cfg, index, blocks, dl_blocks = blocked
     # decode every block and compare against the raw postings rows
@@ -151,7 +140,7 @@ def test_wand_served_bucket_partition_filter(blocked, served, spark, monkeypatch
     """Through the persisted layout with keep_bucket=True on the (forced)
     Spark route, the blocks scan carries a tbucket PartitionFilter, and
     results match the in-memory blocks."""
-    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
+    monkeypatch.setattr(wand, "DRIVER_MAX_BYTES", -1)
     cfg, index, blocks, dl_blocks = blocked
     b_all, dlb = served
     qt = analyze_query_terms(spark, "spark join merge", cfg)
@@ -188,7 +177,7 @@ def test_batch_wand_served_bucket_pruned(blocked, served, spark, monkeypatch):
     """A batch through the persisted layout on the (forced) Spark route:
     the tbucket partition filter applies to the UNION of the WAND
     queries' terms; results equal the in-memory batch."""
-    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
+    monkeypatch.setattr(wand, "DRIVER_MAX_BYTES", -1)
     cfg, index, blocks, dl_blocks = blocked
     b_all, dlb = served
     qt = queries_to_terms(spark, [(1, "spark join merge"), (2, "vector stream")], cfg)
@@ -249,8 +238,10 @@ def test_route_empty_queries(blocked, spark, text, wand_min_postings):
     through both adapters, on either route."""
     cfg, index, blocks, dl_blocks = blocked
     kw = dict(k=10, cfg=cfg, block_span=SPAN, wand_min_postings=wand_min_postings)
-    one, _ = route_bm25(index, blocks, dl_blocks, analyze_query_terms(spark, text, cfg), **kw)
+    one, route = route_bm25(index, blocks, dl_blocks, analyze_query_terms(spark, text, cfg), **kw)
     assert one.collect() == []
+    if text == "the and or":  # no terms: in-memory frames are never "driver"
+        assert route == "exhaustive"
     batch, _ = route_batch_bm25(index, blocks, dl_blocks,
                                 queries_to_terms(spark, [(7, text)], cfg), **kw)
     assert batch.collect() == []
@@ -279,7 +270,7 @@ def test_planning_a_query_starts_one_job(blocked, served, spark, monkeypatch, wa
 
     (route, rows), n_jobs = jobs_started(spark, served_rows)
     assert route == "driver" and n_jobs == 0 and len(rows) == 10
-    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", -1)
+    monkeypatch.setattr(wand, "DRIVER_MAX_BYTES", -1)
     (res, route), n_jobs = jobs_started(spark, lambda: route_bm25(index, b_all, dlb, qt, **kw))
     assert route != "driver" and n_jobs == 0
     assert [(r.doc_id, round(r.score, 9)) for r in res.collect()] == rows
@@ -323,26 +314,52 @@ def test_driver_route_equals_oracles(layout, spark, text):
         assert min(idfs) < 0 < max(idfs)
 
 
+def test_driver_route_ignores_term_buckets(layout, spark):
+    """The driver route reads each term's df and bucket from the layout's
+    partitions, so a wrong or missing ``term_buckets`` changes nothing."""
+    cfg, index, b_all, dlb, _ = layout
+    qt = analyze_query_terms(spark, "spark join merge", cfg)
+    got = []
+    for term_buckets in (8, None, 3, 64):
+        res, route = route_bm25(index, b_all, dlb, qt, k=10, cfg=cfg, block_span=SPAN,
+                                term_buckets=term_buckets)
+        assert route == "driver"
+        got.append([(r.doc_id, round(r.score, 9)) for r in res.collect()])
+    assert len(got[0]) == 10 and all(g == got[0] for g in got)
+
+
 def test_driver_and_spark_batch_equals_queries_alone(layout, spark, monkeypatch):
     """A batch whose qids split between the driver and the Spark routes
-    equals each of its queries run alone; a string-id batch starts at most
-    its one doc_id lookup job on the driver side."""
+    equals each of its queries run alone.  DRIVER_MAX_BYTES bounds the
+    batch: qids are admitted smallest first while their distinct terms'
+    block rows fit, and a qid that fits alone can still go to Spark.  A
+    string-id batch starts at most its one doc_id lookup job on the
+    driver side."""
     cfg, index, b_all, dlb, _ = layout
-    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", 450)  # single terms only
     qs = [(1, "spark join merge"), (2, "dup"), (3, "window"), (4, "zzz_absent"),
-          (5, "vector stream")]
+          (5, "vector stream"), (6, "dup window")]
+
+    def held(text: str) -> int:
+        terms = [r.term for r in analyze_query_terms(spark, text, cfg).collect()]
+        return sum(wand.layout_term_rows(served_layout(b_all, dlb), terms)[1].values())
+
+    # each of qids 2, 3 and 5 fits alone, not all three together
+    cap = max(held("dup") + held("window"), held("vector stream"))
+    monkeypatch.setattr(wand, "DRIVER_MAX_BYTES", cap)
     kw = dict(k=7, cfg=cfg, block_span=SPAN, term_buckets=8, wand_min_postings=800)
     res, routes = route_batch_bm25(index, b_all, dlb, queries_to_terms(spark, qs, cfg), **kw)
-    assert set(routes.values()) == {"driver", "wand", "exhaustive"}
+    # smallest first: 4 (no rows), 2, 3, then 6 adds no term; 5 no longer fits
+    assert routes == {1: "wand", 2: "driver", 3: "driver", 4: "driver",
+                      5: "exhaustive", 6: "driver"}
     want = {}
     for qid, text in qs:
         one, route = route_bm25(index, b_all, dlb, analyze_query_terms(spark, text, cfg), **kw)
-        assert route == routes[qid]
+        assert route == ("wand" if qid == 1 else "driver")
         rows = [(r.doc_id, round(r.score, 9)) for r in one.collect()]
         if rows:
             want[qid] = rows
     assert ranked(res) == want and 4 not in want
-    monkeypatch.setattr(wand, "DRIVER_MAX_POSTINGS", 10**9)
+    monkeypatch.setattr(wand, "DRIVER_MAX_BYTES", 10**12)
 
     def all_driver():
         res, routes = route_batch_bm25(index, b_all, dlb, queries_to_terms(spark, qs, cfg), **kw)

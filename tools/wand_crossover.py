@@ -8,7 +8,7 @@ Two modes:
 - ``--zipf [n_docs] [vocab] [parallelism]``: deterministic Zipf corpus
   (sources/zipf.py — realistic term distribution, selective tails),
   ALL THREE routes of ``route_bm25`` served from the persisted layouts,
-  ``wand_min_postings`` and ``wand.DRIVER_MAX_POSTINGS`` forcing one
+  ``wand_min_postings`` and ``wand.DRIVER_MAX_BYTES`` forcing one
   route at a time: the driver reads the query terms' block rows with
   pyarrow and scores them in this process; Spark WAND reads the
   compressed block layout with its term-bucket partition filter (dl
@@ -50,14 +50,14 @@ from information_retrieval_system_spark.sources.corpus import expand_documents
 
 
 @contextlib.contextmanager
-def driver_limit(max_postings: int):
-    """Route with ``wand.DRIVER_MAX_POSTINGS`` set to ``max_postings``:
-    -1 sends every query to Spark, a huge value every one to the driver."""
-    saved, wand.DRIVER_MAX_POSTINGS = wand.DRIVER_MAX_POSTINGS, max_postings
+def driver_limit(max_bytes: int):
+    """Route with ``wand.DRIVER_MAX_BYTES`` set to ``max_bytes``: -1
+    sends every query to Spark, a huge value every one to the driver."""
+    saved, wand.DRIVER_MAX_BYTES = wand.DRIVER_MAX_BYTES, max_bytes
     try:
         yield
     finally:
-        wand.DRIVER_MAX_POSTINGS = saved
+        wand.DRIVER_MAX_BYTES = saved
 
 def zipf_query_ranks(vocab: int) -> list[tuple[int, int, int]]:
     """Query shapes as vocabulary ranks, scaled to the vocabulary size:
@@ -103,6 +103,7 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
 
     - ``batch_sec``: route_batch_bm25 over all ``n_queries`` — one
       driver collect routes every qid, <=2 scoring plans total;
+      ``batch_spark_sec`` the same batch with every qid on Spark;
     - ``loop_sample``: the first ``sample_n`` queries through the
       per-query route_bm25 loop (each = its own routing job + scoring
       plan), plus the SAME sample batched — a fully measured
@@ -138,6 +139,16 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
     res = res.localCheckpoint(eager=True)
     full = {(r.qid, r.rank): (r.doc_id, round(r.score, 6)) for r in res.collect()}
     batch_sec = time.perf_counter() - t0
+
+    # the same batch with every qid forced onto the Spark routes
+    t0 = time.perf_counter()
+    with driver_limit(-1):
+        sres, _ = route_batch_bm25(
+            six, b_all, dlb_served, batch_df(range(n_queries)), k=k, cfg=cfg,
+            block_span=block_span, term_buckets=term_buckets,
+            wand_min_postings=wand_min_postings)
+        spark_full = {(r.qid, r.rank): (r.doc_id, round(r.score, 6)) for r in sres.collect()}
+    batch_spark_sec = time.perf_counter() - t0
 
     sample = list(range(sample_n))
     t0 = time.perf_counter()
@@ -181,6 +192,8 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
     return {
         "n_queries": n_queries,
         "batch_sec": round(batch_sec, 3),
+        "batch_spark_sec": round(batch_spark_sec, 3),
+        "batch_spark_identical": spark_full == full,
         "eval_sec": round(eval_sec, 3),
         "eval_mean_ap": round(float(summary["mean_ap"]), 4),
         "eval_mean_ndcg": round(float(summary["mean_ndcg"]), 4),
@@ -281,7 +294,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
                                     wand_min_postings=wand_min_postings)
             return route, [(r.doc_id, round(r.score, 6)) for r in res.collect()]
 
-    # the three routes of one query: (wand_min_postings, DRIVER_MAX_POSTINGS)
+    # the three routes of one query: (wand_min_postings, DRIVER_MAX_BYTES)
     forced = {"driver": (0, 10**18), "wand": (0, -1), "exhaustive": (10**18, -1)}
     out["queries"] = {}
     for ranks in zipf_query_ranks(vocab):
@@ -297,7 +310,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
                 route, rows[name] = routed(qt, *args)
                 best[name] = min(best[name], time.perf_counter() - t0)
                 assert route == name, (route, name)
-        rec = {"sigma_df": int(sum(layout_term_rows(layout, terms, term_buckets)[0].values()))}
+        rec = {"sigma_df": int(sum(layout_term_rows(layout, terms)[0].values()))}
         rec.update({f"{name}_sec": round(t, 4) for name, t in best.items()})
         rec["wand_speedup"] = round(best["exhaustive"] / best["wand"], 2)
         rec["identical_topk"] = rows["driver"] == rows["wand"] == rows["exhaustive"]
