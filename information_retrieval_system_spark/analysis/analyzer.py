@@ -70,17 +70,18 @@ def stopword_filter_condition(term: Column, include_operators: bool = True) -> C
 
 def analyze_tokens(
     df: DataFrame,
-    text_col: str,
+    tokens: Column,
     id_cols: list[str],
     use_stopwords: bool = True,
     use_stemmer: bool = True,
 ) -> DataFrame:
-    """Full T2-T7 pipeline: id_cols + (pos, term), one row per kept
-    token; ``pos`` is the 0-based pre-filter token position.  The stem
-    runs on the token stream (the index build stems its distinct token
-    set instead, ``index.builder``)."""
+    """T5-T7 over a token array (``tokens_array_expr``, T2-T3, of the
+    text): id_cols + (pos, term), one row per kept token; ``pos`` is the
+    0-based pre-filter token position.  The stem runs on the token stream
+    (the index build stems its distinct token set instead,
+    ``index.builder``)."""
     toks = df.select(*[F.col(c) for c in id_cols],
-                     F.posexplode(tokens_array_expr(F.col(text_col))).alias("pos", "token"))
+                     F.posexplode(tokens).alias("pos", "token"))
     if use_stopwords:
         toks = toks.filter(stopword_filter_condition(F.col("token")))
     if not use_stemmer:

@@ -47,8 +47,9 @@ class EngineConfig:
     pagerank_checkpoint_every: int = 5
 
     # --- index layout -------------------------------------------------
-    #: number of term buckets the written postings/blocks tables are
-    #: partitioned by: a query reads only the buckets of its terms.
+    #: read by nothing: the written postings are unbucketed, and the
+    #: block layout takes its bucket count as ``write_block_index``'s
+    #: argument.  Kept because the ``irbench`` workloads pass it.
     term_buckets: int = 32
 
 

@@ -9,14 +9,15 @@ the routed path (``query/wand.py``) and the bench are checked against;
 Plan shape (SURVEY.md §3 E2) over a written index without candidates:
 ``broadcast(query_terms) ⋈ terms`` (a scan of the terms table) yields
 the query-sized (term, df) frame, which is broadcast into a scan of ALL
-postings buckets (no partition filter: nothing maps the query terms to
-``bucket`` values here) --> ``⋈ docs`` (length; a broadcast join while
+postings files (the written postings are unbucketed; over a snapshot,
+every segment's file) --> ``⋈ docs`` (length; a broadcast join while
 docs fit under ``spark.sql.autoBroadcastJoinThreshold``) --> partial sum
 per doc --> ONE shuffle, ``Exchange hashpartitioning([qid,] doc_id)``
 --> final sum.  ``bm25_search`` then plans ``TakeOrderedAndProject(k)``
 (per-partition top-k plus a driver-side merge of the k-row partials, no
 second shuffle).  Candidates add a semi-join on ([qid,] doc_id) before
-the docs join.
+the docs join.  The VSM norms that ``read_index`` derives on ``docs``
+are not in this plan: the optimizer drops the unread join.
 
 Scoring semantics, with reference citations:
 - BM25 (OkapiBM25_FR.java:160,329): ``idf = log2((N - df + 0.5)/(df+0.5))``;

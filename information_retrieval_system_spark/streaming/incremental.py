@@ -3,19 +3,19 @@
 The reference is strictly batch (SURVEY.md §2.9); this module is the
 Spark-native growth path a production corpus needs: new corpus files land
 in a directory, a file-source stream picks them up, and ``foreachBatch``
-runs the SAME batch analyzer/aggregation pipeline per micro-batch.  Each
-micro-batch ``n`` writes its own delta directories,
-``postings_delta/batch_id=<n>/`` and then ``docs_delta/batch_id=<n>/``;
-the ``_SUCCESS`` marker of the docs directory is the batch's commit
-marker.  Both writes overwrite their directory, so a batch that Spark
-replays after a crash (``foreachBatch`` is at-least-once) replaces its
+runs the batch analyzer per micro-batch, normalizing each document once.
+Each micro-batch ``n`` writes its own delta directories,
+``docs_delta/batch_id=<n>/`` and ``postings_delta/batch_id=<n>/``; the
+batch counts as written once both hold a ``_SUCCESS`` marker.  Both
+writes overwrite their directory, so a batch that Spark replays after a
+crash (``foreachBatch`` is at-least-once) replaces its
 own output instead of adding a second copy.  Because a document arrives
 exactly once, per-batch (term, doc) aggregates are disjoint across
-batches.  ``merge_into_snapshot`` is the one commit path: it unions the
-current snapshot with the new batches, re-derives the global stats (df,
-N, avgdl) by one aggregation over the union (the streaming analog of the
-reference's merge cascade, which Spark's shuffle already replaced in
-batch mode) and commits the result as a new snapshot.
+batches.  ``merge_into_snapshot`` is the one commit path, and it costs
+O(delta): the new snapshot hard-links its parent's files and appends
+the delta as one segment, Lucene's immutable segments in place of the
+reference's merge cascade; the term stats (df, cf) add, and a bounded
+segment count (``SEGMENT_LIMIT``) folds the segments back into one.
 
 ``trigger(availableNow=True)`` drains everything pending then stops —
 the cron-style incremental build; remove it for continuous mode.
@@ -23,37 +23,55 @@ the cron-style incremental build; remove it for continuous mode.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..analysis.analyzer import analyze_tokens, doc_length_expr
+from ..analysis.analyzer import analyze_tokens, tokens_array_expr
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..index.builder import IndexTables, read_table, with_vsm_norms
+from ..index.builder import IndexTables, data_files, read_table, write_index, write_stats
 
 CORPUS_STREAM_SCHEMA = "doc_id long, text string"
+
+#: the most segments a snapshot holds: a merge into a snapshot that
+#: already has this many folds it and the delta into one segment.  Each
+#: segment adds one postings and one docs file to every read, and small
+#: files store ~16 % more bytes per doc than one folded segment.  The
+#: first read measured flat from 10 to 65 segments (README, "Segment
+#: limit"); 32 keeps within that range and folds 1 commit in 32.
+SEGMENT_LIMIT = 32
 
 
 def _process_batch_factory(out_dir: str, cfg: EngineConfig,
                            doc_col: str, text_col: str):
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # no emptiness probe (one job per batch): an empty batch writes
-        # empty delta files, and merge_into_snapshot's stats aggregation,
-        # which it runs anyway, finds no new docs in them
-        docs = batch_df.select(
-            F.col(doc_col).alias("doc_id"), F.col(text_col).alias("content")
-        ).withColumn("length", doc_length_expr(F.col("content")))
-        toks = analyze_tokens(
-            docs, "content", ["doc_id"],
-            use_stopwords=cfg.use_stopwords, use_stemmer=cfg.use_stemmer,
-        )
-        postings = toks.groupBy("term", "doc_id").agg(F.count("*").cast("int").alias("tf"))
-        part = f"batch_id={batch_id}"
-        postings.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "postings_delta", part))
-        # docs last: their _SUCCESS marks the whole batch as written
-        docs.select("doc_id", "length").write.mode("overwrite").parquet(
-            os.path.join(out_dir, "docs_delta", part))
+        # empty delta files, which merge_into_snapshot counts as no docs.
+        # The normalizer runs once: its token arrays are staged for both
+        # writes (the postings' tokens and the docs' pre-filter lengths),
+        # as build_index stages them.
+        arrs = batch_df.select(
+            F.col(doc_col).alias("doc_id"),
+            tokens_array_expr(F.col(text_col)).alias("_arr"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            toks = analyze_tokens(arrs, F.col("_arr"), ["doc_id"],
+                                  use_stopwords=cfg.use_stopwords, use_stemmer=cfg.use_stemmer)
+            postings = toks.groupBy("term", "doc_id").agg(F.count("*").cast("int").alias("tf"))
+            part = f"batch_id={batch_id}"
+            # docs first: their write fills the staged arrays in its one
+            # job, where the postings aggregation would stage them in a
+            # job of their own
+            arrs.select("doc_id", F.size("_arr").alias("length")).write.mode(
+                "overwrite").parquet(os.path.join(out_dir, "docs_delta", part))
+            postings.write.mode("overwrite").parquet(
+                os.path.join(out_dir, "postings_delta", part))
+        finally:
+            arrs.unpersist()
 
     return process
 
@@ -86,32 +104,17 @@ def incremental_index_stream(
     return writer.start()
 
 
-#: the additive index stats: a merge adds the new batches' to the parent's
-ADDITIVE_STATS = ("n_docs", "total_len", "n_postings")
-
-
-def _delta_stats(postings: DataFrame, docs: DataFrame) -> dict:
-    """``ADDITIVE_STATS`` of (term, doc_id, tf) + (doc_id, length) delta
-    tables, by one aggregation over both."""
-    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
-    rows = docs.select(
-        one.alias("n_docs"), F.col("length").cast("long").alias("total_len"),
-        zero.alias("n_postings"),
-    ).unionByName(postings.select(
-        zero.alias("n_docs"), zero.alias("total_len"), one.alias("n_postings")))
-    r = rows.agg(*[F.sum(k).alias(k) for k in ADDITIVE_STATS]).collect()[0]
-    return {k: int(r[k] or 0) for k in ADDITIVE_STATS}
-
-
-def _written_batches(docs_dir: str) -> list[int]:
-    """Ids of the delta batches whose docs write finished (their
-    ``batch_id=<n>`` directory holds a ``_SUCCESS`` marker), ascending."""
-    if not os.path.isdir(docs_dir):
-        return []
-    return sorted(
-        int(name.split("=", 1)[1]) for name in os.listdir(docs_dir)
-        if name.startswith("batch_id=")
-        and os.path.exists(os.path.join(docs_dir, name, "_SUCCESS")))
+def _written_batches(delta_dir: str) -> list[int]:
+    """Ids of the delta batches whose two writes both finished (their
+    ``batch_id=<n>`` directories under ``postings_delta/`` and
+    ``docs_delta/`` hold a ``_SUCCESS`` marker), ascending."""
+    done = []
+    for table in ("postings_delta", "docs_delta"):
+        t_dir = os.path.join(delta_dir, table)
+        done.append({name for name in (os.listdir(t_dir) if os.path.isdir(t_dir) else [])
+                     if name.startswith("batch_id=")
+                     and os.path.exists(os.path.join(t_dir, name, "_SUCCESS"))})
+    return sorted(int(name.split("=", 1)[1]) for name in set.intersection(*done))
 
 
 def merge_into_snapshot(
@@ -121,17 +124,26 @@ def merge_into_snapshot(
     cfg: EngineConfig = DEFAULT_CONFIG,
     note: str = "",
 ) -> int:
-    """The APPEND-MERGE commit — the production index-update path
-    composed end-to-end: union the CURRENT snapshot's postings/docs
-    with the new streaming delta batches, re-derive the global tables
-    (df/cf/stats, and the VSM norms with the builder's floor-idf quirk —
-    the stream's per-batch aggregates and the snapshot's doc sets are
-    disjoint, so the union IS the posting set), and commit the result as
-    a NEW immutable snapshot (operation "merge-append").  Prior
-    snapshots stay readable (time travel) and GC-able (expire_snapshots)
-    — the Iceberg append-commit analog for the serving index.  ``n_docs``,
-    ``total_len`` and ``n_postings`` are the parent snapshot's plus the
-    new batches' (``ADDITIVE_STATS``).
+    """The APPEND-MERGE commit: the new streaming delta batches become a
+    NEW immutable snapshot (operation "merge-append") in O(delta):
+
+    - the parent's ``postings/`` and ``docs/`` files are hard-linked into
+      the new ``v<N>/``, and the delta is appended as one segment: one
+      postings file and one docs file, in the parent's schemas (metadata
+      columns null);
+    - ``terms/`` is the parent's plus the delta's per-term (df, cf), by
+      one aggregation (the stream's per-batch aggregates and the
+      snapshot's doc sets are disjoint, so df and cf add);
+    - ``stats.json`` adds the delta's ``n_docs``, ``n_postings`` and
+      ``total_len``, read from parquet footers and the delta's
+      ``length`` column without a Spark job.  VSM norms depend on N and
+      every df, so no snapshot stores them: ``read_index`` derives them.
+
+    A merge into a snapshot with ``SEGMENT_LIMIT`` segments (the log
+    entry's ``segments``) folds it instead: parent plus delta are
+    rewritten as one segment by ``write_index``.  Prior snapshots stay
+    readable (time travel) and GC-able (``expire_snapshots``): they share
+    files by link, and no file is rewritten in place.
 
     Invariant: a document lands EITHER in the snapshot or in the deltas
     (exactly-once file landing — same invariant the streaming module
@@ -140,12 +152,11 @@ def merge_into_snapshot(
 
     RE-MERGEABLE: each merge commit records the highest delta
     ``batch_id`` it consumed (``merge_watermark`` on the log entry), and
-    the next merge reads only the written batches (``_SUCCESS`` in
-    ``docs_delta/batch_id=<n>/``, found by listing the directory) past
-    it — so calling this repeatedly as the stream keeps writing never
-    double-counts an already-merged batch.  With no new batch, or only
-    batches without documents, it is a NO-OP returning the current
-    snapshot id.
+    the next merge reads only the written batches (``_SUCCESS`` in both
+    of their delta directories, found by listing) past it — so calling
+    this repeatedly as the stream keeps writing never double-counts an
+    already-merged batch.  With no new batch, or only batches without
+    documents, it is a NO-OP returning the current snapshot id.
 
     The watermark is sound within ONE streaming checkpoint lineage:
     Structured Streaming's batch_id is monotonic per checkpoint, so the
@@ -154,50 +165,76 @@ def merge_into_snapshot(
     FRESH checkpoint at a delta dir that already has merged batches
     would reuse low batch ids; use a new delta dir instead.
     Returns the committed (or current) snapshot id."""
-    from ..index.snapshots import commit_snapshot, read_snapshot, snapshot_log
+    from ..index.snapshots import append_log, claim_snapshot, snapshot_log
 
     log = snapshot_log(snapshot_root)
     if not log:
         raise FileNotFoundError(f"no snapshots at {snapshot_root} to merge into")
     wm = max((e.get("merge_watermark", -1) for e in log), default=-1)
-    d_dir = os.path.join(delta_dir, "docs_delta")
-    new = [b for b in _written_batches(d_dir) if b > wm]
+    p_dir, d_dir = (os.path.join(delta_dir, t) for t in ("postings_delta", "docs_delta"))
+    new = [b for b in _written_batches(delta_dir) if b > wm]
     if not new:
         return log[-1]["id"]
     parts = [f"batch_id={b}" for b in new]
-    dp = read_table(spark, os.path.join(delta_dir, "postings_delta"), parts).select(
-        "term", "doc_id", "tf")
-    dd = read_table(spark, d_dir, parts).select("doc_id", "length")
-    added = _delta_stats(dp, dd)
-    if not added["n_docs"]:  # only empty micro-batches
+    d_files = [f for p in parts for f in data_files(os.path.join(d_dir, p))]
+    p_files = [f for p in parts for f in data_files(os.path.join(p_dir, p))]
+    n_docs = sum(pq.read_metadata(f).num_rows for f in d_files)
+    if not n_docs:  # only empty micro-batches
         return log[-1]["id"]
-    cur = read_snapshot(spark, snapshot_root)
-    # build_index's written schemas: postings (term, doc_id, doc_int, tf
-    # int), docs (doc_id, doc_int, length, norm, pagerank)
-    doc_int = F.col("doc_id").cast("long").alias("doc_int")
-    postings = cur.postings.select("term", "doc_id", "tf").unionByName(dp).select(
-        "term", "doc_id", doc_int, "tf")
-    docs = cur.docs.select("doc_id", "length").unionByName(dd).select(
-        "doc_id", doc_int, "length")
-    stats = {k: cur.stats[k] + added[k] for k in ADDITIVE_STATS}
+    head = log[-1]
+    parent = os.path.join(snapshot_root, head["dir"])
+    with open(os.path.join(parent, "stats.json")) as f:
+        stats = json.load(f)
+    stats["n_docs"] += n_docs
+    stats["n_postings"] += sum(pq.read_metadata(f).num_rows for f in p_files)
+    stats["total_len"] += sum(pc.sum(pq.read_table(f, columns=["length"])["length"]).as_py() or 0
+                              for f in d_files)
     # the floored average doc length (Indexer.java:688-691)
     stats.update(avgdl=stats["total_len"] // stats["n_docs"], int_doc_ids=True)
-    # terms re-derived by one aggregation, cached: the norms' df and the
-    # terms write both read it.  Written as one file: the norms broadcast
-    # it, so it is small by assumption, and a cached plan keeps its
-    # shuffle's partition count (one small file per shuffle partition
-    # otherwise, where adaptive execution coalesced the uncached
-    # aggregation to one).
-    terms = postings.groupBy("term").agg(
-        F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf")
-    ).cache()
-    docs = with_vsm_norms(docs, postings, terms.select("term", "df"), "term",
-                          stats["n_docs"])
+
+    def in_parent_schema(delta: DataFrame, table: str) -> DataFrame:
+        """The delta rows as the parent table's columns and types:
+        doc_int is the integer doc_id, absent columns are typed nulls."""
+        have = {**{c: F.col(c) for c in delta.columns}, "doc_int": F.col("doc_id")}
+        return delta.select(*[have.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+                              for f in read_table(spark, os.path.join(parent, table)).schema])
+
+    dp = read_table(spark, p_dir, parts).select("term", "doc_id", "tf").cache()
     try:
-        return commit_snapshot(
-            IndexTables(postings=postings, docs=docs, terms=terms.coalesce(1),
-                        stats=stats),
-            snapshot_root, cfg, operation="merge-append", note=note,
-            extra={"merge_watermark": new[-1]})
+        seg_postings = in_parent_schema(dp, "postings").coalesce(1)
+        seg_docs = in_parent_schema(read_table(spark, d_dir, parts), "docs").coalesce(1)
+        # each delta posting adds 1 to its term's df and tf to its cf
+        terms = read_table(spark, os.path.join(parent, "terms")).unionByName(
+            dp.select("term", F.lit(1).alias("df"), F.col("tf").alias("cf"))
+        ).groupBy("term").agg(*[F.sum(c).cast("long").alias(c) for c in ("df", "cf")])
+        # one terms file: queries broadcast-join the query-sized slice of
+        # it, and a coalesced aggregation writes no empty files
+        terms = terms.coalesce(1)
+        segments = head.get("segments", 1) + 1
+        with claim_snapshot(snapshot_root) as (sid, sdir):
+            if segments > SEGMENT_LIMIT:
+                segments = 1
+                write_index(IndexTables(
+                    postings=read_table(spark, os.path.join(parent, "postings"))
+                    .unionByName(seg_postings),
+                    docs=read_table(spark, os.path.join(parent, "docs")).unionByName(seg_docs),
+                    terms=terms, stats=stats), sdir, cfg)
+            else:
+                for table, seg in (("postings", seg_postings.sortWithinPartitions("term", "doc_int")),
+                                   ("docs", seg_docs)):
+                    _link_files(os.path.join(parent, table), os.path.join(sdir, table))
+                    seg.write.mode("append").parquet(os.path.join(sdir, table))
+                terms.write.parquet(os.path.join(sdir, "terms"))
+                write_stats(sdir, stats)
+            return append_log(snapshot_root, sid, stats, "merge-append", note, head["id"],
+                              {"merge_watermark": new[-1], "segments": segments})
     finally:
-        terms.unpersist()
+        dp.unpersist()
+
+
+def _link_files(src: str, dst: str) -> None:
+    """Hard-link every parquet data file under ``src`` into ``dst``."""
+    for f in data_files(src):
+        out = os.path.join(dst, os.path.relpath(f, src))
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        os.link(f, out)

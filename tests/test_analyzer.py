@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from information_retrieval_system_spark.analysis.analyzer import analyze_tokens
+from information_retrieval_system_spark.analysis.analyzer import analyze_tokens, tokens_array_expr
 from information_retrieval_system_spark.oracle.pyref import analyze
 
 CASES = [
@@ -29,8 +29,8 @@ CASES = [
 
 def _spark_tokens(spark, text, use_stop, use_stem):
     df = spark.createDataFrame([(0, text)], "id long, text string")
-    toks = analyze_tokens(df, "text", ["id"], use_stopwords=use_stop,
-                          use_stemmer=use_stem)
+    toks = analyze_tokens(df, tokens_array_expr(F.col("text")), ["id"],
+                          use_stopwords=use_stop, use_stemmer=use_stem)
     return [(r.pos, r.term) for r in toks.orderBy("pos").collect()]
 
 

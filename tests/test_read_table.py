@@ -9,13 +9,15 @@ import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructType
 
 from information_retrieval_system_spark.config import EngineConfig
 from information_retrieval_system_spark.index.builder import (
-    build_index, read_index, read_table, write_index)
+    DERIVED_DOC_COLS, build_index, read_index, read_table, write_index)
 from information_retrieval_system_spark.index.compression import (
     build_block_postings, build_dl_blocks, read_block_index, write_block_index)
 from information_retrieval_system_spark.index.snapshots import commit_snapshot
+from information_retrieval_system_spark.query.scoring import bm25_search, vsm_search
 from information_retrieval_system_spark.streaming.incremental import (
     incremental_index_stream, merge_into_snapshot)
 
@@ -73,13 +75,26 @@ def test_read_table_equals_inference(spark, written, layout):
         assert_same_table(spark, os.path.join(written[layout], table))
 
 
+def assert_read_schema(ix, spark, out):
+    """Each table read has its files' schema, and ``docs`` adds the
+    derived norm and pagerank, which are not on disk."""
+    for table in INDEX_TABLES:
+        disk = spark.read.parquet(os.path.join(out, table)).schema
+        got = getattr(ix, table).schema
+        if table == "docs":
+            assert not set(DERIVED_DOC_COLS) & set(disk.names)
+            assert got.names == disk.names + list(DERIVED_DOC_COLS)
+            assert StructType(got.fields[:len(disk.fields)]) == disk
+            assert all(got[c].dataType == DoubleType() for c in DERIVED_DOC_COLS)
+        else:
+            assert got == disk, table
+
+
 @pytest.mark.parametrize("layout", sorted(LAYOUTS))
 def test_read_index_starts_no_job(spark, written, layout):
     ix, n_jobs = jobs_started(spark, lambda: read_index(spark, written[layout]))
     assert n_jobs == 0
-    for table in INDEX_TABLES:
-        assert getattr(ix, table).schema == spark.read.parquet(
-            os.path.join(written[layout], table)).schema, table
+    assert_read_schema(ix, spark, written[layout])
 
 
 @pytest.fixture(scope="module")
@@ -109,18 +124,37 @@ def merged(spark, sf_small, tmp_path_factory):
 @pytest.mark.parametrize("layout", sorted(LAYOUTS))
 def test_written_layout(spark, written, merged, layout):
     """A written index, built or merged, is exactly its three tables and
-    the stats; its postings carry no positions and no term id; a merge
+    the stats; its postings carry no positions, no term id and no bucket;
+    its docs store no norm or pagerank (read_index derives them); a merge
     commit writes the build's postings and docs schemas."""
     for out in [written[layout], merged.get(layout)]:
         if out is None:
             continue
         assert sorted(os.listdir(out)) == sorted([*INDEX_TABLES, "stats.json"])
         postings = spark.read.parquet(os.path.join(out, "postings"))
-        assert postings.columns == ["term", "doc_id", "doc_int", "tf", "bucket"]
+        assert postings.columns == ["term", "doc_id", "doc_int", "tf"]
+        assert_read_schema(read_index(spark, out), spark, out)
     if layout in merged:
         for table in ("postings", "docs"):
             assert (read_table(spark, os.path.join(merged[layout], table)).dtypes
                     == read_table(spark, os.path.join(written[layout], table)).dtypes), table
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_bm25_plan_prunes_norms(spark, written, merged, layout):
+    """The norms ``read_index`` derives cost BM25 nothing: the optimizer
+    drops their join and aggregation from ``bm25_search``'s plan over a
+    built or merged index, while the VSM plan, which reads them, keeps
+    them."""
+    qt = spark.createDataFrame([("retriev", 1.0), ("retrieval", 1.0), ("spark", 1.0)],
+                               "term string, qtf double")
+    for out in [written[layout], merged.get(layout)]:
+        if out is None:
+            continue
+        ix = read_index(spark, out)
+        plan = bm25_search(ix, qt, k=10)._jdf.queryExecution().optimizedPlan().toString()
+        assert "norm" not in plan and "pagerank" not in plan
+        assert "norm" in vsm_search(ix, qt, k=10)._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_positional_build_rejected(spark):
@@ -133,7 +167,7 @@ def test_positional_build_rejected(spark):
 def test_read_table_block_index(spark, written, tmp_path):
     out = str(tmp_path)
     ix = read_index(spark, written["no_stem"])
-    write_block_index(build_block_postings(ix.postings.drop("bucket"), block_span=128),
+    write_block_index(build_block_postings(ix.postings, block_span=128),
                       build_dl_blocks(ix.docs, block_span=128), out, term_buckets=4)
     for table in ("blocks", "dl_blocks"):
         assert_same_table(spark, os.path.join(out, table))

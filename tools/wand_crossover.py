@@ -245,7 +245,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     ix.postings.count(); ix.docs.count(); ix.terms.count()
     out["build_sec"] = round(time.perf_counter() - t0, 2)
 
-    # plain-layout write (bucketed postings parquet), min over reps —
+    # plain-layout write (the postings parquet), min over reps —
     # the same interleaved-min methodology the scaling bench uses, so
     # host drift can't masquerade as a code regression
     t_ixw = float("inf")
@@ -262,7 +262,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     # postings table (the production shape: the encoder is a separate
     # job reading the postings table, not a continuation of the build
     # lineage), min over reps
-    served_postings = read_table(spark, os.path.join(ix_dir, "postings")).drop("bucket")
+    served_postings = read_table(spark, os.path.join(ix_dir, "postings"))
     served_docs = read_table(spark, os.path.join(ix_dir, "docs"))
     t_enc = float("inf")
     for _ in range(max(reps, 1)):
