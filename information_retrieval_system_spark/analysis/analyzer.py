@@ -9,8 +9,8 @@ Semantics (SURVEY.md §2.2, citations into the reference):
 - T4 doc length = token count BEFORE stop/stem filtering (Indexer.java:265).
 - T5/T6 stopword + operator-word filter (StopWords.java:95-115).
 - T7 classic Porter stem (PorterStemmer.java:84-627) — the ONLY step that
-  needs Python; it runs as an Arrow-batched pandas UDF with a per-worker
-  memo, never per-row Python.
+  needs Python; it runs as an Arrow-batched UDF (``pyarrow.Array`` in and
+  out, no pandas) with a per-worker memo, never per-row Python.
 
 Everything except the stem is native Catalyst expressions, so the token
 pipeline stays inside whole-stage codegen.  For index builds the stem is
@@ -22,11 +22,11 @@ broadcast.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType, StructType
 
-from .porter import stem_series
+from .porter import stem_batch
 from .stopwords import ALL_FILTERED, STOPWORDS
 
 #: regex pair of the reference normalizer (Indexer.java:431-433)
@@ -38,11 +38,11 @@ _MEMO: dict[str, str] = {}
 _MEMO_LIMIT = 1_000_000
 
 
-@F.pandas_udf(StringType())
-def porter_stem_udf(tokens: pd.Series) -> pd.Series:  # pragma: no cover - executor side
+@F.arrow_udf(StringType())
+def porter_stem_udf(tokens: pa.Array) -> pa.Array:  # pragma: no cover - executor side
     if len(_MEMO) > _MEMO_LIMIT:
         _MEMO.clear()
-    return stem_series(tokens, _MEMO)
+    return pa.array(stem_batch(tokens.to_pylist(), _MEMO), pa.string())
 
 
 def normalize_expr(col: Column) -> Column:

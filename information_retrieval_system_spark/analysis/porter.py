@@ -13,7 +13,7 @@ words whose first char is in U+0021-U+007E are Porter-stemmed.
 This is an independent implementation of the published algorithm (Porter,
 "An algorithm for suffix stripping", Program 14(3) 1980) — no reference code
 was copied.  It is deliberately allocation-light so it can run inside an
-Arrow-batched pandas UDF with a per-batch memo dict (Zipf token
+Arrow-batched UDF with a per-worker memo dict (Zipf token
 distributions give >95% memo hit rates).
 """
 
@@ -249,10 +249,10 @@ def stem(word: str) -> str:
     return w
 
 
-def stem_series(values, memo: dict[str, str] | None = None):
-    """Vectorized-ish stem over a pandas Series with memoization.
+def stem_batch(values, memo: dict[str, str] | None = None) -> list[str]:
+    """Stem a batch of words with memoization.
 
-    Used inside arrow-batched pandas UDFs; the memo persists per batch (or
+    Used inside the Arrow-batched stem UDF; the memo persists per batch (or
     per executor when passed in), exploiting the Zipf distribution of
     tokens.
     """
@@ -268,4 +268,4 @@ def stem_series(values, memo: dict[str, str] | None = None):
             memo[w] = s
         return s
 
-    return values.map(one)
+    return [one(w) for w in values]

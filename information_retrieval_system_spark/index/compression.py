@@ -1,10 +1,12 @@
-"""Delta + variable-byte posting blocks with block-max metadata.
+"""Posting blocks with block-max metadata, as native parquet int arrays.
 
 North-star addition over the reference (whose postings.idx stores flat
-16-byte records, Index.java:230-235): docID gaps and tfs are VByte-packed
-into ``BinaryType`` columns, one row per (term, block), with ``max_tf`` /
-``first_doc`` / ``last_doc`` metadata for block-max WAND pruning
-(SURVEY.md §4 items 1-2).
+16-byte records, Index.java:230-235): one row per (term, block) holding
+the block's in-block doc offsets and tfs as ``array<int>`` columns, plus
+``max_tf`` for block-max WAND pruning (SURVEY.md §4 items 1-2).  The
+arrays stay native so parquet's own dictionary, RLE and bit-packing
+encodings apply to them: a hand-written delta+VByte codec stored 38-47 %
+more bytes, its payloads being opaque to those encodings.
 
 Block alignment: ``block_id = doc_int // block_span`` with one GLOBAL span
 for all terms.  This has two scale properties:
@@ -17,8 +19,9 @@ for all terms.  This has two scale properties:
    kernel can process one doc-range at a time via a cogroup on block_id —
    doc-at-a-time scoring without a global posting sort.
 
-Encode/decode are vectorized numpy inside Arrow-batched pandas UDFs —
-no per-row Python.
+The build is column expressions only (a sorted ``collect_list`` and
+``transform``), with no Python worker.  Readers take a list column as
+numpy views (``list_column``), never as per-row Python lists.
 """
 
 from __future__ import annotations
@@ -27,7 +30,6 @@ import os
 import weakref
 
 import numpy as np
-import pandas as pd
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, functions as F
 
@@ -38,190 +40,57 @@ DEFAULT_BLOCK_SPAN = 1024
 
 
 # ---------------------------------------------------------------------------
-# VByte codec (vectorized numpy)
-# ---------------------------------------------------------------------------
-
-def _vbyte_encode_raw(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Core encoder -> (byte array, per-value byte lengths)."""
-    if v.size == 0:
-        return np.zeros(0, dtype=np.uint8), np.zeros(0, dtype=np.int64)
-    # byte length per value = number of 7-bit chunks (min 1); computed
-    # with a shift loop over chunks — float log2 is unsafe at the 64-bit
-    # edge and this loop runs at most 9 times regardless of array size.
-    lens = np.ones(v.shape, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        lens += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    total = int(lens.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    ends = np.cumsum(lens)          # index AFTER each value's last byte
-    starts = ends - lens
-    # fill bytes least-significant-first
-    maxlen = int(lens.max())
-    work = v.copy()
-    for i in range(maxlen):
-        mask = lens > i
-        idx = starts[mask] + i
-        out[idx] = (work[mask] & np.uint64(0x7F)).astype(np.uint8)
-        work[mask] >>= np.uint64(7)
-    out[ends - 1] |= 0x80           # terminator bit on last byte
-    return out, lens
-
-
-def vbyte_encode(values: np.ndarray) -> bytes:
-    """Encode a uint64 array: 7 data bits per byte, high bit set on the
-    LAST byte of each value (classic VByte)."""
-    out, _ = _vbyte_encode_raw(np.asarray(values, dtype=np.uint64))
-    return out.tobytes()
-
-
-def vbyte_decode(buf: bytes) -> np.ndarray:
-    """Decode back to uint64. Vectorized: terminator bits mark value ends."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    ends = np.nonzero(b & 0x80)[0]
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    lens = ends - starts + 1
-    data = (b & 0x7F).astype(np.uint64)
-    vals = np.zeros(ends.size, dtype=np.uint64)
-    maxlen = int(lens.max())
-    for i in range(maxlen):
-        mask = lens > i
-        vals[mask] |= data[starts[mask] + i] << np.uint64(7 * i)
-    return vals
-
-
-def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:
-    d = np.asarray(sorted_vals, dtype=np.uint64).copy()
-    d[1:] = d[1:] - d[:-1]
-    return d
-
-
-def delta_decode(deltas: np.ndarray) -> np.ndarray:
-    return np.cumsum(np.asarray(deltas, dtype=np.uint64), dtype=np.uint64)
-
-
-# ---------------------------------------------------------------------------
 # block builders
 # ---------------------------------------------------------------------------
 
-BLOCK_SCHEMA = (
-    "term string, block_id long, n int, first_doc long, last_doc long, "
-    "max_tf int, docs_vb binary, tfs_vb binary"
-)
-
-DL_BLOCK_SCHEMA = "block_id long, n int, docs_vb binary, dls_vb binary"
-
-
-def _encode_concat(flat: np.ndarray, starts: np.ndarray) -> list[bytes]:
-    """VByte-encode a concatenation of blocks in ONE vectorized pass,
-    then split the byte stream at block boundaries."""
-    out, lens = _vbyte_encode_raw(flat)
-    if flat.size == 0:
-        return []
-    blens = np.add.reduceat(lens, starts)
-    bends = np.cumsum(blens)
-    buf = out.tobytes()
-    return [buf[e - l:e] for e, l in zip(bends.tolist(), blens.tolist())]
-
-
-def _encode_pairs(docs_s: pd.Series, vals_s: pd.Series) -> pd.DataFrame:
-    """Arrow-batched scalar encoder: each row is ONE block's (sorted)
-    doc array + value array; returns the two VByte buffers.
-
-    A scalar pandas UDF (not groupBy.applyInPandas) because a realistic
-    Zipf vocabulary yields millions of (term, block) groups and
-    per-group pandas dispatch dominates.  Inside the batch everything is
-    vectorized ACROSS blocks too: the arrays are concatenated, deltas
-    are computed in one pass (with each block's first element reset to
-    its absolute value), VByte runs once over the whole batch, and the
-    byte stream is sliced at block boundaries — per-block Python is two
-    list appends."""
-    n = len(docs_s)
-    if n == 0:
-        return pd.DataFrame({"docs_vb": [], "vals_vb": []})
-    counts = np.fromiter((len(x) for x in docs_s), dtype=np.int64, count=n)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    all_docs = np.concatenate([np.asarray(x, dtype=np.uint64) for x in docs_s])
-    all_vals = np.concatenate([np.asarray(x, dtype=np.uint64) for x in vals_s])
-    # per-block delta coding on the concatenated array: global deltas,
-    # then restore each block's first element to its absolute doc id
-    d = all_docs.copy()
-    d[1:] -= all_docs[:-1]
-    d[starts] = all_docs[starts]
-    return pd.DataFrame(
-        {"docs_vb": _encode_concat(d, starts), "vals_vb": _encode_concat(all_vals, starts)}
-    )
-
-
-def _encode_pairs_udf():
-    # constructed lazily: parsing the DDL return type needs an active
-    # SparkSession, which doesn't exist at import time in tests
-    return F.pandas_udf(_encode_pairs, "docs_vb binary, vals_vb binary")
+def _sorted_block(df: DataFrame, keys: list[str], val: str, block_span: int, *aggs):
+    """df(*keys, doc_int, <val>) -> one row per (*keys, block_id): ``n``,
+    ``aggs``, then ``docs`` (the in-block offsets ``doc_int % block_span``,
+    ascending) and the ``val`` of each doc, both ``array<int>``.  One
+    groupBy with a sorted collect_list; its keys are bounded by
+    ``block_span`` docs, so no key is skewed."""
+    block_id = (F.col("doc_int") / F.lit(block_span)).cast("long").alias("block_id")
+    grouped = df.groupBy(*keys, block_id).agg(
+        F.sort_array(F.collect_list(F.struct("doc_int", val))).alias("pl"), *aggs)
+    agg_names = grouped.columns[len(keys) + 2:]  # after the keys, block_id and pl
+    return grouped.select(
+        *keys, "block_id", F.size("pl").alias("n"), *agg_names,
+        F.transform("pl", lambda x: (x["doc_int"] % block_span).cast("int")).alias("docs"),
+        F.transform("pl", lambda x: x[val].cast("int")).alias(val))
 
 
 def build_block_postings(
     postings: DataFrame,
     block_span: int = DEFAULT_BLOCK_SPAN,
 ) -> DataFrame:
-    """postings(term, doc_int, tf) -> one row per (term, block).
-
-    Shape: one groupBy(term, block_id) with a sorted collect_list (keys
-    bounded by ``block_span`` postings — no skew), block-max metadata as
-    native aggregates, and the VByte packing as ONE scalar Arrow UDF
-    over the collected arrays."""
-    wb = postings.select(
-        "term",
-        (F.col("doc_int") / F.lit(block_span)).cast("long").alias("block_id"),
-        "doc_int", "tf",
-    )
-    grouped = wb.groupBy("term", "block_id").agg(
-        F.sort_array(F.collect_list(F.struct("doc_int", "tf"))).alias("pl"),
-        F.count("*").cast("int").alias("n"),
-        F.min("doc_int").alias("first_doc"),
-        F.max("doc_int").alias("last_doc"),
-        F.max("tf").cast("int").alias("max_tf"),
-    )
-    enc = _encode_pairs_udf()(
-        F.transform(F.col("pl"), lambda x: x["doc_int"]),
-        F.transform(F.col("pl"), lambda x: x["tf"].cast("long")),
-    )
-    return grouped.select(
-        "term", "block_id", "n", "first_doc", "last_doc", "max_tf",
-        enc["docs_vb"].alias("docs_vb"), enc["vals_vb"].alias("tfs_vb"),
-    )
+    """postings(term, doc_int, tf) -> one row per (term, block):
+    ``(term, block_id, n, max_tf, docs, tfs)``, ``max_tf`` being the
+    block-max of the WAND bound."""
+    return _sorted_block(postings, ["term"], "tf", block_span,
+                         F.max("tf").cast("int").alias("max_tf")).withColumnRenamed("tf", "tfs")
 
 
 def build_dl_blocks(docs: DataFrame, block_span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
-    """docs(doc_int, length) -> aligned doc-length blocks for the WAND
-    kernel's dl lookups (avoids a postings⋈docs shuffle at query time)."""
-    wb = docs.select(
-        (F.col("doc_int") / F.lit(block_span)).cast("long").alias("block_id"),
-        "doc_int", F.col("length").cast("long").alias("length"),
-    )
-    grouped = wb.groupBy("block_id").agg(
-        F.sort_array(F.collect_list(F.struct("doc_int", "length"))).alias("pl"),
-        F.count("*").cast("int").alias("n"),
-    )
-    enc = _encode_pairs_udf()(
-        F.transform(F.col("pl"), lambda x: x["doc_int"]),
-        F.transform(F.col("pl"), lambda x: x["length"]),
-    )
-    return grouped.select(
-        "block_id", "n",
-        enc["docs_vb"].alias("docs_vb"), enc["vals_vb"].alias("dls_vb"),
-    )
+    """docs(doc_int, length) -> aligned doc-length blocks
+    ``(block_id, n, docs, dls)`` for the WAND kernel's dl lookups (avoids
+    a postings⋈docs shuffle at query time)."""
+    return _sorted_block(docs, [], "length", block_span).withColumnRenamed("length", "dls")
 
 
-def decode_block(docs_vb: bytes, tfs_vb: bytes) -> tuple[np.ndarray, np.ndarray]:
-    return delta_decode(vbyte_decode(docs_vb)), vbyte_decode(tfs_vb)
+def list_column(col) -> list[np.ndarray]:
+    """A ``list<int>`` pyarrow column (a ChunkedArray) as one numpy array
+    per row: each chunk's values sliced at its list offsets (which index
+    the unsliced values, so a sliced chunk reads right).  The arrays are
+    views of the Arrow buffers, so no per-row Python list is built."""
+    out: list[np.ndarray] = []
+    for chunk in col.chunks:
+        vals, off = chunk.values.to_numpy(), chunk.offsets.to_numpy().tolist()
+        out += [vals[a:b] for a, b in zip(off[:-1], off[1:])]
+    return out
 
 
 # ---------------------------------------------------------------------------
-# persistence (the compressed serving layout)
+# persistence (the serving layout)
 # ---------------------------------------------------------------------------
 
 def write_block_index(
@@ -230,7 +99,7 @@ def write_block_index(
     out_dir: str,
     term_buckets: int = 32,
 ) -> None:
-    """Persist the compressed serving index.
+    """Persist the serving layout.
 
     Blocks are partitioned by ``tbucket = hash(term) % term_buckets`` so a
     query touching T terms scans at most T buckets (partition pruning —

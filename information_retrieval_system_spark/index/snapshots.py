@@ -11,7 +11,8 @@ call sites would swap to real Iceberg commits unchanged):
   no parquet file under a snapshot is ever rewritten in place.
 - ``claim_snapshot`` + ``append_log`` (``commit_snapshot`` for a whole
   index)  <->  an append/rewrite commit (new snapshot id, parent
-  pointer, operation tag)
+  pointer, operation tag); a commit that names its parent is refused
+  unless that parent is still current, as a catalog's CAS commit is
 - ``read_snapshot(root, snapshot_id=K)``  <->  time travel
   (``VERSION AS OF K``)
 - atomic ``os.replace`` of the log  <->  the catalog's atomic metadata
@@ -135,17 +136,29 @@ def claim_snapshot(root: str):
         _unlock(lock, fd)
 
 
+class StaleParentError(RuntimeError):
+    """A commit built on a snapshot that is no longer the current one."""
+
+
 def append_log(root: str, sid: int, stats: dict, operation: str = "append",
                note: str = "", parent: int | None = None,
                extra: dict | None = None) -> int:
     """Append snapshot ``sid`` to the log (the atomic pointer swap) and
-    return it.  ``parent`` defaults to the last committed entry."""
+    return it.  ``parent`` defaults to the last committed entry.  A given
+    ``parent`` is compared and swapped, as a catalog's commit is: when it
+    is not the last committed entry, a commit built on it would drop what
+    landed since, so the log is left unchanged and ``StaleParentError``
+    is raised."""
     # read-modify-replace under the log flock (single-host; on a shared
     # filesystem the production analog is the catalog's CAS commit)
     with _log_lock(root):
         log = snapshot_log(root)  # re-read under the lock
+        head = log[-1]["id"] if log else None
         if parent is None:
-            parent = log[-1]["id"] if log else None
+            parent = head
+        elif parent != head:
+            raise StaleParentError(
+                f"snapshot v{sid} was built on v{parent}, but v{head} is current")
         entry = {
             "id": sid,
             "parent": parent,

@@ -54,7 +54,9 @@ O5, §4 item 1), in ONE per-(qid, block) body, ``score_block``:
   Negative-idf terms (df > N/2, common in tiny corpora) bound at 0;
 - each cell emits at most k rows.
 
-The body is vectorized numpy over decoded blocks.  On Spark it enters
+The body is vectorized numpy over the blocks' int arrays, read as
+numpy views of the Arrow buffers (``compression.list_column``), with no
+decode step and no per-row Python list.  On Spark it enters
 via ``applyInArrow`` — pyarrow Tables in and out, never per-row and never
 through a pandas block manager (the per-cell pandas construction cost
 halved the batch path in the r7 A/B).
@@ -73,20 +75,23 @@ from pyspark.sql import DataFrame, functions as F
 from ..analysis.analyzer import local_frame
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..index.builder import term_bucket_expr
-from ..index.compression import DEFAULT_BLOCK_SPAN, BlockLayout, served_layout, vbyte_decode
+from ..index.compression import DEFAULT_BLOCK_SPAN, BlockLayout, list_column, served_layout
 from .batch import rank_per_qid
 from .scoring import bm25_scores
 
-#: what ``driver_ranked`` holds per block row (the row's Python objects:
-#: its tuple, term, block id and both VByte payloads) and per posting (the
-#: encoded bytes).  Measured with tracemalloc on 200k Zipf docs at block
-#: spans 256 and 4096: 300-380 B per row; 2.0-3.8 B per posting.
-ROW_BYTES, POSTING_BYTES = 400, 4
+#: what ``driver_ranked`` holds per block row (its Python objects: the
+#: row tuples, term, block id and two numpy views, plus the row's Arrow
+#: bytes) and per posting (its doc offset and tf, two int32s in Arrow
+#: buffers).  Measured on 200k Zipf docs at block spans 256 and 4096 with
+#: tracemalloc plus ``pyarrow.total_allocated_bytes()`` (the numpy views
+#: share Arrow's buffers, which tracemalloc does not see): 426-452 B of
+#: Python objects and ~35 B of Arrow per row; ~9 B per posting.
+ROW_BYTES, POSTING_BYTES = 500, 9
 
 #: the driver route's budget for one routed call: the estimated bytes
 #: (``ROW_BYTES``, ``POSTING_BYTES``) of the distinct terms of every
 #: driver-served qid; the other qids go to Spark.  Besides it the driver
-#: holds the two 32 MiB decode memos and Arrow's scan buffers (10-120 MB
+#: holds the touched dl blocks and Arrow's scan buffers (10-120 MB
 #: measured), so one call stays near 0.5 GiB.  A memory bound, since no
 #: time crossover was found on 4 vCPUs: the driver beat both Spark routes
 #: on every single query ``tools/wand_crossover.py --zipf`` measured (Σdf
@@ -99,48 +104,6 @@ DRIVER_MAX_BYTES = 384 * 2**20
 
 # per-worker shared pruning state: {query_key: heap of best scores (size<=k)}
 _THRESH: dict[str, list[float]] = {}
-
-class _DecodeMemo(dict):
-    """Per-process decode memo keyed by the ENCODED bytes themselves: in a
-    batch, every query touching a (term, block) cell receives the same
-    VByte payload, so a head term shared by hundreds of Zipf queries
-    would otherwise decode once PER QUERY.
-
-    Bounded by the bytes of the arrays it holds (``nbytes <=
-    max_bytes``), evicting oldest-first; cached arrays are read-only, so
-    a kernel that mutated one would fail loudly instead of corrupting
-    later queries."""
-
-    def __init__(self, decode, max_bytes: int):
-        super().__init__()
-        self.decode = decode
-        self.max_bytes = max_bytes
-        self.nbytes = 0
-
-    def lookup(self, vb: bytes) -> "np.ndarray":
-        arr = self.get(vb)
-        if arr is None:
-            arr = self.decode(vb)
-            arr.setflags(write=False)
-            self[vb] = arr
-            self.nbytes += arr.nbytes
-            while self.nbytes > self.max_bytes:
-                self.nbytes -= self.pop(next(iter(self))).nbytes
-        return arr
-
-    def clear(self) -> None:
-        super().clear()
-        self.nbytes = 0
-
-
-#: per memo, per process (the driver and each Python worker)
-_DECODE_MAX_BYTES = 32 * 2**20
-_DECODE_VALS = _DecodeMemo(vbyte_decode, _DECODE_MAX_BYTES)
-# absolute doc ids (cumsum of the stored gaps), cached post-cumsum
-_DECODE_DOCS = _DecodeMemo(
-    lambda vb: np.cumsum(vbyte_decode(vb), dtype=np.uint64), _DECODE_MAX_BYTES)
-_cached_vals = _DECODE_VALS.lookup
-_cached_docs = _DECODE_DOCS.lookup
 
 
 def collect_query_term_rows(terms: DataFrame, qset: list[str],
@@ -189,16 +152,28 @@ class Bm25Params:
 
 
 #: the block columns ``score_block`` reads, one tuple per (term, block) row
-BLOCK_COLS = ("term", "max_tf", "docs_vb", "tfs_vb")
+BLOCK_COLS = ("term", "max_tf", "docs", "tfs")
 
 
-def score_block(block: int, rows: list[tuple], dl: tuple[bytes, bytes],
+def block_rows(t) -> list[tuple]:
+    """The ``BLOCK_COLS`` rows of a pyarrow table, the ``docs``/``tfs``
+    arrays as numpy views (``list_column``)."""
+    return list(zip(t.column("term").to_pylist(), t.column("max_tf").to_pylist(),
+                    list_column(t.column("docs")), list_column(t.column("tfs"))))
+
+
+def dl_rows(t) -> list[tuple]:
+    """The ``(docs, dls)`` arrays of each row of a pyarrow dl-block table."""
+    return list(zip(list_column(t.column("docs")), list_column(t.column("dls"))))
+
+
+def score_block(block: int, rows: list[tuple], dl: tuple[np.ndarray, np.ndarray],
                 idfs: dict[str, float], heap: list[float], p: Bm25Params):
     """One query's top-k docs of one doc range, the body of both the
     Spark kernel and the driver loop.
 
     ``rows`` are the query terms' ``BLOCK_COLS`` rows of ``block``, ``dl``
-    its (docs_vb, dls_vb) doc-length block; ``heap`` holds the best
+    its (docs, dls) doc-length arrays; ``heap`` holds the best
     scores seen so far for the query (size <= k) and is updated here.
     -> (doc_int, score) arrays, or None when no doc of the range can
     reach the heap."""
@@ -216,16 +191,14 @@ def score_block(block: int, rows: list[tuple], dl: tuple[bytes, bytes],
     if sum(contribs) < theta:
         return None
 
-    # --- decode dl block (memoized across queries) ---------------------
-    base = block * p.span
-    ddocs = _cached_docs(dl[0])
+    # --- the range's doc lengths, indexed by in-block offset -----------
     dl_arr = np.zeros(p.span, dtype=np.float64)
-    dl_arr[(ddocs - np.uint64(base)).astype(np.int64)] = _cached_vals(dl[1])
+    dl_arr[dl[0]] = dl[1]
 
     # --- doc-at-a-time accumulation over the range ---------------------
     # terms in DESCENDING bound order with suffix sums: after term j, no
     # doc can exceed max(best partial, 0) + suffix_ub[j+1] — when that
-    # falls below theta the remaining (smaller) terms need not be decoded
+    # falls below theta the remaining (smaller) terms need not be scored
     # at all (tightens the static block-max with the ACTUAL best partial
     # once the heavy terms are in)
     order = sorted(range(len(contribs)), key=lambda i: -contribs[i])
@@ -236,9 +209,8 @@ def score_block(block: int, rows: list[tuple], dl: tuple[bytes, bytes],
     for j, ri in enumerate(order):
         if j > 0 and best_partial + suffix_ub[j] < theta:
             return None  # no doc here can reach the heap
-        term, _, docs_vb, tfs_vb = rows[ri]
-        off = (_cached_docs(docs_vb) - np.uint64(base)).astype(np.int64)
-        tfs = _cached_vals(tfs_vb).astype(np.float64)
+        term, _, off, tfs = rows[ri]
+        tfs = tfs.astype(np.float64)
         s = idfs[term] * tfs * (p.k1 + 1.0) / (
             tfs + p.k1 * (1.0 - p.b + p.b * dl_arr[off] / p.avgdl))
         scores[off] += s
@@ -262,7 +234,7 @@ def score_block(block: int, rows: list[tuple], dl: tuple[bytes, bytes],
             heapq.heappush(heap, v)
         elif v > heap[0]:
             heapq.heapreplace(heap, v)
-    return idx + base, sc
+    return idx + block * p.span, sc
 
 
 def _wand_kernel(idfs_by_qid: dict[int, dict[str, float]], p: Bm25Params, qkey: str):
@@ -283,8 +255,7 @@ def _wand_kernel(idfs_by_qid: dict[int, dict[str, float]], p: Bm25Params, qkey: 
         if len(_THRESH) > 4096:  # bound per-worker state across queries
             _THRESH.clear()
         got = score_block(
-            block, list(zip(*(pblocks.column(c).to_pylist() for c in BLOCK_COLS))),
-            (dlblock.column("docs_vb")[0].as_py(), dlblock.column("dls_vb")[0].as_py()),
+            block, block_rows(pblocks), dl_rows(dlblock)[0],
             idfs_by_qid[qid], _THRESH.setdefault(f"{qkey}:{qid}", []), p)
         if got is None:
             return _empty_cell()
@@ -305,23 +276,23 @@ def driver_ranked(layout: BlockLayout, idfs_by_qid: dict[int, dict[str, float]],
     terms = sorted({t for idfs in idfs_by_qid.values() for t in idfs})
     if not terms:
         return {}
-    rows = layout.blocks.to_table(
+    tab = layout.blocks.to_table(
         columns=["block_id", *BLOCK_COLS],
         filter=(pc.field("tbucket").isin(sorted({tbucket[t] for t in terms}))
-                & pc.field("term").isin(terms))).to_pydict()
-    by_term: dict[str, list[tuple]] = {}  # term -> [(block_id, *BLOCK_COLS)]
-    for row in zip(rows["block_id"], *(rows[c] for c in BLOCK_COLS)):
-        by_term.setdefault(row[1], []).append(row)
-    dl = layout.dl_blocks.to_table(
-        columns=["block_id", "docs_vb", "dls_vb"],
-        filter=pc.field("block_id").isin(sorted(set(rows["block_id"])))).to_pydict()
-    dl_of = {b: (d, n) for b, d, n in zip(dl["block_id"], dl["docs_vb"], dl["dls_vb"])}
+                & pc.field("term").isin(terms)))
+    block_ids = tab.column("block_id").to_pylist()
+    by_term: dict[str, list[tuple]] = {}  # term -> [(block_id, BLOCK_COLS row)]
+    for b, row in zip(block_ids, block_rows(tab)):
+        by_term.setdefault(row[0], []).append((b, row))
+    dl = layout.dl_blocks.to_table(columns=["block_id", "docs", "dls"],
+                                   filter=pc.field("block_id").isin(sorted(set(block_ids))))
+    dl_of = dict(zip(dl.column("block_id").to_pylist(), dl_rows(dl)))
     out = {}
     for q, idfs in idfs_by_qid.items():
         by_block: dict[int, list[tuple]] = {}
-        for t in idfs:
-            for b, *row in by_term.get(t, ()):
-                by_block.setdefault(b, []).append(tuple(row))
+        for term in idfs:
+            for b, row in by_term.get(term, ()):
+                by_block.setdefault(b, []).append(row)
         heap: list[float] = []
         docs, sc = [np.zeros(0, np.int64)], [np.zeros(0)]
         for b in sorted(by_block.keys() & dl_of.keys()):
@@ -417,7 +388,7 @@ def _route(index, blocks, dl_blocks, queries: dict[int, set[str]], k, cfg, block
         qkeys = qblocks.select(F.col("qid").alias("_qid"),
                                F.col("block_id").alias("_bid")).distinct()
         qdl = (dl_blocks.join(qkeys, F.col("block_id") == F.col("_bid"))
-               .select(F.col("_qid").alias("qid"), "block_id", "docs_vb", "dls_vb"))
+               .select(F.col("_qid").alias("qid"), "block_id", "docs", "dls"))
         w = (qblocks.groupBy("qid", "block_id")
              .cogroup(qdl.groupBy("qid", "block_id"))
              .applyInArrow(kernel, "qid long, doc_int long, score double"))

@@ -164,6 +164,11 @@ def merge_into_snapshot(
     production shape — one logical stream per delta dir).  Pointing a
     FRESH checkpoint at a delta dir that already has merged batches
     would reuse low batch ids; use a new delta dir instead.
+
+    The commit names the snapshot it read as its parent, so a merge that
+    another commit overtook (a concurrent merge, or a ``commit_snapshot``
+    that landed meanwhile) raises ``snapshots.StaleParentError``, with
+    nothing committed; calling it again merges onto the new head.
     Returns the committed (or current) snapshot id."""
     from ..index.snapshots import append_log, claim_snapshot, snapshot_log
 

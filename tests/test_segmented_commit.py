@@ -10,6 +10,7 @@ import os
 import signal
 import subprocess
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -17,8 +18,10 @@ import pytest
 from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
 from information_retrieval_system_spark.config import EngineConfig
 from information_retrieval_system_spark.index.builder import build_index, data_files
+from information_retrieval_system_spark.index import snapshots
 from information_retrieval_system_spark.index.snapshots import (
-    claim_snapshot, commit_snapshot, expire_snapshots, read_snapshot, snapshot_log)
+    StaleParentError, append_log, claim_snapshot, commit_snapshot, expire_snapshots,
+    read_snapshot, snapshot_log)
 from information_retrieval_system_spark.query.scoring import bm25_search
 from information_retrieval_system_spark.streaming import incremental
 from information_retrieval_system_spark.streaming.incremental import (
@@ -101,12 +104,15 @@ def test_segmented_merges_equal_batch_build(spark, docs, tmp_path, monkeypatch):
     assert state(spark, read_snapshot(spark, root, kept[0])) == kept[1]
 
 
-#: the child: one merge_into_snapshot with os.link / os.replace patched to
-#: SIGKILL the process at the named step
+#: the child: one merge_into_snapshot of ``src`` (a delta dir), or one
+#: commit_snapshot of a build over ``src`` (a documents parquet), with
+#: os.link / os.replace patched to SIGKILL the process at the named step
 CHILD = r"""
 import os, signal, sys
-root, delta, point = sys.argv[1:4]
+root, src, point, op = sys.argv[1:5]
 from information_retrieval_system_spark.config import EngineConfig
+from information_retrieval_system_spark.index.builder import build_index
+from information_retrieval_system_spark.index.snapshots import commit_snapshot
 from information_retrieval_system_spark.session import get_spark
 from information_retrieval_system_spark.streaming.incremental import merge_into_snapshot
 
@@ -130,17 +136,24 @@ def replace(src, dst):
 
 os.link, os.replace = link, replace
 spark = get_spark("crash-child", parallelism=2)
-merge_into_snapshot(spark, root, delta, EngineConfig(use_stopwords=False, use_stemmer=False))
+cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
+if op == "merge":
+    merge_into_snapshot(spark, root, src, cfg)
+else:
+    docs = spark.read.parquet(src).filter("doc_id < 400")
+    commit_snapshot(build_index(docs, cfg, doc_col="doc_id", text_col="text"), root, cfg)
 """
-KILL_POINTS = ("after_claim", "mid_link", "after_data_write", "before_log_swap")
+KILL_POINTS = {"merge": ("after_claim", "mid_link", "after_data_write", "before_log_swap"),
+               "commit": ("after_data_write", "before_log_swap")}
 
 
-def test_killed_merge_leaves_previous_snapshot(spark, docs, tmp_path):
-    """SIGKILL a merging child process at each step of the commit: the
-    log and the current snapshot are unchanged, an orphan ``v<N>`` is
-    left, ``expire_snapshots`` collects it (and the temporary log), a
-    live claim survives expiry, and the next merge consumes every
-    delta batch exactly once."""
+def test_killed_merge_leaves_previous_snapshot(spark, docs, sf_small, tmp_path):
+    """SIGKILL a merging child process, then a ``commit_snapshot`` child,
+    at each step of the commit: the log and the current snapshot are
+    unchanged, an orphan ``v<N>`` is left, ``expire_snapshots`` collects
+    it (and the temporary log), a live claim survives expiry, the next
+    merge consumes every delta batch exactly once and the next commit
+    succeeds."""
     root, delta = str(tmp_path / "snaps"), str(tmp_path / "delta")
     commit_snapshot(build_index(docs.filter("doc_id < 200"), CFG, doc_col="doc_id",
                                 text_col="text"), root, CFG)
@@ -149,34 +162,88 @@ def test_killed_merge_leaves_previous_snapshot(spark, docs, tmp_path):
     merge_into_snapshot(spark, root, delta, CFG)  # a parent with two segments
     process(docs.filter("doc_id >= 300 AND doc_id < 350"), 1)
     process(docs.filter("doc_id >= 350 AND doc_id < 400"), 2)
-    log = snapshot_log(root)
-    before = state(spark, read_snapshot(spark, root))
     repo = str(Path(__file__).resolve().parent.parent)
     env = {**os.environ, "PYTHONPATH": repo, "SPARK_DRIVER_MEM": "1g"}
 
-    for point in KILL_POINTS:
-        child = subprocess.run([sys.executable, "-c", CHILD, root, delta, point], env=env,
-                               cwd=repo, capture_output=True, timeout=300)
-        assert child.returncode == -signal.SIGKILL, (point, child.stderr[-2000:])
-        assert snapshot_log(root) == log, point
-        assert state(spark, read_snapshot(spark, root)) == before, point
-        orphans = sorted(set(os.listdir(root)) - {e["dir"] for e in log}
-                         - {"snapshots.json", "snapshots.json.lock"})
-        assert f"v{log[-1]['id'] + 1}" in orphans, (point, orphans)
-        assert (point == "before_log_swap") == any(
-            o.startswith("snapshots.json.tmp") for o in orphans), (point, orphans)
-        assert expire_snapshots(root, keep_last=len(log)) == []
-        assert sorted(os.listdir(root)) == sorted(
-            [e["dir"] for e in log] + ["snapshots.json", "snapshots.json.lock"]), point
+    def kill_each_point(op: str, src: str) -> None:
+        log = snapshot_log(root)
+        before = state(spark, read_snapshot(spark, root))
+        for point in KILL_POINTS[op]:
+            child = subprocess.run([sys.executable, "-c", CHILD, root, src, point, op],
+                                   env=env, cwd=repo, capture_output=True, timeout=300)
+            assert child.returncode == -signal.SIGKILL, (op, point, child.stderr[-2000:])
+            assert snapshot_log(root) == log, (op, point)
+            assert state(spark, read_snapshot(spark, root)) == before, (op, point)
+            orphans = sorted(set(os.listdir(root)) - {e["dir"] for e in log}
+                             - {"snapshots.json", "snapshots.json.lock"})
+            assert f"v{log[-1]['id'] + 1}" in orphans, (op, point, orphans)
+            assert (point == "before_log_swap") == any(
+                o.startswith("snapshots.json.tmp") for o in orphans), (op, point, orphans)
+            assert expire_snapshots(root, keep_last=len(log)) == []
+            assert sorted(os.listdir(root)) == sorted(
+                [e["dir"] for e in log] + ["snapshots.json", "snapshots.json.lock"]), (op, point)
 
+    kill_each_point("merge", delta)
     # a live claim is left alone; once released unlogged, it is collected
+    n_logged = len(snapshot_log(root))
     with claim_snapshot(root) as (_, sdir):
-        expire_snapshots(root, keep_last=len(log))
+        expire_snapshots(root, keep_last=n_logged)
         assert os.path.isdir(sdir) and os.path.exists(sdir + ".lock")
-    expire_snapshots(root, keep_last=len(log))
+    expire_snapshots(root, keep_last=n_logged)
     assert not os.path.exists(sdir) and not os.path.exists(sdir + ".lock")
 
     merge_into_snapshot(spark, root, delta, CFG)
     assert snapshot_log(root)[-1]["merge_watermark"] == 2
     full = build_index(docs.filter("doc_id < 400"), CFG, doc_col="doc_id", text_col="text")
     assert state(spark, read_snapshot(spark, root)) == state(spark, full)
+
+    kill_each_point("commit", f"{sf_small}/documents.parquet")
+    sid = commit_snapshot(full, root, CFG)
+    assert snapshot_log(root)[-1]["id"] == sid
+    assert state(spark, read_snapshot(spark, root)) == state(spark, full)
+
+
+def test_stale_parent_commit_raises(spark, docs, tmp_path, monkeypatch):
+    """A commit built on a snapshot that is no longer current is refused:
+    an append naming a stale parent, and a merge that another commit
+    overtook, raise ``StaleParentError`` and leave the log, the current
+    snapshot and the directory set unchanged.  Retried, the merge builds
+    on the new head and consumes its batch once."""
+    root, delta = str(tmp_path / "snaps"), str(tmp_path / "delta")
+    base = build_index(docs.filter("doc_id < 200"), CFG, doc_col="doc_id", text_col="text")
+    first = commit_snapshot(base, root, CFG)
+    commit_snapshot(base, root, CFG, note="re-crawl")
+    log = snapshot_log(root)
+    with pytest.raises(StaleParentError):
+        with claim_snapshot(root) as (sid, _):
+            append_log(root, sid, base.stats, parent=first)
+    assert snapshot_log(root) == log
+    assert sorted(os.listdir(root)) == sorted(
+        [e["dir"] for e in log] + ["snapshots.json", "snapshots.json.lock"])
+
+    process = _process_batch_factory(delta, CFG, "doc_id", "text")
+    process(docs.filter("doc_id >= 200 AND doc_id < 300"), 0)
+    real_claim = snapshots.claim_snapshot
+
+    @contextmanager
+    def overtaken(root_):
+        """The merge's claim, after another commit lands on its parent."""
+        monkeypatch.setattr(snapshots, "claim_snapshot", real_claim)
+        commit_snapshot(base, root_, CFG, note="lands during the merge")
+        with real_claim(root_) as claimed:
+            yield claimed
+
+    monkeypatch.setattr(snapshots, "claim_snapshot", overtaken)
+    with pytest.raises(StaleParentError):
+        merge_into_snapshot(spark, root, delta, CFG)
+    log = snapshot_log(root)
+    assert log[-1]["note"] == "lands during the merge" and "merge_watermark" not in log[-1]
+    assert state(spark, read_snapshot(spark, root)) == state(spark, base)
+    assert sorted(os.listdir(root)) == sorted(
+        [e["dir"] for e in log] + ["snapshots.json", "snapshots.json.lock"])
+
+    sid = merge_into_snapshot(spark, root, delta, CFG)
+    assert snapshot_log(root)[-1]["parent"] == log[-1]["id"]
+    assert snapshot_log(root)[-1]["merge_watermark"] == 0
+    full = build_index(docs.filter("doc_id < 300"), CFG, doc_col="doc_id", text_col="text")
+    assert state(spark, read_snapshot(spark, root, sid)) == state(spark, full)

@@ -7,16 +7,17 @@ from __future__ import annotations
 
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms
+from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms, local_frame
 from information_retrieval_system_spark.config import EngineConfig
 from information_retrieval_system_spark.index.builder import build_index
 from information_retrieval_system_spark.index.compression import (
     build_block_postings,
     build_dl_blocks,
-    decode_block,
     read_block_index,
     served_layout,
     write_block_index,
@@ -91,17 +92,40 @@ def ranked(res, tol_digits: int = 9):
 
 def test_blocks_roundtrip_postings(blocked):
     cfg, index, blocks, dl_blocks = blocked
-    # decode every block and compare against the raw postings rows
+    # rebuild (term, doc_int) -> tf from the block arrays and compare
+    # against the raw postings rows
     raw = {(r.term, r.doc_int): r.tf for r in index.postings.collect()}
-    dec = {}
+    got = {}
     for r in blocks.collect():
-        docs, tfs = decode_block(r.docs_vb, r.tfs_vb)
-        assert r.n == len(docs) == len(tfs)
-        assert r.first_doc == docs[0] and r.last_doc == docs[-1]
-        assert r.max_tf == tfs.max()
-        for d, t in zip(docs, tfs):
-            dec[(r.term, int(d))] = int(t)
-    assert dec == raw
+        assert r.n == len(r.docs) == len(r.tfs)
+        assert r.docs == sorted(r.docs) and 0 <= r.docs[0] and r.docs[-1] < SPAN
+        assert r.max_tf == max(r.tfs)
+        for off, tf in zip(r.docs, r.tfs):
+            got[(r.term, r.block_id * SPAN + off)] = tf
+    assert got == raw
+    dls = {r.doc_int: r.length for r in index.docs.collect()}
+    assert {r.block_id * SPAN + off: dl for r in dl_blocks.collect()
+            for off, dl in zip(r.docs, r.dls)} == dls
+
+
+def test_block_build_native_int_arrays(blocked, spark, tmp_path):
+    """The block build runs no Python UDF, and the written ``blocks/`` and
+    ``dl_blocks/`` store their payloads as parquet ``list<int32>``."""
+    cfg, index, blocks, dl_blocks = blocked
+    postings = local_frame(spark, [(r.term, r.doc_int, r.tf) for r in index.postings.collect()],
+                           "term string, doc_int long, tf int")
+    docs = local_frame(spark, [(r.doc_int, r.length) for r in index.docs.collect()],
+                       "doc_int long, length int")
+    for built in (build_block_postings(postings, block_span=SPAN),
+                  build_dl_blocks(docs, block_span=SPAN)):
+        plan = built._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    write_block_index(blocks, dl_blocks, str(tmp_path), term_buckets=8)
+    for table, cols in (("blocks", ("docs", "tfs")), ("dl_blocks", ("docs", "dls"))):
+        schema = pq.read_schema(next((tmp_path / table).rglob("*.parquet")))
+        for c in cols:
+            t = schema.field(c).type
+            assert pa.types.is_list(t) and t.value_type == pa.int32(), (table, c, t)
 
 
 @pytest.mark.parametrize("query,k", [
@@ -133,7 +157,7 @@ def test_wand_dl_side_semijoin_pruned(blocked, spark):
     res, _ = route_bm25(index, blocks, dl_blocks, qt, k=10, cfg=cfg, **ALL_WAND)
     plan = res._jdf.queryExecution().optimizedPlan().toString()
     assert "(block_id#" in plan and "= _bid#" in plan, plan
-    assert "dls_vb" in plan and "FlatMapCoGroupsInArrow" in plan
+    assert "dls#" in plan and "FlatMapCoGroupsInArrow" in plan
 
 
 def test_wand_served_bucket_partition_filter(blocked, served, spark, monkeypatch):

@@ -1,18 +1,9 @@
-"""Zipf corpus generator + batched VByte block encoding."""
+"""Zipf corpus generator."""
 
 from __future__ import annotations
 
 import re
 
-import numpy as np
-import pandas as pd
-
-from information_retrieval_system_spark.index.compression import (
-    _encode_pairs,
-    delta_encode,
-    vbyte_decode,
-    vbyte_encode,
-)
 from information_retrieval_system_spark.sources.zipf import rank_token, zipf_corpus
 
 
@@ -35,24 +26,3 @@ def test_zipf_rank_order(spark):
     # head ranks strictly dominate the tail (sampled at decade spacing)
     c = [counts.get(rank_token(r), 0) for r in (1, 10, 100, 1000)]
     assert c[0] > c[1] > c[2] > c[3] > 0
-
-
-def test_encode_pairs_matches_per_block_encoding():
-    blocks_docs = [np.array([5, 9, 1000], dtype=np.uint64),
-                   np.array([0], dtype=np.uint64),
-                   np.array([2**40, 2**40 + 3], dtype=np.uint64)]
-    blocks_vals = [np.array([1, 2, 3], dtype=np.uint64),
-                   np.array([7], dtype=np.uint64),
-                   np.array([1, 1], dtype=np.uint64)]
-    out = _encode_pairs(pd.Series(blocks_docs), pd.Series(blocks_vals))
-    for i in range(3):
-        assert out["docs_vb"][i] == vbyte_encode(delta_encode(blocks_docs[i]))
-        assert out["vals_vb"][i] == vbyte_encode(blocks_vals[i])
-        # round-trip
-        got = np.cumsum(vbyte_decode(out["docs_vb"][i]), dtype=np.uint64)
-        assert (got == blocks_docs[i]).all()
-
-
-def test_encode_pairs_empty_batch():
-    out = _encode_pairs(pd.Series([], dtype=object), pd.Series([], dtype=object))
-    assert len(out) == 0

@@ -11,7 +11,7 @@ Two modes:
   ``wand_min_postings`` and ``wand.DRIVER_MAX_BYTES`` forcing one
   route at a time: the driver reads the query terms' block rows with
   pyarrow and scores them in this process; Spark WAND reads the
-  compressed block layout with its term-bucket partition filter (dl
+  block layout with its term-bucket partition filter (dl
   blocks aligned, no docs join); Spark exhaustive reads the postings
   parquet and joins docs for dl.  Each query reports its Σdf, so the
   timings place the driver/Spark and the WAND/exhaustive crossovers.
@@ -258,7 +258,7 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     corpus.unpersist()
     spark.catalog.clearCache()
 
-    # compressed-block encode + serving write, fed from the WRITTEN
+    # block build + serving write, fed from the WRITTEN
     # postings table (the production shape: the encoder is a separate
     # job reading the postings table, not a continuation of the build
     # lineage), min over reps
