@@ -14,7 +14,7 @@ Scale notes (10^12 files / 1000 executors):
   ``assign_doc_ints``) that never funnels the corpus through one task.
 - the written postings are unbucketed: no reader of ``postings/`` prunes
   by term (the block layout, ``compression.write_block_index``, carries
-  the term buckets the WAND routes prune on).
+  the term buckets the driver route prunes on).
 """
 
 from __future__ import annotations

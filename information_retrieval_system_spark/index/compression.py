@@ -15,8 +15,10 @@ for all terms.  This has two scale properties:
    funnel each hot term through one task); block assignment is a pure
    column expression and the groupBy(term, block_id) keys are bounded by
    ``block_span`` postings — skew is capped by construction;
-2. blocks of different terms cover the SAME doc ranges, so the WAND
-   kernel can process one doc-range at a time via a cogroup on block_id —
+2. blocks of different terms cover the SAME doc ranges, so the driver
+   route (``query/wand.driver_ranked``) scores one doc range at a time
+   from the query terms' rows of one block id, and reads a window of
+   contiguous block ids with one ``block_id`` range filter —
    doc-at-a-time scoring without a global posting sort.
 
 The build is column expressions only (a sorted ``collect_list`` and
@@ -72,7 +74,7 @@ def build_block_postings(
 
 def build_dl_blocks(docs: DataFrame, block_span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
     """docs(doc_int, length) -> aligned doc-length blocks
-    ``(block_id, n, docs, dls)`` for the WAND kernel's dl lookups (avoids
+    ``(block_id, n, docs, dls)`` for the driver route's dl lookups (avoids
     a postings⋈docs shuffle at query time)."""
     return _sorted_block(docs, [], "length", block_span).withColumnRenamed("length", "dls")
 
@@ -104,12 +106,14 @@ def write_block_index(
     Blocks are partitioned by ``tbucket = hash(term) % term_buckets`` so a
     query touching T terms scans at most T buckets (partition pruning —
     the columnar analog of the reference's vocabulary offset pointers),
-    and sorted within partitions by (term, block_id) for row-group
-    locality."""
+    and each bucket file is sorted by (term, block_id) for row-group
+    locality.  ``tbucket`` leads the sort: the partitioned writer needs
+    each task's rows ordered by it, and rows not already so ordered get
+    a sort by ``tbucket`` alone, which loses the term order."""
     (
         blocks.withColumn("tbucket", term_bucket_expr(F.col("term"), term_buckets))
         .repartition(term_buckets, "tbucket")
-        .sortWithinPartitions("term", "block_id")
+        .sortWithinPartitions("tbucket", "term", "block_id")
         .write.mode("overwrite")
         .partitionBy("tbucket")
         .parquet(os.path.join(out_dir, "blocks"))
@@ -149,11 +153,10 @@ def read_block_index(
 ) -> tuple[DataFrame, DataFrame]:
     """Read the serving layout, without a Spark job.  With
     ``keep_bucket`` the tbucket partition column stays on the frame so a
-    long-lived reader lists the layout ONCE and the route prunes per
-    query with a ``tbucket.isin(...)`` filter (partition pruning still
-    applies at plan time).  The returned pair is registered with its
-    files (``served_layout``), so the route can serve small queries from
-    them in the driver."""
+    long-lived reader lists the layout ONCE.  The returned pair is
+    registered with its files (``served_layout``), so the route serves
+    queries from them in the driver, reading only the query terms'
+    ``tbucket`` partitions."""
     blocks = read_table(spark, os.path.join(out_dir, "blocks"))
     if not keep_bucket:
         blocks = blocks.drop("tbucket")

@@ -7,8 +7,8 @@ query set set-wise: queries become a (qid, term, qtf) local relation
 carries qid through every join, and ``rank_per_qid`` cuts each query's
 top-k with one window over (qid) — no driver loop, one pass over the
 postings regardless of the number of queries.  The routed form
-(``query/wand.route_batch_bm25``) cuts its Spark-routed qids with the
-same window and ranks its driver-routed ones under the same order.
+(``query/wand.route_batch_bm25``) cuts its exhaustive-routed qids with
+the same window and ranks its driver-routed ones under the same order.
 
 Also here: result-type projections (DocInfo PLAIN/ESSENTIAL/FULL,
 ARetrievalModel_FR.java:42-44 — column-projection levels, SURVEY.md §1.4)

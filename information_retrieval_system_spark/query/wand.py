@@ -7,30 +7,28 @@ TREC run alike (looped by Search_FR.java:994-1098).  Here too there is
 one path: ``route_batch_bm25`` takes a (qid, term[, qtf]) frame, and a
 single query is a batch of one (``route_bm25`` runs it as qid 0).
 
-- The query frame is collected in the driver once.  Each distinct query
-  term's df comes from the written layout when ``blocks``/``dl_blocks``
-  are the exact pair ``read_block_index`` returned
-  (``compression.served_layout``): a pyarrow read of the terms'
-  ``(term, n, tbucket)`` block rows gives df = Σ ``n`` and the term's
-  ``tbucket`` hive partition, with no Spark job.  Any other frames (in
-  memory, or derived from a read frame) take ONE term-stats collect.
-- The first routing choice is driver or Spark:
-  - driver: on the written layout, smallest qids first while the block
-    rows of the driver qids' distinct terms, which the driver holds at
-    once, fit in ``DRIVER_MAX_BYTES`` (a bound on the batch, not per
-    qid).  pyarrow reads those rows (their tbucket partitions, a
-    ``term`` filter) and the dl blocks they touch; ``score_block``
-    scores each (qid, block) in this process.  The rows come back as a
-    local relation already in rank order: 0 Spark jobs for int doc ids,
-    one doc_int -> doc_id lookup job for string ones;
-  - Spark, by each qid's ``Σ df`` (the posting rows an exhaustive plan
-    would score): ``>= wand_min_postings`` -> block-max WAND,
-    ``score_block`` run by an ``applyInArrow`` cogroup kernel; below ->
-    the exhaustive
-    ``scoring.bm25_scores`` plan.  ONE per-qid window over the union of
-    both cuts each query's top-k under (score DESC, doc_id ASC).
-- Every route is exact, so routing is invisible in values; the route
-  is named per qid, so a fallback to Spark is never silent.
+The query frame is collected in the driver once, and routing is one
+choice for the whole batch:
+
+- driver: when ``blocks``/``dl_blocks`` are the exact pair
+  ``read_block_index`` returned (``compression.served_layout``), every
+  qid is scored in this process.  A pyarrow read of the query terms'
+  ``(term, n, tbucket)`` block rows gives each term's df (Σ ``n``), its
+  ``tbucket`` hive partition and the bytes the driver holds for it
+  (``layout_term_rows``); ``driver_ranked`` then reads the terms' block
+  rows and the dl blocks they touch, one window of contiguous block
+  ids at a time (``DRIVER_MAX_BYTES`` sets the window count), and
+  ``score_block`` scores each (qid, block).  The rows come back as a
+  local relation already in rank order: 0 Spark jobs for int doc ids,
+  one doc_int -> doc_id lookup job for string ones;
+- exhaustive: any other frames (in memory, or derived from a read
+  frame) send every distinct (qid, term) pair to the
+  ``scoring.bm25_scores`` plan, cut per qid by ``batch.rank_per_qid``
+  under (score DESC, doc_id ASC).  Planning starts no Spark job: terms
+  outside the vocabulary drop out in the plan's ``terms`` join.
+
+Both routes are exact, so routing is invisible in values; the route is
+named per qid.
 
 Block-max WAND replaces the reference's approximate early cutoff
 (idf-sorted terms, stop when >= topk docs collected,
@@ -39,34 +37,30 @@ O5, §4 item 1), in ONE per-(qid, block) body, ``score_block``:
 
 - posting blocks are doc-range aligned across terms (compression.py), so
   one (qid, block) cell holds the query's postings of one doc range plus
-  the range's doc lengths.  On Spark a broadcast (qid, term) fan-out
-  keys the blocks by (qid, block_id) and the dl blocks are inner-joined
-  to each qid's block ids; in the driver the read is keyed the same way.
-  dl work follows the query's posting footprint, never the corpus;
+  the range's doc lengths, and a window of block ids holds every query
+  term's rows of its doc range.  dl work follows the query's posting
+  footprint, never the corpus;
 - per-range upper bound: ``ub(range) = Σ_t idf_t · max_tf·(k1+1) /
   (max_tf + k1·(1-b))`` — since ``dl ≥ 0`` and the BM25 term score is
   monotone increasing in tf and decreasing in dl, this dominates every
   doc score in the range (safe-pruning proof in SURVEY.md §4.1);
-- a threshold heap (the k-th best score seen so far; per qid in the
-  driver, per (python worker, qid) on Spark) skips whole ranges whose ub
-  cannot reach it — SAFE: the final k-th best is ≥ any partial heap's
-  k-th best, so skipped ranges can never hold a final top-k doc.
-  Negative-idf terms (df > N/2, common in tiny corpora) bound at 0;
+- a per-qid threshold heap (the k-th best score seen so far, carried
+  across windows) skips whole ranges whose ub cannot reach it — SAFE:
+  the final k-th best is ≥ any partial heap's k-th best, so skipped
+  ranges can never hold a final top-k doc.  Negative-idf terms
+  (df > N/2, common in tiny corpora) bound at 0;
 - each cell emits at most k rows.
 
 The body is vectorized numpy over the blocks' int arrays, read as
 numpy views of the Arrow buffers (``compression.list_column``), with no
-decode step and no per-row Python list.  On Spark it enters
-via ``applyInArrow`` — pyarrow Tables in and out, never per-row and never
-through a pandas block manager (the per-cell pandas construction cost
-halved the batch path in the r7 A/B).
+decode step and no per-row Python list.
 """
 
 from __future__ import annotations
 
 import dataclasses
 import heapq
-import uuid
+import math
 
 import numpy as np
 import pyarrow.compute as pc
@@ -74,7 +68,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..analysis.analyzer import local_frame
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..index.builder import term_bucket_expr
 from ..index.compression import DEFAULT_BLOCK_SPAN, BlockLayout, list_column, served_layout
 from .batch import rank_per_qid
 from .scoring import bm25_scores
@@ -88,41 +81,24 @@ from .scoring import bm25_scores
 #: Python objects and ~35 B of Arrow per row; ~9 B per posting.
 ROW_BYTES, POSTING_BYTES = 500, 9
 
-#: the driver route's budget for one routed call: the estimated bytes
-#: (``ROW_BYTES``, ``POSTING_BYTES``) of the distinct terms of every
-#: driver-served qid; the other qids go to Spark.  Besides it the driver
-#: holds the touched dl blocks and Arrow's scan buffers (10-120 MB
-#: measured), so one call stays near 0.5 GiB.  A memory bound, since no
-#: time crossover was found on 4 vCPUs: the driver beat both Spark routes
-#: on every single query ``tools/wand_crossover.py --zipf`` measured (Σdf
-#: 176 to 772k over 2k-1M docs), on its 635-query batch at 200k docs
-#: (7.6-8.9 s against 14.5 s all on Spark) and on a 50-qid batch of
-#: 14,000 Zipf tail terms (Σdf 583k at 200k docs: 10.5 s against 21.3 s
-#: for Spark WAND).  Σdf alone is no memory bound: that tail batch holds
-#: 539k block rows, the 635-query batch 29,550 rows for 4.3M postings.
+#: the driver route's window bound: a routed call's estimated bytes
+#: (``ROW_BYTES``, ``POSTING_BYTES``, summed over the distinct terms of
+#: all its qids) are split into ceil(bytes / DRIVER_MAX_BYTES) windows of
+#: contiguous block ids, at most one per block, and the driver holds one
+#: window's block rows at a time.  Besides them it holds the window's dl
+#: blocks and Arrow's scan buffers (10-120 MB measured), so a window
+#: stays near 0.5 GiB.  A memory bound, not a time crossover: the driver
+#: beat both Spark routes on every single query
+#: ``tools/wand_crossover.py --zipf`` measured (Σdf 176 to 772k over
+#: 2k-1M docs) and on every measured batch (CHANGES.md).
 DRIVER_MAX_BYTES = 384 * 2**20
-
-# per-worker shared pruning state: {query_key: heap of best scores (size<=k)}
-_THRESH: dict[str, list[float]] = {}
-
-
-def collect_query_term_rows(terms: DataFrame, qset: list[str],
-                            blocks: DataFrame, term_buckets: int | None) -> list:
-    """ONE driver job: (term, df) rows for the query terms, plus each
-    term's ``tb`` partition id when the serving layout carries
-    ``tbucket`` (the write side's ``term_bucket_expr``, evaluated by
-    Spark)."""
-    sel = [F.col("term"), F.col("df")]
-    if term_buckets and "tbucket" in blocks.columns:
-        sel.append(term_bucket_expr(F.col("term"), term_buckets).alias("tb"))
-    return terms.filter(F.col("term").isin(list(qset))).select(*sel).collect()
 
 
 def layout_term_rows(layout: BlockLayout, qset: list[str]) -> tuple[dict, dict, dict]:
-    """The same (df, tbucket) per query term, read from a written layout
-    by pyarrow in the driver, plus the bytes the driver route holds for
-    the term: df is the Σ ``n`` of the term's block rows and tbucket its
-    hive partition.  A ``term`` filter over every partition, so no bucket
+    """(df, bytes, tbucket) per query term, read from a written layout by
+    pyarrow in the driver: df is the Σ ``n`` of the term's block rows,
+    bytes what the driver route holds for the term, and tbucket its hive
+    partition.  A ``term`` filter over every partition, so no bucket
     count is assumed.  No Spark job."""
     t = layout.blocks.to_table(columns=["term", "n", "tbucket"],
                                filter=pc.field("term").isin(qset))
@@ -131,14 +107,6 @@ def layout_term_rows(layout: BlockLayout, qset: list[str]) -> tuple[dict, dict, 
             {t: r * ROW_BYTES + n * POSTING_BYTES
              for t, r, n in zip(g["term"], g["n_count"], g["n_sum"])},
             dict(zip(g["term"], g["tbucket"])))
-
-
-def _empty_cell():
-    import pyarrow as pa
-
-    return pa.table({"qid": pa.array([], pa.int64()),
-                     "doc_int": pa.array([], pa.int64()),
-                     "score": pa.array([], pa.float64())})
 
 
 @dataclasses.dataclass(frozen=True)
@@ -169,8 +137,8 @@ def dl_rows(t) -> list[tuple]:
 
 def score_block(block: int, rows: list[tuple], dl: tuple[np.ndarray, np.ndarray],
                 idfs: dict[str, float], heap: list[float], p: Bm25Params):
-    """One query's top-k docs of one doc range, the body of both the
-    Spark kernel and the driver loop.
+    """One query's top-k docs of one doc range, the body of the driver
+    loop.
 
     ``rows`` are the query terms' ``BLOCK_COLS`` rows of ``block``, ``dl``
     its (docs, dls) doc-length arrays; ``heap`` holds the best
@@ -237,49 +205,27 @@ def score_block(block: int, rows: list[tuple], dl: tuple[np.ndarray, np.ndarray]
     return idx + block * p.span, sc
 
 
-def _wand_kernel(idfs_by_qid: dict[int, dict[str, float]], p: Bm25Params, qkey: str):
-    """The cogroup kernel over one (qid, block) cell: ``score_block`` with
-    a per-(python worker, qid) shared heap.
-
-    Arrow-native (``applyInArrow``): each cell arrives as a pyarrow Table
-    and never round-trips through a pandas block manager — the per-cell
-    dispatch overhead dominated the batch path (thousands of (qid, block)
-    cells per query set) and halved under Arrow in the r7 A/B (11.7 s ->
-    5.9 s, identical output)."""
-    import pyarrow as pa
-
-    def kernel(key, pblocks, dlblock):
-        if pblocks.num_rows == 0 or dlblock.num_rows == 0:
-            return _empty_cell()
-        qid, block = int(key[0].as_py()), int(key[1].as_py())
-        if len(_THRESH) > 4096:  # bound per-worker state across queries
-            _THRESH.clear()
-        got = score_block(
-            block, block_rows(pblocks), dl_rows(dlblock)[0],
-            idfs_by_qid[qid], _THRESH.setdefault(f"{qkey}:{qid}", []), p)
-        if got is None:
-            return _empty_cell()
-        docs, sc = got
-        return pa.table({"qid": pa.array(np.full(docs.size, qid, dtype=np.int64)),
-                         "doc_int": pa.array(docs),
-                         "score": pa.array(sc)})
-
-    return kernel
+def block_windows(layout: BlockLayout, est_bytes: int) -> list[tuple[int, int] | None]:
+    """The driver route's windows for ``est_bytes`` of block rows: an
+    inclusive (first, last) block id range each, ceil(est_bytes /
+    ``DRIVER_MAX_BYTES``) of them with an equal share of the layout's
+    block ids, at most one per block.  One window is ``[None]`` (no
+    ``block_id`` filter) and reads nothing here."""
+    n = math.ceil(est_bytes / DRIVER_MAX_BYTES)
+    if n <= 1:
+        return [None]
+    ids = np.unique(layout.dl_blocks.to_table(columns=["block_id"]).column("block_id").to_numpy())
+    return [(int(w[0]), int(w[-1])) for w in np.array_split(ids, min(n, ids.size))]
 
 
-def driver_ranked(layout: BlockLayout, idfs_by_qid: dict[int, dict[str, float]],
-                  tbucket: dict[str, int], p: Bm25Params) -> dict[int, list[tuple[int, float]]]:
-    """qid -> its top-k [(doc_int, score)] in rank order (score DESC,
-    doc_int ASC), scored in the driver: one pyarrow read of the query
-    terms' block rows (their tbucket partitions, a ``term`` filter), one of
-    the dl blocks they touch, then ``score_block`` per (qid, block)."""
-    terms = sorted({t for idfs in idfs_by_qid.values() for t in idfs})
-    if not terms:
-        return {}
-    tab = layout.blocks.to_table(
-        columns=["block_id", *BLOCK_COLS],
-        filter=(pc.field("tbucket").isin(sorted({tbucket[t] for t in terms}))
-                & pc.field("term").isin(terms)))
+def _score_window(layout: BlockLayout, flt, idfs_by_qid: dict[int, dict[str, float]],
+                  heaps: dict[int, list[float]], best: dict[int, tuple], p: Bm25Params) -> None:
+    """Score one window: a pyarrow read of the query terms' block rows
+    that pass ``flt``, one of the dl blocks they touch, then
+    ``score_block`` per (qid, block), updating each qid's heap and its
+    (doc_int, score) top-k arrays in ``best``.  The window's rows are
+    released on return, before the next window is read."""
+    tab = layout.blocks.to_table(columns=["block_id", *BLOCK_COLS], filter=flt)
     block_ids = tab.column("block_id").to_pylist()
     by_term: dict[str, list[tuple]] = {}  # term -> [(block_id, BLOCK_COLS row)]
     for b, row in zip(block_ids, block_rows(tab)):
@@ -287,23 +233,42 @@ def driver_ranked(layout: BlockLayout, idfs_by_qid: dict[int, dict[str, float]],
     dl = layout.dl_blocks.to_table(columns=["block_id", "docs", "dls"],
                                    filter=pc.field("block_id").isin(sorted(set(block_ids))))
     dl_of = dict(zip(dl.column("block_id").to_pylist(), dl_rows(dl)))
-    out = {}
     for q, idfs in idfs_by_qid.items():
         by_block: dict[int, list[tuple]] = {}
         for term in idfs:
             for b, row in by_term.get(term, ()):
                 by_block.setdefault(b, []).append(row)
-        heap: list[float] = []
-        docs, sc = [np.zeros(0, np.int64)], [np.zeros(0)]
+        docs, sc = [best[q][0]], [best[q][1]]
         for b in sorted(by_block.keys() & dl_of.keys()):
-            got = score_block(b, by_block[b], dl_of[b], idfs, heap, p)
+            got = score_block(b, by_block[b], dl_of[b], idfs, heaps[q], p)
             if got is not None:
                 docs.append(got[0])
                 sc.append(got[1])
         d, s = np.concatenate(docs), np.concatenate(sc)
         top = np.lexsort((d, -s))[:p.k]
-        out[q] = list(zip(d[top].tolist(), s[top].tolist()))
-    return out
+        best[q] = d[top], s[top]
+
+
+def driver_ranked(layout: BlockLayout, idfs_by_qid: dict[int, dict[str, float]],
+                  tbucket: dict[str, int], est_bytes: int,
+                  p: Bm25Params) -> dict[int, list[tuple[int, float]]]:
+    """qid -> its top-k [(doc_int, score)] in rank order (score DESC,
+    doc_int ASC), scored in the driver one ``block_windows`` window at a
+    time (``_score_window``): the window's read keeps the query terms'
+    tbucket partitions, a ``term`` filter and, past one window, a
+    ``block_id`` range.  Each qid's heap and top-k carry across windows."""
+    terms = sorted({t for idfs in idfs_by_qid.values() for t in idfs})
+    if not terms:
+        return {}
+    by_terms = (pc.field("tbucket").isin(sorted({tbucket[t] for t in terms}))
+                & pc.field("term").isin(terms))
+    heaps: dict[int, list[float]] = {q: [] for q in idfs_by_qid}
+    best = {q: (np.zeros(0, np.int64), np.zeros(0)) for q in idfs_by_qid}
+    for rng in block_windows(layout, est_bytes):
+        _score_window(layout, by_terms if rng is None else (
+            by_terms & (pc.field("block_id") >= rng[0]) & (pc.field("block_id") <= rng[1])),
+            idfs_by_qid, heaps, best, p)
+    return {q: list(zip(d.tolist(), s.tolist())) for q, (d, s) in best.items()}
 
 
 def _with_doc_ids(index, ranked: dict[int, list[tuple[int, float]]]) -> tuple[dict, str]:
@@ -319,102 +284,33 @@ def _with_doc_ids(index, ranked: dict[int, list[tuple[int, float]]]) -> tuple[di
             dict(index.docs.dtypes)["doc_id"])
 
 
-def _route(index, blocks, dl_blocks, queries: dict[int, set[str]], k, cfg, block_span,
-           term_buckets, wand_min_postings):
-    """{qid: terms} -> ((qid, doc_id, rank, score) frame of the Spark
-    routes or None, {qid: [(doc_id, score)] in rank order} of the driver
-    route, doc_id type, {qid: route})."""
-    spark = blocks.sparkSession
-    union_terms = sorted({t for ts in queries.values() for t in ts})
+def _route(index, blocks, dl_blocks, queries: dict[int, set[str]], k, cfg, block_span):
+    """{qid: terms} -> (route, (qid, doc_id, rank, score) frame of the
+    exhaustive route or None, {qid: [(doc_id, score)] in rank order} of
+    the driver route, doc_id type)."""
     layout = served_layout(blocks, dl_blocks)
-    held: dict[str, int] = {}  # term -> bytes the driver route holds
-    if not union_terms:
-        dfmap, tbmap = {}, {}
-    elif layout is not None:
-        dfmap, held, tbmap = layout_term_rows(layout, union_terms)
-    else:
-        trows = collect_query_term_rows(index.terms, union_terms, blocks, term_buckets)
-        dfmap = {r.term: float(r.df) for r in trows}
-        tbmap = {r.term: int(r.tb) for r in trows if "tb" in r.asDict()}
-
-    # driver admission, smallest first: a qid is served in the driver
-    # while the terms of every qid served so far fit in DRIVER_MAX_BYTES
-    # (driver_ranked holds all their block rows at once)
-    sigma = {q: sum(dfmap.get(t, 0) for t in ts) for q, ts in queries.items()}
-    routes: dict[int, str] = {}
-    in_driver: set[str] = set()
-    load = 0
-    for q in sorted(queries, key=lambda q: (sum(held.get(t, 0) for t in queries[q]), q)):
-        new = {t for t in queries[q] if t in held} - in_driver
-        add = sum(held[t] for t in new)
-        if layout is not None and load + add <= DRIVER_MAX_BYTES:
-            routes[q] = "driver"
-            in_driver |= new
-            load += add
-        else:
-            routes[q] = "wand" if sigma[q] >= wand_min_postings else "exhaustive"
-
-    def pairs(name: str) -> list[tuple[int, str]]:
-        return [(q, t) for q in sorted(queries) if routes[q] == name
-                for t in sorted(queries[q]) if t in dfmap]
-
-    n, avgdl = index.stats["n_docs"], float(index.stats["avgdl"])
-
-    def idfs_of(qt_pairs) -> dict[int, dict[str, float]]:
-        idfs: dict[int, dict[str, float]] = {}
-        for q, t in qt_pairs:
-            idfs.setdefault(q, {})[t] = float(
-                np.log2((n - dfmap[t] + 0.5) / (dfmap[t] + 0.5)))
-        return idfs
-
-    p = Bm25Params(k, cfg.k1, cfg.b, avgdl, block_span)
-    parts = []
-    wand_pairs = pairs("wand")
-    if wand_pairs:
-        # unique per plan: a stale heap from an earlier plan (possibly
-        # another corpus) must never seed this one's pruning threshold
-        kernel = _wand_kernel(idfs_of(wand_pairs), p, uuid.uuid4().hex)
-        wand_terms = sorted({t for _, t in wand_pairs})
-        qb = blocks
-        if "tbucket" in qb.columns:
-            if tbmap:
-                qb = qb.filter(F.col("tbucket").isin(sorted({tbmap[t] for t in wand_terms})))
-            qb = qb.drop("tbucket")
-        qt = local_frame(spark, wand_pairs, "qid long, term string")
-        qblocks = qb.filter(F.col("term").isin(wand_terms)).join(F.broadcast(qt), "term")
-        # dl fan-out: inner join on each qid's posting block ids (renamed
-        # keys: qdl and qblocks share lineage, and the cogroup would
-        # otherwise see ambiguous attribute ids)
-        qkeys = qblocks.select(F.col("qid").alias("_qid"),
-                               F.col("block_id").alias("_bid")).distinct()
-        qdl = (dl_blocks.join(qkeys, F.col("block_id") == F.col("_bid"))
-               .select(F.col("_qid").alias("qid"), "block_id", "docs", "dls"))
-        w = (qblocks.groupBy("qid", "block_id")
-             .cogroup(qdl.groupBy("qid", "block_id"))
-             .applyInArrow(kernel, "qid long, doc_int long, score double"))
-        if index.stats.get("int_doc_ids"):
-            w = w.select("qid", F.col("doc_int").alias("doc_id"), "score")
-        else:
-            w = (w.join(index.docs.select("doc_int", "doc_id"), "doc_int", "left")
-                 .select("qid", "doc_id", "score"))
-        parts.append(w)
-    ex_pairs = pairs("exhaustive")
-    if ex_pairs:
-        # prefilter the postings scan to the exhaustive terms (a no-op on
+    pairs = [(q, t) for q in sorted(queries) for t in sorted(queries[q])]
+    if layout is None:
+        if not pairs:
+            return ("exhaustive", None, *_with_doc_ids(index, {}))
+        # prefilter the postings scan to the query terms (a no-op on
         # values: the inner join keeps only these terms anyway); the
         # literal isin runs in the scan stage ahead of the broadcast probe
         # and measured 1.7x on a 436-query set (r7 A/B)
-        ex_terms = sorted({t for _, t in ex_pairs})
-        ix_f = dataclasses.replace(
-            index, postings=index.postings.filter(F.col("term").isin(ex_terms)))
-        parts.append(bm25_scores(ix_f, local_frame(spark, ex_pairs, "qid long, term string"),
-                                 cfg=cfg))
-    ranked = None
-    if parts:
-        ranked = rank_per_qid(parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1]), k)
-    driver, id_type = _with_doc_ids(
-        index, driver_ranked(layout, idfs_of(pairs("driver")), tbmap, p))
-    return ranked, driver, id_type, routes
+        ix_f = dataclasses.replace(index, postings=index.postings.filter(
+            F.col("term").isin(sorted({t for _, t in pairs}))))
+        qt = local_frame(blocks.sparkSession, pairs, "qid long, term string")
+        return "exhaustive", rank_per_qid(bm25_scores(ix_f, qt, cfg=cfg), k), {}, None
+    dfmap, held, tbmap = (layout_term_rows(layout, sorted({t for _, t in pairs}))
+                          if pairs else ({}, {}, {}))
+    n, avgdl = index.stats["n_docs"], float(index.stats["avgdl"])
+    idfs: dict[int, dict[str, float]] = {}
+    for q, t in pairs:
+        if t in dfmap:
+            idfs.setdefault(q, {})[t] = float(np.log2((n - dfmap[t] + 0.5) / (dfmap[t] + 0.5)))
+    ranked = driver_ranked(layout, idfs, tbmap, sum(held.values()),
+                           Bm25Params(k, cfg.k1, cfg.b, avgdl, block_span))
+    return ("driver", None, *_with_doc_ids(index, ranked))
 
 
 def route_batch_bm25(
@@ -429,35 +325,27 @@ def route_batch_bm25(
     wand_min_postings: int = 1_000_000,
 ) -> tuple[DataFrame, dict[int, str]]:
     """query_terms(qid, term[, qtf]) -> ((qid, doc_id, rank, score) top-k
-    per query, {qid: route}), route one of "driver", "wand", "exhaustive".
+    per query, {qid: route}), route "driver" for every qid when
+    ``blocks``/``dl_blocks`` are the exact pair ``read_block_index``
+    returned, else "exhaustive" for every qid.
 
     ``blocks``/``dl_blocks`` come from compression.build_* or
-    ``read_block_index``; only the exact pair ``read_block_index``
-    returned is served from its files (the driver route).
-    ``term_buckets`` is the layout's bucket count (``write_block_index``).
-    Over ``keep_bucket=True`` frames the Spark WAND blocks scan carries a
-    ``tbucket`` partition filter, its buckets read from the layout's
-    partitions when served, else computed from ``term_buckets`` (when
-    given); the driver route reads each term's bucket from the layout.
-    ``wand_min_postings``
-    is the Spark route's crossover: WAND beat exhaustive from ~50k-90k
-    postings at 200k-1M Zipf docs and never at 2k-10k docs (CHANGES.md);
-    BENCH.md round 4 (5M docs) measured 1.9-2.2x at 2.5M+ postings.
-    Re-calibrate with ``tools/wand_crossover.py``.  Duplicate (qid, term)
-    rows count once (BM25 counts a term once per query,
-    OkapiBM25_FR.java:330-404)."""
+    ``read_block_index``; the driver route reads each term's bucket from
+    the layout.  ``term_buckets`` and ``wand_min_postings`` are ignored:
+    they stay in the signature until the bench stops passing them
+    (ROADMAP item 3).  Duplicate (qid, term) rows count once (BM25
+    counts a term once per query, OkapiBM25_FR.java:330-404)."""
     queries: dict[int, set[str]] = {}
     for r in query_terms.select("qid", "term").collect():
         queries.setdefault(int(r.qid), set()).add(r.term)
-    ranked, driver, id_type, routes = _route(
-        index, blocks, dl_blocks, queries, k, cfg, block_span, term_buckets, wand_min_postings)
-    if ranked is not None and not driver:
+    route, ranked, driver, id_type = _route(index, blocks, dl_blocks, queries, k, cfg, block_span)
+    routes = dict.fromkeys(queries, route)
+    if ranked is not None:
         return ranked, routes
-    drv = local_frame(query_terms.sparkSession,
-                      [(q, d, r, s) for q in sorted(driver)
-                       for r, (d, s) in enumerate(driver[q], 1)],
-                      f"qid long, doc_id {id_type}, rank int, score double")
-    return (drv if ranked is None else ranked.unionByName(drv)), routes
+    return local_frame(query_terms.sparkSession,
+                       [(q, d, r, s) for q in sorted(driver)
+                        for r, (d, s) in enumerate(driver[q], 1)],
+                       f"qid long, doc_id {id_type}, rank int, score double"), routes
 
 
 def route_bm25(index, blocks: DataFrame, dl_blocks: DataFrame, query_terms: DataFrame,
@@ -465,16 +353,14 @@ def route_bm25(index, blocks: DataFrame, dl_blocks: DataFrame, query_terms: Data
                block_span: int = DEFAULT_BLOCK_SPAN, term_buckets: int | None = None,
                wand_min_postings: int = 1_000_000) -> tuple[DataFrame, str]:
     """One query (term[, qtf]) routed as the batch of one, qid 0 ->
-    ((doc_id, score) top-k in rank order, route).  A driver result, or a
-    query that matches no term, is a local relation already in rank
-    order.  A query with no terms reports "driver" over a served layout,
-    else "exhaustive"."""
+    ((doc_id, score) top-k in rank order, route), route "driver" over a
+    served layout, else "exhaustive", also for a query with no terms.  A
+    driver result, or a query with no terms, is a local relation already
+    in rank order.  ``term_buckets`` and ``wand_min_postings`` are
+    ignored, as in ``route_batch_bm25``."""
     terms = {r.term for r in query_terms.collect()}
-    ranked, driver, id_type, routes = _route(
-        index, blocks, dl_blocks, {0: terms} if terms else {}, k, cfg, block_span,
-        term_buckets, wand_min_postings)
-    route = routes.get(0) or (
-        "driver" if served_layout(blocks, dl_blocks) is not None else "exhaustive")
+    route, ranked, driver, id_type = _route(
+        index, blocks, dl_blocks, {0: terms} if terms else {}, k, cfg, block_span)
     if ranked is not None:
         # the limit plans a k-row top-k merge, not a range-partitioned sort
         return ranked.orderBy("rank").limit(k).select("doc_id", "score"), route

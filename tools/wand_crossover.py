@@ -1,63 +1,89 @@
-"""Measure exact-join BM25 vs block-max WAND top-k latency — the
-evidence for when the pruned path pays off.
+"""Measure the two BM25 routes on a Zipf corpus: the driver route
+(block-max WAND in this process, one window of block ids at a time) and
+the exhaustive Spark plan — the evidence for serving every query on the
+written layout in the driver.
 
-Two modes:
+``python3 tools/wand_crossover.py --zipf [n_docs] [vocab] [parallelism]``
+builds a deterministic Zipf corpus (sources/zipf.py: realistic term
+distribution, selective tails) and its persisted layouts, then forces
+one route at a time through ``route_bm25``: the exact pair
+``read_block_index`` returned goes to the driver, which reads the query
+terms' block rows with pyarrow and scores them here; a projection of it
+(a frame that is not served) goes to the exhaustive plan, which reads
+the postings parquet and joins docs for dl.  Each query reports its Σdf.
+The 635-query batch runs in one window, in >= 4 windows (a quarter of
+its own byte estimate as ``wand.DRIVER_MAX_BYTES``) and on the
+exhaustive route, with the driver's peak memory per window count.  Up to
+10k docs the layout has the interactive bench's geometry (block span
+256, 8 term buckets).
 
-- default: the driver testdata expanded N× (31-term vocabulary — the
-  regime where WAND CANNOT win, kept as the honest negative control).
-- ``--zipf [n_docs] [vocab] [parallelism]``: deterministic Zipf corpus
-  (sources/zipf.py — realistic term distribution, selective tails),
-  ALL THREE routes of ``route_bm25`` served from the persisted layouts,
-  ``wand_min_postings`` and ``wand.DRIVER_MAX_BYTES`` forcing one
-  route at a time: the driver reads the query terms' block rows with
-  pyarrow and scores them in this process; Spark WAND reads the
-  block layout with its term-bucket partition filter (dl
-  blocks aligned, no docs join); Spark exhaustive reads the postings
-  parquet and joins docs for dl.  Each query reports its Σdf, so the
-  timings place the driver/Spark and the WAND/exhaustive crossovers.
-  Up to 10k docs the layout has the interactive bench's geometry
-  (block span 256, 8 term buckets).
-
-Both modes run on ``get_spark``'s host-sized session (``local[CPUs
-this process may use]``); a ``parallelism`` argument overrides the CPU
-count.  Prints one JSON line.
+Runs on ``get_spark``'s host-sized session (``local[CPUs this process
+may use]``); a ``parallelism`` argument overrides the CPU count.  Prints
+one JSON line.
 """
 
 from __future__ import annotations
 
 import contextlib
 import json
+import math
 import shutil
 import sys
 import tempfile
 import time
+import tracemalloc
+
+import pyarrow as pa
 
 sys.path.insert(0, ".")
 
-from information_retrieval_system_spark.analysis.analyzer import analyze_query_terms, local_frame
+from information_retrieval_system_spark.analysis.analyzer import local_frame
 from information_retrieval_system_spark.config import EngineConfig
 from information_retrieval_system_spark.index.builder import build_index
 from information_retrieval_system_spark.index.compression import (
     build_block_postings,
     build_dl_blocks,
+    served_layout,
 )
-from information_retrieval_system_spark.query import scoring
 from information_retrieval_system_spark.query import wand
 from information_retrieval_system_spark.query.wand import (
     layout_term_rows, route_batch_bm25, route_bm25)
 from information_retrieval_system_spark.session import get_spark
-from information_retrieval_system_spark.sources.corpus import expand_documents
 
 
 @contextlib.contextmanager
 def driver_limit(max_bytes: int):
-    """Route with ``wand.DRIVER_MAX_BYTES`` set to ``max_bytes``: -1
-    sends every query to Spark, a huge value every one to the driver."""
+    """Route with ``wand.DRIVER_MAX_BYTES`` set to ``max_bytes``, the
+    driver route's window bound."""
     saved, wand.DRIVER_MAX_BYTES = wand.DRIVER_MAX_BYTES, max_bytes
     try:
         yield
     finally:
         wand.DRIVER_MAX_BYTES = saved
+
+
+def driver_peak(run) -> int:
+    """run()'s driver memory peak in bytes: the tracemalloc peak plus the
+    most Arrow held when a window's block and dl tables were both read
+    (``pyarrow.total_allocated_bytes()``, sampled in ``wand.dl_rows``;
+    the numpy views share Arrow's buffers, which tracemalloc does not
+    see)."""
+    arrow = [pa.total_allocated_bytes()]
+    dl_rows = wand.dl_rows
+
+    def sampled(t):
+        arrow.append(pa.total_allocated_bytes())
+        return dl_rows(t)
+
+    wand.dl_rows = sampled
+    tracemalloc.start()
+    try:
+        run()
+        return tracemalloc.get_traced_memory()[1] + max(arrow)
+    finally:
+        tracemalloc.stop()
+        wand.dl_rows = dl_rows
+
 
 def zipf_query_ranks(vocab: int) -> list[tuple[int, int, int]]:
     """Query shapes as vocabulary ranks, scaled to the vocabulary size:
@@ -94,61 +120,71 @@ def batch_zipf_queries(vocab: int, n: int = 635) -> dict[int, list[str]]:
 
 
 def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
-                     block_span: int, term_buckets: int, k: int = 20,
-                     n_queries: int = 635, sample_n: int = 24,
-                     wand_min_postings: int = 100_000) -> dict:
+                     block_span: int, k: int = 20,
+                     n_queries: int = 635, sample_n: int = 24) -> dict:
     """The reference's 635-query Run_B6 loop (Search_FR.java:1265-1319
     runs them one at a time) vs ONE routed batch over the same persisted
     layouts:
 
-    - ``batch_sec``: route_batch_bm25 over all ``n_queries`` — one
-      driver collect routes every qid, <=2 scoring plans total;
-      ``batch_spark_sec`` the same batch with every qid on Spark;
+    - ``batch_sec``: route_batch_bm25 over all ``n_queries`` in the
+      driver, in ``windows`` windows at the default
+      ``wand.DRIVER_MAX_BYTES``; ``batch_windowed_sec`` the same batch
+      at a quarter of its own byte estimate (``windowed_windows`` >= 4
+      windows); ``batch_exhaustive_sec`` the same batch on the
+      exhaustive Spark plan;
+    - ``driver_peak_bytes`` / ``windowed_driver_peak_bytes``: the
+      driver's memory peak (``driver_peak``) of an untimed run at each
+      of the two window bounds;
     - ``loop_sample``: the first ``sample_n`` queries through the
-      per-query route_bm25 loop (each = its own routing job + scoring
-      plan), plus the SAME sample batched — a fully measured
-      apples-to-apples speedup; the 635-scale speedup is then
-      per-query-extrapolated (labelled _est — a full 635-query loop
-      is minutes of driver-loop overhead, which is the point).
+      per-query route_bm25 loop, plus the SAME sample batched — a fully
+      measured apples-to-apples speedup; the 635-scale speedup is then
+      per-query-extrapolated (labelled _est).
     """
     from pyspark.sql import functions as F
 
     cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
     queries = batch_zipf_queries(vocab, n_queries)
+    unserved = (b_all.select("*"), dlb_served)
+    layout = served_layout(b_all, dlb_served)
+    est = sum(layout_term_rows(layout, sorted({t for ts in queries.values() for t in ts}))[1]
+              .values())
+    quarter = math.ceil(est / 4)
 
     def batch_df(qids):
         rows = [(q, t, 1.0) for q in qids for t in queries[q]]
         return local_frame(spark, rows, "qid long, term string, qtf double")
 
-    # warm both paths (JIT, codegen, python worker pool)
-    route_batch_bm25(six, b_all, dlb_served, batch_df(range(4)), k=k,
-                     cfg=cfg, block_span=block_span,
-                     term_buckets=term_buckets,
-                     wand_min_postings=wand_min_postings)[0].collect()
+    def batch(frames=(b_all, dlb_served), qids=range(n_queries)):
+        res, routes = route_batch_bm25(six, *frames, batch_df(qids), k=k, cfg=cfg,
+                                       block_span=block_span)
+        return {(r.qid, r.rank): (r.doc_id, round(r.score, 6)) for r in res.collect()}, routes
+
+    def timed(run) -> tuple:
+        t0 = time.perf_counter()
+        out = run()
+        return time.perf_counter() - t0, out
+
+    # warm both routes (JIT, codegen)
+    batch(qids=range(4))
+    batch(unserved, range(4))
 
     t0 = time.perf_counter()
-    res, routes = route_batch_bm25(
-        six, b_all, dlb_served, batch_df(range(n_queries)), k=k, cfg=cfg,
-        block_span=block_span, term_buckets=term_buckets,
-        wand_min_postings=wand_min_postings)
+    res, routes = route_batch_bm25(six, b_all, dlb_served, batch_df(range(n_queries)), k=k,
+                                   cfg=cfg, block_span=block_span)
     # materialize the run output ONCE (inside the timed batch window):
     # both consumers (the correctness collect below and the composed
     # eval) read the k*n_queries result rows instead of re-running the
-    # whole routed retrieval — previously eval_sec silently paid a
-    # second full 635-query retrieval because `res` was a lazy plan
+    # whole routed retrieval
     res = res.localCheckpoint(eager=True)
     full = {(r.qid, r.rank): (r.doc_id, round(r.score, 6)) for r in res.collect()}
     batch_sec = time.perf_counter() - t0
 
-    # the same batch with every qid forced onto the Spark routes
-    t0 = time.perf_counter()
-    with driver_limit(-1):
-        sres, _ = route_batch_bm25(
-            six, b_all, dlb_served, batch_df(range(n_queries)), k=k, cfg=cfg,
-            block_span=block_span, term_buckets=term_buckets,
-            wand_min_postings=wand_min_postings)
-        spark_full = {(r.qid, r.rank): (r.doc_id, round(r.score, 6)) for r in sres.collect()}
-    batch_spark_sec = time.perf_counter() - t0
+    with driver_limit(quarter):
+        windowed_sec, (windowed, _) = timed(batch)
+        windowed_peak = driver_peak(batch)
+        n_windowed = len(wand.block_windows(layout, est))
+    peak = driver_peak(batch)
+    exhaustive_sec, (exhaustive, _) = timed(lambda: batch(unserved))
 
     sample = list(range(sample_n))
     t0 = time.perf_counter()
@@ -156,20 +192,11 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
     for q in sample:
         qt = batch_df([q])
         one, _ = route_bm25(six, b_all, dlb_served, qt.select("term", "qtf"),
-                            k=k, cfg=cfg, block_span=block_span,
-                            term_buckets=term_buckets,
-                            wand_min_postings=wand_min_postings)
+                            k=k, cfg=cfg, block_span=block_span)
         for rank, r in enumerate(one.collect(), start=1):
             loop_out[(q, rank)] = (r.doc_id, round(r.score, 6))
     loop_sample_sec = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    bs, _ = route_batch_bm25(six, b_all, dlb_served, batch_df(sample), k=k,
-                             cfg=cfg, block_span=block_span,
-                             term_buckets=term_buckets,
-                             wand_min_postings=wand_min_postings)
-    bs_rows = {(r.qid, r.rank): (r.doc_id, round(r.score, 6)) for r in bs.collect()}
-    batch_sample_sec = time.perf_counter() - t0
+    batch_sample_sec, (bs_rows, _) = timed(lambda: batch(qids=sample))
 
     # retrieval -> eval composed (r5 verdict #5): the SAME routed batch
     # feeding qrels-joined AP/nDCG + suite aggregates in one plan — the
@@ -191,14 +218,23 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
     per_q = loop_sample_sec / sample_n
     return {
         "n_queries": n_queries,
+        "est_bytes": est,
+        "window_bound_bytes": wand.DRIVER_MAX_BYTES,
+        "windows": len(wand.block_windows(layout, est)),
         "batch_sec": round(batch_sec, 3),
-        "batch_spark_sec": round(batch_spark_sec, 3),
-        "batch_spark_identical": spark_full == full,
+        "driver_peak_bytes": peak,
+        "windowed_bound_bytes": quarter,
+        "windowed_windows": n_windowed,
+        "batch_windowed_sec": round(windowed_sec, 3),
+        "batch_windowed_identical": windowed == full,
+        "windowed_driver_peak_bytes": windowed_peak,
+        "batch_exhaustive_sec": round(exhaustive_sec, 3),
+        "batch_exhaustive_identical": exhaustive == full,
         "eval_sec": round(eval_sec, 3),
         "eval_mean_ap": round(float(summary["mean_ap"]), 4),
         "eval_mean_ndcg": round(float(summary["mean_ndcg"]), 4),
         "routes": {name: sum(1 for v in routes.values() if v == name)
-                   for name in ("driver", "wand", "exhaustive")},
+                   for name in ("driver", "exhaustive")},
         "loop_sample_n": sample_n,
         "loop_sample_sec": round(loop_sample_sec, 3),
         "loop_per_query_sec": round(per_q, 4),
@@ -216,15 +252,15 @@ def run_batch_routed(spark, six, b_all, dlb_served, vocab: int,
 def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
                        term_buckets: int = 64, reps: int = 3, k: int = 20,
                        work_dir: str | None = None, batch_n: int = 635) -> dict:
-    """Build the Zipf corpus + both persisted layouts, then time
-    exhaustive-served vs WAND-served per query (min over reps).
+    """Build the Zipf corpus + both persisted layouts, then time the
+    driver and the exhaustive route per query (min over reps).
     Returns the result dict."""
     import os
 
     from information_retrieval_system_spark.index.builder import (
         read_index, read_table, write_index)
     from information_retrieval_system_spark.index.compression import (
-        read_block_index, served_layout, write_block_index)
+        read_block_index, write_block_index)
     from information_retrieval_system_spark.sources.zipf import rank_token, zipf_corpus
 
     cfg = EngineConfig(use_stopwords=False, use_stemmer=False)
@@ -281,51 +317,45 @@ def run_zipf_crossover(spark, n_docs: int, vocab: int, block_span: int = 4096,
     six.terms.cache().count()
     six.docs.cache().count()
 
-    # list the layout ONCE; the route prunes per query (tbucket partition
-    # filter, dl side joined to the query's block ids)
+    # list the layout ONCE; a projection of it is not served, so it
+    # takes the exhaustive route
     b_all, dlb_served = read_block_index(spark, bl_dir, keep_bucket=True)
-
     layout = served_layout(b_all, dlb_served)
+    forced = {"driver": (b_all, dlb_served), "exhaustive": (b_all.select("*"), dlb_served)}
 
-    def routed(qt, wand_min_postings, driver_max):
-        with driver_limit(driver_max):
-            res, route = route_bm25(six, b_all, dlb_served, qt, k=k, cfg=cfg,
-                                    block_span=block_span, term_buckets=term_buckets,
-                                    wand_min_postings=wand_min_postings)
-            return route, [(r.doc_id, round(r.score, 6)) for r in res.collect()]
+    def routed(qt, frames):
+        res, route = route_bm25(six, *frames, qt, k=k, cfg=cfg, block_span=block_span)
+        return route, [(r.doc_id, round(r.score, 6)) for r in res.collect()]
 
-    # the three routes of one query: (wand_min_postings, DRIVER_MAX_BYTES)
-    forced = {"driver": (0, 10**18), "wand": (0, -1), "exhaustive": (10**18, -1)}
     out["queries"] = {}
     for ranks in zipf_query_ranks(vocab):
         terms = [rank_token(r) for r in ranks]
         qt = local_frame(spark, [(t, 1.0) for t in terms], "term string, qtf double")
-        for args in forced.values():  # warm every route (JIT, python pool)
-            routed(qt, *args)
+        for frames in forced.values():  # warm every route (JIT, codegen)
+            routed(qt, frames)
         best = {name: float("inf") for name in forced}
         rows = {}
         for _ in range(reps):
-            for name, args in forced.items():
+            for name, frames in forced.items():
                 t0 = time.perf_counter()
-                route, rows[name] = routed(qt, *args)
+                route, rows[name] = routed(qt, frames)
                 best[name] = min(best[name], time.perf_counter() - t0)
                 assert route == name, (route, name)
         rec = {"sigma_df": int(sum(layout_term_rows(layout, terms)[0].values()))}
         rec.update({f"{name}_sec": round(t, 4) for name, t in best.items()})
-        rec["wand_speedup"] = round(best["exhaustive"] / best["wand"], 2)
-        rec["identical_topk"] = rows["driver"] == rows["wand"] == rows["exhaustive"]
+        rec["driver_speedup"] = round(best["exhaustive"] / best["driver"], 2)
+        rec["identical_topk"] = rows["driver"] == rows["exhaustive"]
         out["queries"]["+".join(map(str, ranks))] = rec
     if batch_n:
         out["batch_routed"] = run_batch_routed(
-            spark, six, b_all, dlb_served, vocab,
-            block_span=block_span, term_buckets=term_buckets, k=k,
+            spark, six, b_all, dlb_served, vocab, block_span=block_span, k=k,
             n_queries=batch_n)
     six.terms.unpersist(); six.docs.unpersist()
     return out
 
 
-def main_zipf() -> None:
-    args = [a for a in sys.argv[2:] if not a.startswith("-")]
+def main() -> None:
+    args = [a for a in sys.argv[1:] if not a.startswith("-")]
     n_docs = int(args[0]) if len(args) > 0 else 2_000_000
     vocab = int(args[1]) if len(args) > 1 else 200_000
     par = int(args[2]) if len(args) > 2 else None
@@ -337,49 +367,5 @@ def main_zipf() -> None:
     print(json.dumps(out))
 
 
-def main() -> None:
-    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 160
-    par = int(sys.argv[2]) if len(sys.argv) > 2 else None
-    spark = get_spark("wand-crossover", parallelism=par)
-    par = spark.sparkContext.defaultParallelism
-    cfg = EngineConfig()
-    docs = expand_documents(
-        spark.read.parquet("/root/testdata/sf0.1/documents.parquet"), factor
-    ).cache()
-    n = docs.count()
-    ix = build_index(docs, cfg, doc_col="doc_id", text_col="text")
-    ix.postings.count(); ix.docs.count(); ix.terms.count()
-    blocks = build_block_postings(ix.postings).cache()
-    dlb = build_dl_blocks(ix.docs).cache()
-    blocks.count(); dlb.count()
-
-    queries = ["spark join merge", "vector stream window", "batch group hash"]
-    out = {"n_docs": n, "parallelism": par, "queries": {}}
-    for q in queries:
-        qt = analyze_query_terms(spark, q, cfg)
-
-        def wand():
-            return route_bm25(ix, blocks, dlb, qt, k=20, cfg=cfg,
-                              wand_min_postings=0)[0].collect()
-
-        # warm both paths once, then measure
-        scoring.bm25_search(ix, qt, k=20, cfg=cfg).collect()
-        wand()
-        t0 = time.perf_counter()
-        exact = scoring.bm25_search(ix, qt, k=20, cfg=cfg).collect()
-        t_exact = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        got = wand()
-        t_wand = time.perf_counter() - t0
-        same = [r.doc_id for r in got] == [r.doc_id for r in exact]
-        out["queries"][q] = {"exact_sec": round(t_exact, 3),
-                             "wand_sec": round(t_wand, 3),
-                             "identical_topk": same}
-    print(json.dumps(out))
-
-
 if __name__ == "__main__":
-    if "--zipf" in sys.argv:
-        main_zipf()
-    else:
-        main()
+    main()
